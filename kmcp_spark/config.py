@@ -186,6 +186,46 @@ class PipelineConfig:
         return hashlib.sha256(blob).hexdigest()[:16]
 
 
+_MIB = 1024 * 1024
+_HEAP_CAP_MIB = 16 * 1024        # the heap the stages were tuned with
+_HEAP_FLOOR_MIB = 1024
+# one Python worker per core runs the Arrow mapInPandas stages; a worker
+# holds a 256-row Arrow batch plus its numpy intermediates
+_WORKER_RESERVE_MIB = 512
+
+
+def _mem_available_bytes() -> int:
+    """`MemAvailable` from /proc/meminfo, else physical memory."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def _default_driver_mem(mem_available_bytes: int, cores: int = 1) -> str:
+    """Driver heap that fits the host, as a Spark memory string.
+
+    Half of what is left of `mem_available_bytes` after a reserve for
+    each of the `cores` Python workers; the other half covers the JVM's
+    off-heap (metaspace, Arrow and shuffle buffers), the driver's own
+    Python and the page cache.  Clamped to [1g, 16g].
+    """
+    budget = mem_available_bytes // _MIB - cores * _WORKER_RESERVE_MIB
+    heap = min(_HEAP_CAP_MIB, max(_HEAP_FLOOR_MIB, budget // 2))
+    return f"{heap}m"
+
+
+def _driver_mem(cores: int) -> str:
+    """`SPARK_DRIVER_MEM` if set and non-empty, else the host-sized default."""
+    return os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(
+        _mem_available_bytes(), cores
+    )
+
+
 def get_spark(
     app: str = "kmcp_spark",
     cores: int | None = None,
@@ -203,11 +243,13 @@ def get_spark(
     # faults dominate at high parallelism: (a) make glibc in the python
     # workers reuse arena memory instead of mmap/munmap-ing every large
     # numpy array (workers inherit this env through the JVM → daemon),
-    # (b) size the JVM heap moderately and pin Xms=Xmx so G1 never
-    # uncommits and refaults pages (observed: repeat scans 12.3 s → 2.4 s)
+    # (b) pin Xms=Xmx so G1 never uncommits and refaults pages
+    # (observed: repeat scans 12.3 s → 2.4 s).  Pinning commits the whole
+    # heap at launch, so the default is sized from the host's MemAvailable
+    # (_default_driver_mem); SPARK_DRIVER_MEM overrides it unchanged
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(512 * 1024 * 1024))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))
-    mem = os.environ.get("SPARK_DRIVER_MEM", "16g")
+    mem = _driver_mem(cores)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
