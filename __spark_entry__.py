@@ -293,8 +293,8 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
     table (the xxhash64 banding is not SQL-expressible; everything after
     it is) and BOTH cap behaviors run from that same relation:
 
-      path='drop'      document-path ``pairs_from_band_rows`` — oversized
-                       buckets are dropped outright;
+      path='drop'      the shared ``lsh.bucket_pairs`` kernel — oversized
+                       buckets are dropped outright (the document path);
       path='escalate'  pipeline-path ``candidate_pairs`` — oversized
                        buckets emit O(size) min/max anchor edges instead
                        (kmcp's escalation, kmcp/cmd/index.go:787-894).
@@ -305,7 +305,7 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from kmcp_spark.corpus import skew_doc_rows
-    from kmcp_spark.operators.lsh import candidate_pairs
+    from kmcp_spark.operators.lsh import bucket_pairs, candidate_pairs
 
     planted = spark.createDataFrame(
         skew_doc_rows(unique_tails=False), schema="doc_id bigint, text string"
@@ -320,7 +320,7 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
         ["doc_id", "band_id"],
     )
     rel = spark.read.parquet(path)
-    drop = D.pairs_from_band_rows(rel, _SKEW_BUCKET_CAP).withColumn(
+    drop = bucket_pairs(rel, _SKEW_BUCKET_CAP, "doc_id").withColumn(
         "path", F.lit("drop")
     )
     esc, oversized = candidate_pairs(

@@ -3,8 +3,8 @@
 Default mode:
   1. times every headline query from __spark_entry__ at
      $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-     local[$SPARK_GRAFT_CPUS] (default 32), forcing full execution with
-     the noop sink;
+     local[$SPARK_GRAFT_CPUS] (default: the CPUs the process may use),
+     forcing full execution with the noop sink;
   2. benchmarks the clip dedup pipeline on a deterministic synthetic
      corpus at two parallelism levels — local[N] and local[4N], default
      N=1 (the sandbox stand-in for N vs 4N executors; pair choice and
@@ -178,12 +178,7 @@ def pipeline_run(cores: int, corpus_path: str, out_dir: str) -> None:
     # cost once against hours of execution; timing the second pass
     # reports the throughput that actually scales.
     _warm_page_cache(corpus_path)
-    # fused mid-stages for bench legs: single-shot fresh-dir runs get
-    # nothing from per-stage resume, and the two small-stage checkpoint
-    # writes are ~3 s/leg of corpus-size-invariant job latency (r6
-    # fixed-cost attribution).  Output parity with the default unfused
-    # pipeline is pinned by tests/test_pipeline.py.
-    cfg = PipelineConfig(fuse_small_stages=True)
+    cfg = PipelineConfig()
     # TWO warmup passes, time the third (SPARK_GRAFT_WARMUP_PASSES):
     # an interleaved in-session A/B (r6, BENCH/BASELINE.md) showed one
     # full-size pass still leaves ~4-6 s of JIT/codegen residue in the
@@ -665,7 +660,7 @@ def _bench_scaling_locked(cores_hi, n_clips, rounds, max_extra,
             need = True
     if need:
         log(f"generating bench corpus n={n_clips} ...")
-        spark = get_spark(app="bench_gen", cores=32)
+        spark = get_spark(app="bench_gen")
         clips, _ = generate_clips(spark, n_clips, min_dur_s=1.0, max_dur_s=5.0)
         shutil.rmtree(corpus_path, ignore_errors=True)
         clips.write.parquet(corpus_path)
@@ -743,7 +738,9 @@ def main() -> None:
     signal.signal(signal.SIGTERM, _on_kill)
     signal.signal(signal.SIGINT, _on_kill)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from kmcp_spark.config import _default_cores
+
+    cores = _default_cores()
     # default 16k clips keeps the unattended per-round bench inside the
     # r1-proven ~15-20 min budget; the 32k fixed-overhead-amortized
     # campaign (SPARK_GRAFT_BENCH_CLIPS=32000, 5 rounds) is recorded in

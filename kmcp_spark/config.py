@@ -66,13 +66,13 @@ class LSHConfig:
 
     ``max_bucket`` mirrors kmcp's size-escalation thresholds
     (`kmcp/cmd/index.go:787-894`, flags at `:1453-1463`): buckets larger
-    than this are salted/split instead of pair-expanded in one task.
+    than this are escalated to min/max anchor edges instead of
+    pair-expanded in one task (``operators/lsh.py``).
     """
 
     bands: int = 32
     rows_per_band: int = 4    # bands * rows_per_band <= num_perm
-    max_bucket: int = 2000    # cap on bucket size before salted splitting
-    shuffle_partitions: int | None = None
+    max_bucket: int = 2000    # cap on bucket size before anchor escalation
     # extra bands PER DOMAIN over the domain-scoped signatures (text and
     # audio; requires SketchConfig.domain_perm >= domain_bands *
     # rows_per_band).  0 = combined-only banding (the default pipeline);
@@ -155,9 +155,7 @@ class PipelineConfig:
     sketch: SketchConfig = field(default_factory=SketchConfig)
     lsh: LSHConfig = field(default_factory=LSHConfig)
     verify: VerifyConfig = field(default_factory=VerifyConfig)
-    checkpoint_dir: str = "_checkpoints"
     cc_max_iters: int = 50
-    cc_checkpoint_every: int = 5
     # weak-edge pruning before clustering (MegaPath-rule analog,
     # `kmcp/cmd/profile.go:1357-1388`): edges scoring below alpha x the
     # best incident score of both endpoints are dropped; 0 disables
@@ -166,20 +164,6 @@ class PipelineConfig:
     # profiler's stage-4 multi-mapped read reassignment analog,
     # `kmcp/cmd/profile.go:2075-2117`); 0 disables
     em_reassign_iters: int = 1
-    # Fuse the small mid-stages (candidates -> verified) into one
-    # in-memory persisted chain instead of two parquet checkpoints.
-    # Measured (r6, BENCH/BASELINE.md): in FRESH-JVM single-shot runs
-    # fusion saves ~3-7 s (fewer distinct job shapes to JIT/codegen);
-    # in a warmed session it is a wash (the saved write jobs are repaid
-    # by the clusters stage reading the cached deep-lineage relation
-    # instead of a compact parquet leaf).  At production scale the win
-    # is write amplification: the candidate-pairs relation is the
-    # largest intermediate, and fusion never spills it to storage.
-    # Trade-off: resume granularity coarsens to sketches -> clusters
-    # (a crash mid-chain redoes candidates+verified), so the default
-    # stays False; the scaling bench opts in (fresh single-shot legs,
-    # per-stage resume buys nothing there).
-    fuse_small_stages: bool = False
 
     def fingerprint(self) -> str:
         blob = json.dumps(asdict(self), sort_keys=True).encode()
@@ -226,6 +210,18 @@ def _driver_mem(cores: int) -> str:
     )
 
 
+def _default_cores() -> int:
+    """`SPARK_GRAFT_CPUS` if set and non-empty, else the CPUs this
+    process may run on (its affinity mask, not the host's CPU count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app: str = "kmcp_spark",
     cores: int | None = None,
@@ -237,7 +233,7 @@ def get_spark(
     On a real cluster these settings come from spark-submit; nothing in
     the pipeline assumes local mode.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or _default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # this VM zeroes fresh pages at only ~300 MB/s, so first-touch page
     # faults dominate at high parallelism: (a) make glibc in the python

@@ -502,7 +502,7 @@ def generate_images(spark, n: int, master_seed: int = 42, partitions: int | None
 # ---------------------------------------------------------------- skew docs
 # Deterministic DEGENERATE document slice for cap-semantics checks: the
 # hot-gram cap (operators/dedup.py `_gram_tables` max_gram_docs) and the
-# LSH bucket cap / escalation (`pairs_from_band_rows` drop,
+# LSH bucket cap / escalation (`operators/lsh.py::bucket_pairs` drop,
 # `operators/lsh.py::candidate_pairs` anchor escalation — kmcp's
 # oversized-block escalation, `kmcp/cmd/index.go:787-894`) never fire on
 # the healthy sf fixtures, so these rows plant corpora where they MUST:

@@ -29,6 +29,7 @@ from kmcp_spark.config import PipelineConfig
 from kmcp_spark.functions.audio import decode_pcm, resample_pcm, spectral_tokens
 from kmcp_spark.functions.hashing import hash_bytes_rolling, splitmix64
 from kmcp_spark.functions.minhash import minhash_signatures
+from kmcp_spark.operators.lsh import band_rows, bucket_pairs
 
 _U64 = np.uint64
 _AUDIO_SALT = 0xA5D10  # same domain salt as the whole-clip sketch stage
@@ -148,39 +149,24 @@ def chunk_candidate_pairs(
     chunk_sketches: DataFrame, bands: int, rows_per_band: int, max_bucket: int = 2000
 ) -> DataFrame:
     """LSH over chunk entities -> chunk-level candidate pairs
-    (a, a_chunk, b, b_chunk, shared_bands), different clips only."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    F.lit(b), F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band)
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    (a, a_chunk, b, b_chunk, shared_bands), different clips only.
+
+    A chunk entity is the id ``struct(clip_id, chunk_idx)``, banded by
+    ``lsh.band_rows`` and expanded by ``lsh.bucket_pairs`` (buckets above
+    ``max_bucket`` dropped).  Struct ids order by clip_id first, so
+    ``a < b`` by clip once same-clip pairs are filtered out."""
+    chunks = chunk_sketches.select(
+        F.struct("clip_id", "chunk_idx").alias("chunk"), "minhash"
     )
-    buckets = chunk_sketches.select(
-        "clip_id", "chunk_idx", F.explode(band_structs).alias("band")
-    ).select("clip_id", "chunk_idx", "band.band_id", "band.band_hash")
-    sizes = buckets.groupBy("band_id", "band_hash").agg(F.count("*").alias("sz"))
-    ok = buckets.join(
-        sizes.filter((F.col("sz") > 1) & (F.col("sz") <= max_bucket)).select(
-            "band_id", "band_hash"
-        ),
-        ["band_id", "band_hash"],
+    pairs = bucket_pairs(
+        band_rows(chunks, bands, rows_per_band, "chunk"), max_bucket, "chunk"
     )
-    return (
-        ok.alias("l")
-        .join(ok.alias("r"), ["band_id", "band_hash"])
-        .filter(F.col("l.clip_id") < F.col("r.clip_id"))
-        .groupBy(
-            F.col("l.clip_id").alias("a"),
-            F.col("l.chunk_idx").alias("a_chunk"),
-            F.col("r.clip_id").alias("b"),
-            F.col("r.chunk_idx").alias("b_chunk"),
-        )
-        .agg(F.count("*").alias("shared_bands"))
+    return pairs.filter(F.col("a.clip_id") != F.col("b.clip_id")).select(
+        F.col("a.clip_id").alias("a"),
+        F.col("a.chunk_idx").alias("a_chunk"),
+        F.col("b.clip_id").alias("b"),
+        F.col("b.chunk_idx").alias("b_chunk"),
+        "shared_bands",
     )
 
 

@@ -34,7 +34,6 @@ def connected_components(
     pairs: DataFrame,
     all_nodes: DataFrame | None = None,
     max_iters: int = 50,
-    checkpoint_every: int = 5,
     driver_max_edges: int = 100_000,
 ) -> DataFrame:
     """pairs(a,b) -> labels(clip_id, cluster_id) via hash-min propagation.
@@ -149,8 +148,7 @@ def connected_components(
         )
         # materialize each round: the convergence count would otherwise
         # recompute the whole lineage, and lineage must stay O(1) deep
-        # (checkpoint_every kept for API compat; every-round is strictly
-        # safer and labels are one small row per node)
+        # (labels are one small row per node)
         ids_before = persistent_ids(sc)
         new_labels = new_labels.localCheckpoint(eager=True)
         this_round_ids = persistent_ids(sc) - ids_before

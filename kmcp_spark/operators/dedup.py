@@ -10,11 +10,12 @@ reproduce them exactly:
     gram → pair-count agg → Jaccard from per-doc gram counts.  This is
     the exact-verification shape (kmcp's qCov/Jaccard scoring,
     `kmcp/cmd/util-db-search.go:90-92`) without the sketch.
-  - MinHash-LSH pairs: pandas-UDF signatures → band join (candidate
-    generation) → exact re-verification of candidates — the full
-    sketch → index-probe → verify path of the clip pipeline, over text.
-  - SimHash pairs: 64-bit fingerprints, Hamming filter over LSH
-    candidates.
+  - MinHash-LSH pairs: pandas-UDF signatures → bands expanded into
+    candidate pairs by ``lsh.bucket_pairs`` → exact re-verification of
+    candidates — the full sketch → index-probe → verify path of the
+    clip pipeline, over text.
+  - SimHash pairs: 64-bit fingerprints, Hamming filter over candidates
+    from the same kernel.
 
 Scale notes: every join here keys on either a gram hash or a band
 hash; both distribute.  The n-gram self-join caps hot grams (stopword
@@ -37,6 +38,7 @@ from kmcp_spark.functions.shingle import (
     word_symbols,
 )
 from kmcp_spark.functions.simhash import simhash64
+from kmcp_spark.operators.lsh import band_rows, bucket_pairs
 from kmcp_spark.runtime import widen_narrow_scan
 
 
@@ -288,27 +290,15 @@ def lsh_candidates(
 ) -> DataFrame:
     """Band-join candidate pairs (a, b, shared_bands) from signatures.
 
-    TWO shuffles total: one hash-agg that collects each bucket's member
-    ids (map-side partial, bucket cap applied on the collected array —
-    an earlier version used freq-count + join + self-join, 4 shuffles
-    for the same result), then the pair-count agg.  Pair expansion is a
-    JVM ``transform``/``slice`` comprehension over the member array —
-    O(sz^2) per bucket, bounded by ``max_bucket`` exactly like the
-    count-based cap was.  Buckets above the cap are dropped here (the
-    clip pipeline's ``lsh.candidate_pairs`` escalates instead; for the
-    document queries the other 63 bands make the miss probability
-    negligible, see ``minhash_lsh_dup_pairs``).
-
-    Scale bound, stated honestly: the member array of a bucket is
-    materialized by the agg BEFORE the cap filter (Spark's sort-based
-    agg fallback spills it, so no OOM, but a degenerate 10^8-member
-    bucket would still build one 10^8-element array row).  Byte-identical
-    duplicate classes — the only realistic source of such buckets — are
-    removed by the exact-dedup short-circuit upstream; the pipeline
-    variant keeps the join-based escalation precisely because it never
-    materializes bucket membership."""
-    return pairs_from_band_rows(
-        doc_band_rows(signatures, bands, rows_per_band), max_bucket
+    Bands through ``lsh.band_rows`` and expands pairs through
+    ``lsh.bucket_pairs``, the kernels the clip pipeline uses: one window
+    exchange over the band key, the bucket cap applied before any member
+    array is collected, then the pair-count agg.  Buckets above the cap
+    are dropped here (the clip pipeline's ``lsh.candidate_pairs``
+    escalates instead; for the document queries the other 63 bands make
+    the miss probability negligible, see ``minhash_lsh_dup_pairs``)."""
+    return bucket_pairs(
+        doc_band_rows(signatures, bands, rows_per_band), max_bucket, "doc_id"
     )
 
 
@@ -321,39 +311,7 @@ def doc_band_rows(
     mirror everything downstream of the (non-SQL) xxhash64 banding.
     Delegates to the single banding kernel (``lsh.band_rows``) so the
     document path can never desynchronize from the clip pipeline's."""
-    from kmcp_spark.operators.lsh import band_rows
-
     return band_rows(signatures, bands, rows_per_band, "doc_id")
-
-
-def pairs_from_band_rows(band_rows: DataFrame, max_bucket: int) -> DataFrame:
-    """Back half of ``lsh_candidates``: bucket by (band_id, band_hash),
-    DROP buckets above ``max_bucket``, expand i<j pairs in-row, count
-    shared bands."""
-    members = (
-        band_rows.groupBy("band_id", "band_hash")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-    )
-    # all i<j pairs of the member array, normalized (least, greatest) so
-    # the nondeterministic collect_list order never leaks into results
-    ids = F.col("ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(
-                    F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-                ),
-            ),
-        )
-    )
-    return (
-        members.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count("*").alias("shared_bands"))
-    )
 
 
 def minhash_lsh_dup_pairs(
@@ -446,6 +404,8 @@ def simhash_band_candidates(
     for ``max_hamming <= n_bands - 1`` the candidate set is a strict
     superset of the answer — the hamming filter downstream makes the
     result identical to the all-pairs scan (SQL-oracle checkable).
+    The bit-slice bands expand through the shared ``lsh.bucket_pairs``
+    kernel; buckets above ``max_bucket`` are dropped.
     """
     width = 64 // n_bands
     mask = [
@@ -458,28 +418,15 @@ def simhash_band_candidates(
                 F.lit(b).alias("band_id"),
                 F.shiftrightunsigned(F.col("simhash"), b * width)
                 .bitwiseAND(F.lit(mask[b]))
-                .alias("band_val"),
+                .alias("band_hash"),
             )
             for b in range(n_bands)
         ]
     )
     buckets = sigs.select("doc_id", F.explode(band_structs).alias("bd")).select(
-        "doc_id", "bd.band_id", "bd.band_val"
+        "doc_id", "bd.band_id", "bd.band_hash"
     )
-    sizes = buckets.groupBy("band_id", "band_val").agg(F.count("*").alias("sz"))
-    ok = buckets.join(
-        sizes.filter((F.col("sz") > 1) & (F.col("sz") <= max_bucket)).select(
-            "band_id", "band_val"
-        ),
-        ["band_id", "band_val"],
-    )
-    return (
-        ok.alias("l")
-        .join(ok.alias("r"), ["band_id", "band_val"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    return bucket_pairs(buckets, max_bucket, "doc_id").select("a", "b")
 
 
 def simhash_dup_pairs(

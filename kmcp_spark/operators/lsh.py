@@ -5,20 +5,29 @@ kmcp packs k-mer sets into a COBS bit-sliced Bloom matrix and probes it
 with vectorized popcount (`kmcp/cmd/index.go:923-1331`,
 `kmcp/cmd/util-db-search.go:1434-7409`).  The Spark-native equivalent is
 MinHash-LSH banding: the signature is cut into ``bands`` bands of
-``rows_per_band`` values; each band hashes to a bucket; any two clips
+``rows_per_band`` values; each band hashes to a bucket; any two ids
 sharing a bucket in any band become a candidate pair.  Candidate
-generation is then ONE shuffle (groupBy band key) instead of an index
-structure — Catalyst/AQE pick the physical join and split skewed
-partitions.
+generation is then ONE shuffle (a window over the band key) instead of
+an index structure.
+
+Two kernels live here and nowhere else:
+
+  - ``band_rows``: signature -> (id, band_id, band_hash) rows, for the
+    clip pipeline, the document path and the chunk path;
+  - ``bucket_pairs``: (band_id, band_hash, id) rows -> capped pairs
+    (a, b, shared_bands), for every banded relation, the SimHash
+    bit-slice bands included.
 
 Skew policy (the analog of kmcp's block-size escalation 256→8→1 for
 oversized groups, `kmcp/cmd/index.go:787-894` / flags `:1453-1463`):
 buckets whose membership exceeds ``max_bucket`` would pair-expand
-quadratically in one task; they are ESCALATED instead — each member is
-linked to the bucket's deterministic min/max anchors (O(size) edges),
-so a giant *near*-dup class that floods every band still reconnects
-through verified anchor edges in connected components.  Oversized
-buckets are also counted into the metrics table (no silent caps).
+quadratically in one task.  ``bucket_pairs`` drops them;
+``candidate_pairs`` (the clip pipeline, streaming and the driver
+fixture) ESCALATES them instead — each member is linked to the
+bucket's deterministic min/max anchors (O(size) edges), so a giant
+*near*-dup class that floods every band still reconnects through
+verified anchor edges in connected components.  Oversized buckets are
+also counted into the metrics table (no silent caps).
 """
 
 from __future__ import annotations
@@ -31,11 +40,12 @@ def band_rows(src: DataFrame, bands: int, rows_per_band: int,
               band_offset: int = 0) -> DataFrame:
     """(id, band_id, band_hash) band relation from minhash signatures.
 
-    THE banding kernel: one recipe serves the clip pipeline
-    (``band_buckets``) and the document path (``dedup.doc_band_rows``)
-    so the hash recipe can never desynchronize between them — both
-    paths and the staged skew-oracle tables derive from this exact
-    expression.  The band hash is computed JVM-side:
+    THE MinHash banding kernel: one recipe serves the clip pipeline
+    (``band_buckets``), the document path (``dedup.doc_band_rows``)
+    and the chunk path (``chunking.chunk_candidate_pairs``) so the hash
+    recipe can never desynchronize between them — all three paths and
+    the staged skew-oracle tables derive from this exact expression.
+    The band hash is computed JVM-side:
     ``xxhash64(band_id, slice(sig))`` — no Python in this stage at all.
 
     ``sig_col``/``band_offset`` let domain-scoped signatures (text-only
@@ -110,14 +120,76 @@ def bucket_stats(buckets: DataFrame) -> DataFrame:
     )
 
 
+def _annotate(buckets: DataFrame, id_col: str) -> DataFrame:
+    """Every band row annotated with its bucket's size and min/max
+    anchors by ONE whole-partition window over the band key.  Every
+    consumer branches off that same exchange (a second branch is a
+    ReusedExchange); a sizes-aggregation + join + self-join shape
+    measured 2-3 s more driver-serial work per leg.  Anchors no consumer
+    reads are pruned from the window by Catalyst."""
+    w = Window.partitionBy("band_id", "band_hash")
+    return buckets.select(
+        "band_id",
+        "band_hash",
+        id_col,
+        F.count("*").over(w).alias("bucket_size"),
+        F.min(id_col).over(w).alias("anchor_lo"),
+        F.max(id_col).over(w).alias("anchor_hi"),
+    )
+
+
+def _expand(ann: DataFrame, max_bucket: int, id_col: str) -> DataFrame:
+    """(a, b) rows, one per bucket with 1 < size <= max_bucket that two
+    distinct ids share.
+
+    The size filter runs BEFORE collect_list so member arrays are
+    bounded by max_bucket (a 10^7-member bucket flows through the
+    window's spillable sort, never into an in-memory array).  The
+    groupBy keys match the window partitioning, so no second exchange."""
+    grouped = (
+        ann.filter((F.col("bucket_size") > 1) & (F.col("bucket_size") <= max_bucket))
+        .groupBy("band_id", "band_hash")
+        .agg(F.collect_list(id_col).alias("members"))
+    )
+    return (
+        grouped.select("members", F.posexplode("members").alias("i", "ca"))
+        .select(
+            "ca",
+            F.explode(F.slice("members", F.col("i") + 2, F.size("members"))).alias("cb"),
+        )
+        # an id can appear twice in one bucket (e.g. streaming unions
+        # bands_new with prior band tables and a clip is re-delivered);
+        # such (x, x) rows are not pairs
+        .filter(F.col("ca") != F.col("cb"))
+        # (least, greatest) so the nondeterministic collect_list order
+        # never leaks into results
+        .select(F.least("ca", "cb").alias("a"), F.greatest("ca", "cb").alias("b"))
+    )
+
+
+def bucket_pairs(
+    buckets: DataFrame, max_bucket: int, id_col: str = "clip_id"
+) -> DataFrame:
+    """(band_id, band_hash, id) rows -> pairs(a, b, shared_bands) under
+    the bucket cap: THE pair-expansion kernel.
+
+    Every bucket with 1 < size <= max_bucket expands to all its i<j
+    pairs; buckets above the cap are DROPPED.  ``shared_bands`` counts
+    how many bands voted for the pair (the analog of kmcp's per-target
+    match count A2).  ``id_col`` may be of any orderable type, a struct
+    included."""
+    return (
+        _expand(_annotate(buckets, id_col), max_bucket, id_col)
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("shared_bands"))
+    )
+
+
 def candidate_pairs(
     buckets: DataFrame, max_bucket: int = 2000
 ) -> tuple[DataFrame, DataFrame]:
-    """buckets -> (pairs(a, b, shared_bands), oversized_buckets).
-
-    Pair expansion is a self-join on the band key restricted to buckets
-    with 1 < size <= max_bucket.  ``shared_bands`` counts how many bands
-    voted for the pair (the analog of kmcp's per-target match count A2).
+    """buckets -> (pairs(a, b, shared_bands), oversized_buckets): the
+    ``bucket_pairs`` expansion plus the escalation of oversized buckets.
 
     Oversized buckets are ESCALATED, not dropped (the analog of kmcp's
     block-size escalation 256→8→1 for oversized groups,
@@ -128,49 +200,10 @@ def candidate_pairs(
     edges pass exact verification and connected components restores the
     full cluster; members whose anchor edges fail verify were
     false-positive collisions and are correctly not clustered.  Anchors
-    come from one hash aggregation (min/max), so no per-bucket sort —
-    the escalation stays linear even for a 10^7-member bucket.
+    come from the same window as the bucket sizes, so no per-bucket
+    sort — the escalation stays linear even for a 10^7-member bucket.
     """
-    # ONE shuffle of the bucket table: a whole-partition window over the
-    # band key annotates every member with its bucket's size and min/max
-    # anchors.  The earlier shape (separate sizes aggregation joined back
-    # onto buckets, then a bucket-key self-join) re-derived the band
-    # table 3x and built two broadcast tables per run — measured 2-3 s of
-    # driver-serial work per leg that did not parallelize.  Here both
-    # consumers branch off the SAME exchange (the second branch is a
-    # ReusedExchange over the first's shuffle files).
-    w = Window.partitionBy("band_id", "band_hash")
-    ann = buckets.select(
-        "band_id",
-        "band_hash",
-        "clip_id",
-        F.count("*").over(w).alias("bucket_size"),
-        F.min("clip_id").over(w).alias("anchor_lo"),
-        F.max("clip_id").over(w).alias("anchor_hi"),
-    )
-    # pair expansion happens IN-ROW from a collected member array; the
-    # size filter runs BEFORE collect_list so arrays are bounded by
-    # max_bucket (a 10^7-member bucket flows through the window's
-    # spillable sort, never into an in-memory array).  The groupBy keys
-    # match the window partitioning, so no second exchange.
-    grouped = (
-        ann.filter((F.col("bucket_size") > 1) & (F.col("bucket_size") <= max_bucket))
-        .groupBy("band_id", "band_hash")
-        .agg(F.collect_list("clip_id").alias("members"))
-    )
-    expanded = (
-        grouped.select("members", F.posexplode("members").alias("i", "ca"))
-        .select(
-            "ca",
-            F.explode(F.slice("members", F.col("i") + 2, F.size("members"))).alias("cb"),
-        )
-        # a clip_id can appear twice in one bucket (e.g. streaming unions
-        # bands_new with prior band tables and a clip is re-delivered);
-        # the old self-join's strict l.clip_id < r.clip_id dropped the
-        # resulting (a,a) rows, so the in-row expansion must too.
-        .filter(F.col("ca") != F.col("cb"))
-        .select(F.least("ca", "cb").alias("a"), F.greatest("ca", "cb").alias("b"))
-    )
+    ann = _annotate(buckets, "clip_id")
     # escalation edges: member -> {min, max} anchor of its oversized
     # bucket — a narrow select off the annotated rows, no join.  The
     # oversized member rows are persisted (deferred-release protocol,
@@ -202,7 +235,8 @@ def candidate_pairs(
         )
     )
     pairs = (
-        expanded.union(escalated)
+        _expand(ann, max_bucket, "clip_id")
+        .union(escalated)
         .groupBy("a", "b")
         .agg(F.count("*").alias("shared_bands"))
     )

@@ -216,46 +216,15 @@ class DedupPipeline:
             sketches, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands
         )
 
-        oversized_rel = []
+        oversized = None
 
-        if cfg.fuse_small_stages:
-            # candidates -> verified as ONE in-memory persisted chain:
-            # no parquet round-trips, one materializing job instead of
-            # two write jobs (each a ~3 s corpus-size-invariant constant
-            # — the r6 fixed-cost attribution in BENCH/BASELINE.md).
-            # Resume granularity coarsens to sketches -> clusters; when
-            # the clusters checkpoint is already valid the chain is left
-            # LAZY (unpersisted, uncounted) so a resumed run pays
-            # nothing unless the caller consumes PipelineResult.verified.
-            from pyspark import StorageLevel
-
-            clusters_valid = not force and checkpoint_valid(
-                os.path.join(self.out_dir, "clusters"), self.fp
-            )
-            t0 = time.time()
+        def build_pairs():
+            nonlocal oversized
             pairs, oversized = candidate_pairs(buckets, cfg.lsh.max_bucket)
-            verified = verify_pairs(score_pairs(pairs, sketches, cfg), clips, cfg)
-            if not clusters_valid:
-                verified = verified.persist(StorageLevel.MEMORY_AND_DISK)
-                n_verified = verified.count()
-                self.metrics.append(
-                    StageMetric(
-                        "candidates+verified",
-                        n_verified,
-                        int((time.time() - t0) * 1000),
-                        False,
-                    )
-                )
-                oversized_rel.append(oversized)
-        else:
+            return pairs
 
-            def build_pairs():
-                pairs, oversized = candidate_pairs(buckets, cfg.lsh.max_bucket)
-                oversized_rel.append(oversized)
-                return pairs
-
-            candidates = self._stage("candidates", build_pairs, force=force)
-        if oversized_rel:
+        candidates = self._stage("candidates", build_pairs, force=force)
+        if oversized is not None:
             # no silent caps: record exactly what was not expanded.  The
             # count runs AFTER the checkpoint write on purpose: the write
             # job materializes candidate_pairs' persisted over_rel as a
@@ -263,7 +232,7 @@ class DedupPipeline:
             # write re-derived the full band window (sketches scan +
             # window shuffle) just to learn the bucket count (~1.4 s/leg
             # at 4 cores, measured r6)
-            n_over = oversized_rel[0].count()
+            n_over = oversized.count()
             over_path = os.path.join(self.out_dir, "oversized_buckets.json")
             if n_over:
                 with open(over_path, "w") as f:
@@ -274,13 +243,11 @@ class DedupPipeline:
                 # that never happened this run
                 os.remove(over_path)
 
-        if not cfg.fuse_small_stages:
+        def build_verified():
+            scored = score_pairs(candidates, sketches, cfg)
+            return verify_pairs(scored, clips, cfg)
 
-            def build_verified():
-                scored = score_pairs(candidates, sketches, cfg)
-                return verify_pairs(scored, clips, cfg)
-
-            verified = self._stage("verified", build_verified, force=force)
+        verified = self._stage("verified", build_verified, force=force)
 
         def build_clusters():
             # stage-3/stage-4 split of the reference profiler: weak-edge
@@ -294,7 +261,6 @@ class DedupPipeline:
                 edges,
                 all_nodes=sketches.select("clip_id"),
                 max_iters=cfg.cc_max_iters,
-                checkpoint_every=cfg.cc_checkpoint_every,
             )
             if cfg.em_reassign_iters > 0:
                 labels_rep = reassign_by_support(

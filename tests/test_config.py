@@ -1,9 +1,9 @@
-"""Driver heap sizing: pure arithmetic, no JVM is started."""
+"""Driver heap and core-count defaults: pure arithmetic, no JVM is started."""
 
 import pytest
 
 from kmcp_spark import config
-from kmcp_spark.config import _default_driver_mem, _driver_mem
+from kmcp_spark.config import _default_cores, _default_driver_mem, _driver_mem
 
 GIB = 1024 ** 3
 
@@ -57,3 +57,15 @@ def test_unset_driver_mem_uses_host_default(monkeypatch, env):
 
 def test_mem_available_is_positive():
     assert config._mem_available_bytes() > 0
+
+
+@pytest.mark.parametrize("env, want", [(None, 4), ("", 4), ("2", 2)])
+def test_default_cores(monkeypatch, env, want):
+    """`SPARK_GRAFT_CPUS` wins when set; otherwise the CPUs this process
+    may run on, never a fixed count."""
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
+    monkeypatch.setattr(config.os, "sched_getaffinity", lambda pid: {0, 1, 2, 3}, raising=False)
+    assert _default_cores() == want

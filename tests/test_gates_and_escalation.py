@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from kmcp_spark.config import LSHConfig, PipelineConfig, SketchConfig
 from kmcp_spark.operators.cluster import connected_components, prune_weak_edges
-from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
+from kmcp_spark.operators.lsh import band_buckets, bucket_pairs, candidate_pairs
 from kmcp_spark.operators.verify import min_bands_for_fpr
 
 
@@ -86,6 +86,63 @@ def test_oversized_bucket_escalation_links_members(spark):
     esc = [(a, b) for a, b in got if a.startswith("c")]
     assert len(esc) < 12 * 11 // 2  # NOT quadratic expansion
     assert _connected(esc, members)
+
+
+def _cap_pairs(buckets, policy, cap):
+    """Pair set of one bucket table under the drop or escalate policy."""
+    if policy == "drop":
+        pairs = bucket_pairs(buckets, cap)
+    else:
+        pairs, _ = candidate_pairs(buckets, cap)
+    return {(r.a, r.b) for r in pairs.collect()}
+
+
+def _one_bucket(spark, members):
+    return spark.createDataFrame(
+        [(m, 0, 4242) for m in members],
+        "clip_id string, band_id int, band_hash bigint",
+    )
+
+
+@pytest.mark.parametrize("policy", ["drop", "escalate"])
+def test_bucket_at_cap_expands_fully(spark, policy):
+    """A bucket of exactly max_bucket members is within the cap: every
+    i<j pair is emitted under both policies."""
+    members = [f"m{i}" for i in range(5)]
+    got = _cap_pairs(_one_bucket(spark, members), policy, cap=5)
+    assert got == {(a, b) for i, a in enumerate(members) for b in members[i + 1:]}
+
+
+@pytest.mark.parametrize("policy", ["drop", "escalate"])
+def test_bucket_one_over_cap(spark, policy):
+    """max_bucket + 1 members is over the cap: the drop policy emits
+    nothing, escalation only the edges to the min/max anchors."""
+    members = [f"m{i}" for i in range(6)]
+    got = _cap_pairs(_one_bucket(spark, members), policy, cap=5)
+    if policy == "drop":
+        assert got == set()
+    else:
+        lo, hi = members[0], members[-1]
+        assert got == {(lo, m) for m in members[1:]} | {(m, hi) for m in members[:-1]}
+        assert len(got) == 2 * (len(members) - 1) - 1
+
+
+def test_same_clip_chunks_never_pair(spark):
+    """Chunks of one clip that share every bucket are not a candidate
+    pair; each of them still pairs with the other clip's chunk, with
+    the lower clip_id on the ``a`` side."""
+    from kmcp_spark.operators.chunking import chunk_candidate_pairs
+
+    sig = [11, 22, 33, 44]
+    sk = spark.createDataFrame(
+        [("B", 0, sig), ("A", 0, sig), ("A", 1, sig)],
+        "clip_id string, chunk_idx int, minhash array<bigint>",
+    )
+    got = {
+        (r.a, r.a_chunk, r.b, r.b_chunk): r.shared_bands
+        for r in chunk_candidate_pairs(sk, bands=4, rows_per_band=1).collect()
+    }
+    assert got == {("A", 0, "B", 0): 4, ("A", 1, "B", 0): 4}
 
 
 def test_pipeline_recall_with_giant_near_dup_class(spark, tmp_out):

@@ -44,7 +44,7 @@ def main() -> None:
         clips.write.parquet(corpus)
     clips = spark.read.parquet(corpus)
 
-    base = PipelineConfig(fuse_small_stages=True)
+    base = PipelineConfig()
     dom = replace(
         base,
         sketch=replace(base.sketch, domain_perm=16),
