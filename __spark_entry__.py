@@ -502,7 +502,7 @@ def _clips_cfg():
     not a cost one: the measured pipeline overhead of the domain bands
     is ~0% (interleaved same-window A/B at 4k clips / 4 cores:
     wall ratio 0.999 min / 1.001 median, identical verified pairs —
-    `tools/ab_domain_bands.py`, BENCH/ab_domain_bands.jsonl)."""
+    recorded in BENCH/ab_domain_bands.jsonl)."""
     from dataclasses import replace
 
     from kmcp_spark.config import PipelineConfig

@@ -1,36 +1,34 @@
-"""Benchmark harness (driver contract + north-rule scaling evidence).
+"""Benchmark harness: the N→4N pipeline scaling figure and the driver-query sweep.
 
-Default mode:
-  1. times every headline query from __spark_entry__ at
-     $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-     local[$SPARK_GRAFT_CPUS] (default: the CPUs the process may use),
-     forcing full execution with the noop sink;
-  2. benchmarks the clip dedup pipeline on a deterministic synthetic
-     corpus at two parallelism levels — local[N] and local[4N], default
-     N=1 (the sandbox stand-in for N vs 4N executors; pair choice and
-     hardware ceilings documented in BENCH/BASELINE.md) — and reports
-     clips/sec at both plus scaling efficiency (T_N/(T_4N*4));
-  3. emits the result as a JSON line on stdout.
+``python bench.py`` runs two phases:
 
-The artifact is INDESTRUCTIBLE by design: a best-so-far JSON line is
-printed (and flushed) after the queries phase and after EVERY scaling
-round, a SIGTERM/SIGINT handler re-prints the latest line before
-exiting, and the whole run is capped by a wall-clock deadline
-($SPARK_GRAFT_BENCH_DEADLINE_SEC, default 1500 s) checked before each
-pre-flight wait and each scaling round.  If the harness is killed
-externally mid-run, the last complete line on stdout is still a valid
-partial result (the `phase` field says how far it got).
+  1. scaling: the dedup pipeline on a deterministic synthetic corpus at
+     cores_hi (the CPUs the process may use) and cores_lo = cores_hi // 4,
+     the local stand-in for N vs 4N executors.  A child process writes
+     the corpus and, next to it, its truth; then interleaved rounds run
+     one fresh-JVM leg per core count.  A leg pre-reads the corpus into
+     the page cache, runs two full-size warm-up passes, times the third
+     and, outside the timed wall, scores its clusters against the truth.
+     The parent holds no JVM while children run, so at most one JVM of
+     the run is alive at a time.  Efficiency comes from the fastest leg
+     per core count; each round lists the stages whose walls scale anti-
+     or super-linearly, the mark of a leg slowed by something else.
+  2. queries: times every driver query from __spark_entry__ on
+     local[cores_hi], forcing full execution with the noop sink.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-SPARK_GRAFT_BENCH_CLIPS (corpus size, default 16000),
-SPARK_GRAFT_SCALE_CORES (the 4N core count, default 4),
-SPARK_GRAFT_SCALE_ROUNDS (interleaved rounds, default 3),
-SPARK_GRAFT_BENCH_DEADLINE_SEC (total wall budget, default 1500),
-SPARK_GRAFT_SKIP_SCALING=1 (skip step 2),
-SPARK_GRAFT_ONLY_SCALING=1 (skip step 1).
+The artifact is the last stdout line: one JSON object under LINE_BUDGET
+chars whose metric/value/unit agree.  A best-so-far line is printed
+after every round and every query and again on SIGTERM/SIGINT; the
+per-leg walls, stage walls, round flags and any scaling error go to
+``_bench_side.json``.
 
-Internal mode (used via subprocess so each run gets a fresh JVM with
-its own core count): ``python bench.py --pipeline-run CORES CORPUS OUT``.
+Env knobs: SPARK_GRAFT_SF_DIR (query data, default sf0.1),
+SPARK_GRAFT_CPUS (cores_hi), SPARK_GRAFT_BENCH_CLIPS (corpus size,
+default 16000), SPARK_GRAFT_SCALE_ROUNDS (default 3),
+SPARK_GRAFT_BENCH_DEADLINE_SEC (default 1500; a round starts only if
+the last one would still fit), SPARK_GRAFT_SKIP_SCALING=1 (queries only).
+
+Child modes: ``--gen-corpus N PATH`` and ``--pipeline-run CORES PATH OUT``.
 """
 
 from __future__ import annotations
@@ -42,698 +40,231 @@ import signal
 import subprocess
 import sys
 import time
+import traceback
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 T0 = time.time()
-_BEST: dict | None = None  # latest best-so-far result, printed on signal
+METRIC = "clips_per_sec_4n(dedup pipeline, N vs 4N cores)"
+LINE_BUDGET = 1800  # readers that keep only the last ~2000 chars of stdout still get it whole
+WARMUP_PASSES = 2  # one pass still leaves JIT/codegen residue in the small stages
+# per-leg detail and error text: written to the side file, never onto the line
+_SIDE_KEYS = (
+    "n_clips", "cores_n", "cores_4n", "clips_per_sec_n", "wall_sec_n",
+    "wall_sec_4n", "stage_ms_n", "stage_ms_4n", "round_flags", "scaling_error",
+)
+_BEST: str | None = None  # latest line, re-printed on SIGTERM/SIGINT
 
 
 def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
-# Bulky diagnostic fields are NOT printed on stdout: the driver captures
-# only the last ~2000 chars of the tail, and round 3's final line grew
-# past that (parsed: null).  These keys are split into a side artifact
-# (BENCH/bench_side.json) so the stdout line stays compact — scalars +
-# the per-query dict only.
-_SIDE_KEYS = (
-    "wall_samples_n", "wall_samples_4n", "host_probes",
-    "stage_ms_n", "stage_ms_4n", "stage_ms_rounds_n", "stage_ms_rounds_4n",
-    "inleg_n", "inleg_4n", "rounds_detail",
-)
-LINE_BUDGET = 1800  # driver tail capture is ~2000 chars; stay safely under
+def _remaining() -> float:
+    return T0 + float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE_SEC", "1500")) - time.time()
 
 
 def emit(result: dict, phase: str) -> None:
-    """Print the current best-so-far artifact as one complete JSON line.
-
-    Called after every phase and every scaling round, so an external
-    kill at any point still leaves the most recent complete line on
-    stdout (the driver's parser takes the last parseable line).
-    Bulky diagnostics (wall samples, per-round stage walls, host probes)
-    go to BENCH/bench_side.json instead of the line — see _SIDE_KEYS.
-    """
+    """Print ``result`` as one compact JSON line; bulky keys go to the side file."""
     global _BEST
-    result = dict(result)
-    result["phase"] = phase
-    result["bench_wall_sec"] = round(time.time() - T0, 1)
-    side = {k: result.pop(k) for k in _SIDE_KEYS if k in result}
-    compact = dict(separators=(",", ":"))  # no spaces: ~2 chars/key headroom
-    line = json.dumps(result, **compact)
-    if len(line) > LINE_BUDGET:
-        # progressive shrink, cheapest information first
-        log(f"emit: line {len(line)} chars > {LINE_BUDGET}, shrinking")
-        if "scaling_error" in result:
-            result["scaling_error"] = result["scaling_error"][:120]
-        result["queries"] = {k: round(v, 1) for k, v in result.get("queries", {}).items()}
-        line = json.dumps(result, **compact)
-    if len(line) > LINE_BUDGET:
-        # divert secondary scaling figures too; the contract core
-        # (metric/value/unit/queries/sf/scaling_efficiency/
-        # scaling_window_valid) always stays on the line
-        for k in ("scaling_efficiency_min_legs", "scaling_efficiency_best_round",
-                  "min_stream_gbps", "min_tasks_per_sec",
-                  "clips_per_sec_n", "wall_sec_n", "wall_sec_4n"):
-            if k in result:
-                side[k] = result.pop(k)
-        line = json.dumps(result, **compact)
-    if len(line) > LINE_BUDGET:
-        # last resort: keep the slowest queries on the line, divert the
-        # full per-query dict to the side file, and say how many dropped
-        qs = result.get("queries", {})
-        keep = dict(sorted(qs.items(), key=lambda kv: -kv[1])[:25])
-        side["queries_full"] = qs
-        result["queries"] = keep
-        result["queries_dropped"] = len(qs) - len(keep)
-        line = json.dumps(result, **compact)
-    _BEST = result
-    print(line, flush=True)
-    # belt-and-braces: the same line lands in a file, so the artifact
-    # survives even a stdout-capture failure
-    try:
-        with open(os.path.join(REPO, "_bench_partial.json"), "w") as f:
-            f.write(line + "\n")
-        if side:
-            side["phase"] = phase
-            os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-            with open(os.path.join(REPO, "BENCH", "bench_side.json"), "w") as f:
-                json.dump(side, f, indent=1)
-    except OSError:
-        pass
+    line = dict(result, phase=phase, bench_wall_sec=round(time.time() - T0, 1))
+    line["queries"] = {k: round(v, 1) for k, v in line.get("queries", {}).items()}
+    side = {k: line.pop(k) for k in _SIDE_KEYS if k in line}
+    _BEST = json.dumps(line, separators=(",", ":"))
+    print(_BEST, flush=True)
+    with open(os.path.join(REPO, "_bench_side.json"), "w") as f:
+        json.dump(dict(side, phase=phase), f, indent=1)
 
 
 def _on_kill(signum, frame):
     if _BEST is not None:
-        print(json.dumps(_BEST), flush=True)
+        print(_BEST, flush=True)
     sys.exit(0)
 
 
-def _deadline() -> float:
-    return T0 + float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE_SEC", "1500"))
+def _headline(result: dict) -> dict:
+    """``result`` with its query total, labelled clips/sec once a scaling
+    round completed and as the query total in seconds otherwise."""
+    out = dict(result)
+    out["total_query_sec"] = round(sum(v for v in out["queries"].values() if v > 0), 2)
+    if out.get("value") is None:
+        out.update(metric="total_query_sec", value=out["total_query_sec"], unit="sec")
+    return out
 
 
-def _remaining() -> float:
-    return _deadline() - time.time()
+# ------------------------------------------------------------ child modes
+
+def gen_corpus(n_clips: int, corpus_path: str) -> None:
+    """Write the bench corpus to ``corpus_path`` and its truth beside it."""
+    from kmcp_spark.config import get_spark
+    from kmcp_spark.corpus import generate_clips
+
+    spark = get_spark(app="bench_gen")
+    clips, truth = generate_clips(spark, n_clips, min_dur_s=1.0, max_dur_s=5.0)
+    clips.write.mode("overwrite").parquet(corpus_path)
+    truth.write.mode("overwrite").parquet(corpus_path + "_truth")
+    spark.stop()
 
 
-def _force(df):
-    df.write.format("noop").mode("overwrite").save()
+def _pair_quality(spark, clusters, truth_path: str) -> tuple[float, float]:
+    """Pair recall and precision of ``clusters`` against the planted truth."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
+    from kmcp_spark.plans.pipeline import dup_pairs_from_clusters
 
-# ------------------------------------------------------------ pipeline run
-
-def _warm_page_cache(corpus_path: str) -> None:
-    """Read every corpus file once so both legs see identical cache
-    state (this VM zeroes fresh pages at ~300 MB/s and its page cache is
-    at the mercy of co-tenants; the pre-read costs seconds and removes a
-    multi-second random term from whichever leg runs first)."""
-    for name in os.listdir(corpus_path):
-        p = os.path.join(corpus_path, name)
-        if os.path.isfile(p):
-            with open(p, "rb") as f:
-                while f.read(1 << 24):
-                    pass
+    truth = spark.read.parquet(truth_path).withColumn(
+        "cluster_size", F.count("*").over(Window.partitionBy("cluster_id"))
+    )
+    want = dup_pairs_from_clusters(truth).localCheckpoint(eager=True)
+    got = dup_pairs_from_clusters(clusters).localCheckpoint(eager=True)
+    hit = want.join(got, ["a", "b"]).count()
+    return round(hit / max(want.count(), 1), 4), round(hit / max(got.count(), 1), 4)
 
 
 def pipeline_run(cores: int, corpus_path: str, out_dir: str) -> None:
-    """Run the dedup pipeline on a pre-generated corpus; print timing JSON."""
+    """One scaling leg in this process's fresh JVM; prints its JSON."""
     from kmcp_spark.config import PipelineConfig, get_spark
     from kmcp_spark.plans.pipeline import DedupPipeline
 
     spark = get_spark(app=f"bench_pipe_{cores}", cores=cores, shuffle_partitions=max(cores, 8))
+    # the same page-cache state for every leg, whichever runs first
+    for name in os.listdir(corpus_path):
+        with open(os.path.join(corpus_path, name), "rb") as f:
+            while f.read(1 << 24):
+                pass
     clips = spark.read.parquet(corpus_path)
     n = clips.count()
-    # steady-state measurement for a fresh JVM: warm the page cache with
-    # a raw file pre-read, run the pipeline once at FULL size, then time
-    # the second full pass.  The r3 warmup used a 1/8 slice, but AQE
-    # finalizes physical plans from runtime statistics — the slice run
-    # picks different join strategies than the full run, so the timed
-    # pass still paid ~4-6 s of first-execution codegen/JIT per leg
-    # (driver-serial, identical at every core count — measured: the
-    # verified stage dropped 7.0 s -> 2.4 s between first and second
-    # full-size runs at 4 cores).  A real 100 TB job pays that planning
-    # cost once against hours of execution; timing the second pass
-    # reports the throughput that actually scales.
-    _warm_page_cache(corpus_path)
     cfg = PipelineConfig()
-    # TWO warmup passes, time the third (SPARK_GRAFT_WARMUP_PASSES):
-    # an interleaved in-session A/B (r6, BENCH/BASELINE.md) showed one
-    # full-size pass still leaves ~4-6 s of JIT/codegen residue in the
-    # small stages (clusters 8.4 s after one warmup -> 3.0 s after two
-    # at 4 cores); steady state is the quantity that scales, and the
-    # warmup count is identical at every core count.
-    warmups = int(os.environ.get("SPARK_GRAFT_WARMUP_PASSES", "2"))
-    for w in range(warmups):
-        warm_dir = f"{out_dir}_warm{w}"
-        shutil.rmtree(warm_dir, ignore_errors=True)
-        DedupPipeline(spark, cfg, warm_dir).run(clips)
-        shutil.rmtree(warm_dir, ignore_errors=True)
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    t0 = time.time()
-    res = DedupPipeline(spark, cfg, out_dir).run(clips)
-    wall = time.time() - t0
-    stage = {m.stage: m.wall_ms for m in res.metrics}
-    print(json.dumps({"cores": cores, "n_clips": n, "wall_sec": wall, "stage_ms": stage}))
-    spark.stop()
-
-
-# ---------------------------------------------------------------- queries
-
-def bench_queries(sf_dir: str, cores: int, result: dict | None = None) -> dict[str, float]:
-    """Time every driver query; if ``result`` is given, emit a best-so-far
-    artifact line after each query (kill-safe partials)."""
-    import __spark_entry__ as entrymod
-    from kmcp_spark.config import get_spark
-
-    spark = get_spark(app="bench_queries", cores=cores, shuffle_partitions=max(cores, 8))
-    out: dict[str, float] = {}
-    for name, fn in entrymod.queries().items():
+    # AQE plans from runtime statistics, so only full-size passes warm up
+    # the plans the timed pass runs
+    for w in range(WARMUP_PASSES + 1):
+        shutil.rmtree(out_dir, ignore_errors=True)
         t0 = time.time()
-        try:
-            _force(fn(spark, sf_dir))
-            out[name] = round(time.time() - t0, 3)
-            log(f"  {name}: {out[name]}s")
-        except Exception as ex:  # report, don't die
-            log(f"  {name}: ERROR {ex}")
-            out[name] = -1.0
-        # drop relations the query persisted internally: keeps the
-        # session's memory profile flat across 29 queries and each
-        # timing independent of its predecessors
-        spark.catalog.clearCache()
-        if result is not None:
-            partial = dict(result)
-            partial["queries"] = dict(out)
-            partial["total_query_sec"] = round(sum(v for v in out.values() if v > 0), 2)
-            if partial.get("value") is None:
-                # no scaling figure yet (scaling skipped or failed):
-                # the artifact's headline IS the query total — label it
-                # as such so metric/value/unit never disagree
-                partial["metric"] = "total_query_sec"
-                partial["value"] = partial["total_query_sec"]
-                partial["unit"] = "sec"
-            emit(partial, phase=f"queries_{len(out)}")
+        res = DedupPipeline(spark, cfg, out_dir).run(clips)
+        wall = time.time() - t0
+    recall, precision = _pair_quality(spark, res.clusters, corpus_path + "_truth")
+    print(json.dumps({"cores": cores, "n_clips": n, "wall_sec": round(wall, 2),
+                      "stage_ms": {m.stage: m.wall_ms for m in res.metrics},
+                      "recall": recall, "precision": precision}))
     spark.stop()
-    return out
+
+
+def _child(args: list[str]) -> str:
+    """Run ``bench.py ARGS`` in a new process; return its stdout."""
+    r = subprocess.run([sys.executable, os.path.abspath(__file__), *args],
+                       capture_output=True, text=True, timeout=max(_remaining(), 600))
+    if r.returncode != 0:
+        log(r.stderr[-2000:])
+        raise RuntimeError(f"bench.py {args[0]} {args[1]} failed (rc {r.returncode})")
+    return r.stdout
 
 
 # ---------------------------------------------------------------- scaling
 
-def _host_probe(procs: int = 8) -> dict:
-    """Health probe: sketch-kernel tasks/s AND streaming memory
-    bandwidth (no Spark).  This shared VM's co-tenant load swings
-    timings 2-3x, and bus saturation can leave cache-resident compute
-    intact while multi-GB stages crawl — so both signals are recorded
-    with every round; legs from low-bandwidth windows are noise."""
-    try:
-        r = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "host_probe.py"), str(procs)],
-            capture_output=True, text=True, timeout=300,
-        )
-        d = json.loads(r.stdout.strip().splitlines()[-1])
-        return {
-            "tasks_per_sec": d["tasks_per_sec"][str(procs)],
-            "stream_gbps": d.get("stream_gbps", -1.0),
-        }
-    except Exception as ex:
-        log("host probe failed:", ex)
-        return {"tasks_per_sec": -1.0, "stream_gbps": -1.0}
-
-
-def _read_cpu() -> tuple[int, int, int]:
-    """(steal_ticks, busy_ticks, total_ticks) from /proc/stat, or -1s.
-
-    Steal is the hypervisor-scheduling signal the memcpy probe misses.
-    Busy (total - idle - iowait) catches the OTHER invisible co-tenant:
-    a process INSIDE this VM burning cores contends with a leg while
-    leaving the bus healthy and steal at zero — observed r6: an 8-core
-    verify job inflated a 1-core leg into a physically impossible 1.34
-    same-round pair that every other signal called clean."""
-    try:
-        vals = [int(x) for x in open("/proc/stat").readline().split()[1:]]
-        total = sum(vals)
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, total - idle, total
-    except Exception:
-        return -1, -1, -1
-
-
-def _run_leg_sampled(cmd: list[str], timeout: int) -> tuple[subprocess.CompletedProcess, dict]:
-    """Run a scaling leg while sampling host health DURING the leg.
-
-    r6 campaign 3 showed the failure mode this closes: between-leg
-    probes (2.2 -> 7.0 -> 6.4 GB/s) BRACKET the minutes in between but
-    cannot certify them — a mid-leg co-tenant burst left two short
-    stages anti-scaling while every probe looked healthy.  The parent
-    process sits idle in wait() during a leg, so it samples a small
-    preallocated streaming multiply (96 MB moved, ~1% duty cycle at one
-    sample per ~6 s — symmetric across both core counts) plus the
-    /proc/stat steal delta.  Samples are evidence attached to the leg,
-    not a perturbation: the buffer is allocated once per leg and the
-    sampler never runs concurrently with itself.
-
-    Early samples overlap the child JVM's -Xms heap zeroing (our own
-    traffic, identical for both legs); the per-sample time offset is
-    recorded so analysis can weight the post-boot tail.
-    """
-    import threading
-
-    import numpy as np
-
-    src = np.ones(6_000_000)  # 48 MB; multiply moves src+dst = 96 MB
-    dst = np.empty_like(src)
-    np.multiply(src, 1.0, out=dst)  # fault pages in now: the first timed
-    # sample must measure the bus, not this VM's ~300 MB/s page zeroing
-    proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
-    # drain pipes concurrently: Spark logs overflow the 64 KB pipe
-    # buffer long before a leg finishes, and an undrained wait() would
-    # deadlock the child (subprocess.run hides this; Popen doesn't)
-    bufs: dict[str, list[str]] = {"out": [], "err": []}
-
-    def _drain(stream, key):
-        for chunk in iter(lambda: stream.read(1 << 16), ""):
-            bufs[key].append(chunk)
-
-    drains = [
-        threading.Thread(target=_drain, args=(proc.stdout, "out"), daemon=True),
-        threading.Thread(target=_drain, args=(proc.stderr, "err"), daemon=True),
-    ]
-    for th in drains:
-        th.start()
-    t_start = time.time()
-    samples: list[list[float]] = []  # [t_offset_sec, gbps]
-    steal0, busy0, total0 = _read_cpu()
-    while True:
-        try:
-            proc.wait(timeout=6)
-            break
-        except subprocess.TimeoutExpired:
-            pass
-        if time.time() - t_start > timeout:
-            proc.kill()
-            proc.wait()
-            raise subprocess.TimeoutExpired(cmd, timeout)
-        t0 = time.perf_counter()
-        np.multiply(src, 1.000001, out=dst)
-        dt = time.perf_counter() - t0
-        samples.append([round(time.time() - t_start, 1),
-                        round((src.nbytes + dst.nbytes) / dt / 1e9, 2)])
-    for th in drains:
-        th.join(timeout=10)
-    out, err = "".join(bufs["out"]), "".join(bufs["err"])
-    steal1, busy1, total1 = _read_cpu()
-    gbps = sorted(s[1] for s in samples)
-    ncpu = os.cpu_count() or 32
-    dtotal = max(total1 - total0, 1)
-    inleg = {
-        "samples": samples,
-        "gbps_min": gbps[0] if gbps else -1.0,
-        "gbps_med": gbps[len(gbps) // 2] if gbps else -1.0,
-        "steal_pct": round(100.0 * (steal1 - steal0) / dtotal, 2)
-        if steal0 >= 0 and steal1 >= 0 else -1.0,
-        # whole-VM average busy cores over the leg: >> the leg's own
-        # core count means an IN-VM co-tenant (invisible to bus/steal)
-        "busy_cores": round(ncpu * (busy1 - busy0) / dtotal, 1)
-        if busy0 >= 0 and busy1 >= 0 else -1.0,
-    }
-    return subprocess.CompletedProcess(cmd, proc.returncode, out, err), inleg
-
-
-_LOCK_PATH = os.path.join(REPO, "_bench_scaling.lock")
-
-
-def _acquire_scaling_lock(reserve_sec: float = 0.0) -> bool:
-    """One scaling campaign at a time, machine-wide.
-
-    Two entry points launch campaigns (the unattended scaling_watch and
-    manual/driver bench runs); this session observed them colliding —
-    concurrent legs contend for cores AND, before the pipe-dir fix,
-    clobbered each other's pipeline output dirs mid-leg, producing
-    artifacts that looked plausible but measured two jobs at once.
-    The lock holds the owner's pid; a lock whose pid is dead is stale
-    and reclaimed (a SIGKILLed bench cannot clean up)."""
-    while True:
-        try:
-            fd = os.open(_LOCK_PATH, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
-            return True
-        except FileExistsError:
-            try:
-                pid = int(open(_LOCK_PATH).read().strip())
-                alive = os.path.exists(f"/proc/{pid}")
-            except (ValueError, OSError):
-                alive = False
-            if not alive:
-                log(f"scaling lock stale (pid gone) — reclaiming")
-                try:
-                    os.remove(_LOCK_PATH)
-                except OSError:
-                    pass
-                continue
-            if _remaining() - reserve_sec < 120:
-                log("scaling lock held and deadline near — giving up on scaling")
-                return False
-            log(f"scaling lock held by pid {pid} — waiting 30s")
-            time.sleep(30)
-
-
-def _release_scaling_lock() -> None:
-    try:
-        if open(_LOCK_PATH).read().strip() == str(os.getpid()):
-            os.remove(_LOCK_PATH)
-    except OSError:
-        pass
-
-
-def _one_leg(cores: int, corpus_path: str) -> dict:
-    # corpus-suffixed: two campaigns at different corpus sizes must
-    # never share a pipeline dir (observed: a watcher-launched 16k leg
-    # and a manual 32k leg rmtree'ing each other's checkpoints mid-run)
-    out_dir = os.path.join(REPO, f"_bench_pipe_{os.path.basename(corpus_path)}_{cores}")
-    if _remaining() <= 60:
-        # deadline already spent: the 120 s floor below would otherwise
-        # launch up to two more legs past the budget and get the harness
-        # SIGTERM'd mid-leg — stop here and let the caller emit the
-        # best-so-far artifact instead
-        raise RuntimeError("bench deadline exhausted before leg start")
-    leg_timeout = max(120, min(3000, int(_remaining())))
-    r, inleg = _run_leg_sampled(
-        [sys.executable, os.path.abspath(__file__), "--pipeline-run", str(cores), corpus_path, out_dir],
-        timeout=leg_timeout,
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    if r.returncode != 0:
-        log("pipeline-run failed:", r.stderr[-2000:])
-        raise RuntimeError(f"pipeline run at {cores} cores failed")
-    payload = json.loads(r.stdout.strip().splitlines()[-1])
-    inleg["cores"] = cores  # for the in-VM busy-cores contention check
-    payload["inleg"] = inleg
-    return payload
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else 0.5 * (s[n // 2 - 1] + s[n // 2])
-
-
-def _round_contention(st_lo: dict, st_hi: dict, il_lo: dict | None, il_hi: dict | None,
-                      core_ratio: float = 4.0) -> list[str]:
-    """Reasons a same-round leg pair should be read as contended.
-
-    Signals measured DURING the round rather than bracketed by probes
-    (the r6 campaign-3 lesson):
-      * a stage >= 2 s at 1 core whose 4-core wall EXCEEDS its 1-core
-        wall — anti-scaling is physically impossible for this plan on
-        quiet hardware and was the discriminator that exposed campaign
-        3's over-generous window label;
-      * the mirror image (r6 campaign 12's lesson): a stage whose
-        1-core/4-core ratio exceeds the core ratio by >10% — SUPER-
-        linear scaling is equally impossible and means the 1-CORE leg
-        was inflated (a co-tenant none of the other axes caught:
-        campaign 12's "clean" 0.935 round carried sketches at 4.77x);
-      * in-leg streaming bandwidth median below 0.8 GB/s (degraded
-        co-tenant windows measure 0.1-1.5 GB/s single-threaded; the
-        pipeline's own traffic never pushes the idle-parent sampler
-        that low on a quiet host);
-      * hypervisor steal above 5% of the leg's ticks.
-    """
+def _round_contention(st_lo: dict, st_hi: dict, core_ratio: float = 4.0) -> list[str]:
+    """Stages (>= 2 s) of one round that scale impossibly on quiet hardware:
+    slower at more cores (anti-scale), or sped up by more than 1.1 x the
+    core ratio (super-scale: the slow leg was slowed from outside)."""
     reasons = []
-    for k, v in (st_lo or {}).items():
-        hi = (st_hi or {}).get(k)
-        if hi is not None and v >= 2000 and hi > v * 1.05:
+    for k, lo in st_lo.items():
+        hi = st_hi.get(k)
+        if hi is not None and lo >= 2000 and hi > lo * 1.05:
             reasons.append(f"anti-scale:{k}")
-        if hi is not None and hi >= 2000 and v > hi * core_ratio * 1.1:
-            reasons.append(f"super-scale:{k}={round(v / hi, 2)}")
-    for tag, il in (("n", il_lo), ("4n", il_hi)):
-        if il and il.get("gbps_med", -1.0) >= 0 and il["gbps_med"] < 0.8:
-            reasons.append(f"inleg-bus:{tag}={il['gbps_med']}")
-        if il and il.get("steal_pct", -1.0) > 5.0:
-            reasons.append(f"steal:{tag}={il['steal_pct']}")
-        # in-VM CPU co-tenant: whole-VM busy cores far above the leg's
-        # own count (leg JVM + python workers + the sampler legitimately
-        # reach cores+2-ish; an 8-core job alongside a 1-core leg lands
-        # ~9-10).  Invisible to bus and steal — r6 observed a clean-
-        # labeled 1.34 pair produced exactly this way.
-        if il and il.get("busy_cores", -1.0) >= 0 and "cores" in il:
-            if il["busy_cores"] > il["cores"] + 3.0:
-                reasons.append(f"invm-cpu:{tag}={il['busy_cores']}")
+        if hi is not None and hi >= 2000 and lo > hi * core_ratio * 1.1:
+            reasons.append(f"super-scale:{k}={round(lo / hi, 2)}")
     return reasons
 
 
-def _scaling_summary(
-    walls, stage_ms, probes, cores_lo, cores_hi, n_clips, stage_rounds=None,
-    inleg=None,
-) -> dict:
-    t_lo, t_hi = _median(walls[cores_lo]), _median(walls[cores_hi])
-    eff = (t_lo / t_hi) / (cores_hi / cores_lo)
-    # min-of-legs pairs each core count's BEST window; because legs
-    # interleave, a healthy host window reaches both counts, so the min
-    # figure approximates dedicated hardware when degradation is
-    # intermittent (reported alongside, median stays the headline)
-    m_lo, m_hi = min(walls[cores_lo]), min(walls[cores_hi])
-    # best SAME-ROUND pair: both legs ran back-to-back in the same host
-    # window, so their ratio is the cleanest dedicated-hardware estimate
-    # this shared box can produce (median punishes mid-leg co-tenant
-    # collapses; min-legs pairs legs from different windows).
-    n_pairs = min(len(walls[cores_lo]), len(walls[cores_hi]))
-    best_round = max(
-        (walls[cores_lo][i] / walls[cores_hi][i]) / (cores_hi / cores_lo)
-        for i in range(n_pairs)
-    )
-    # a round is only credible if the host was usable while its legs
-    # ran — on BOTH axes.  The bus probe (stream_gbps) catches memory-
-    # bandwidth co-tenants; r6 campaign 2 showed it is not sufficient:
-    # rounds with a healthy bus (6.4 GB/s) but a CPU-contended host
-    # (tasks_per_sec 1871-2837 vs the 3600-4600 healthy range) produced
-    # garbage pairs in both directions (0.63 and an impossible 1.17).
-    # Validity therefore also requires the compute probe above 3000
-    # tasks/s.  (Retroactive note: this bar flips r6 campaign 1's label
-    # — its round-2 probe was 2996 — while the r6 final artifact's
-    # rounds sit at 4062, comfortably valid.)
-    gbps = [p["stream_gbps"] for p in probes if p["stream_gbps"] >= 0]
-    tps = [p["tasks_per_sec"] for p in probes if p["tasks_per_sec"] >= 0]
-    window_valid = (
-        bool(gbps) and min(gbps) >= 1.0 and bool(tps) and min(tps) >= 3000
-    )
-    # ... but in-leg samples, when present, SUPERSEDE the bus probe as
-    # the validity basis: probes bracket the legs, the sampler measures
-    # the leg minutes themselves.  Observed both failure directions:
-    # healthy probes around contended legs (campaign 3) and a 0.207
-    # GB/s probe between two rounds whose legs all sampled ~10 GB/s
-    # medians (the final dress run — the label wrongly invalidated
-    # in-leg-certified legs).  The CPU axis keeps using the probe
-    # (tasks/s has no in-leg equivalent; per-leg steal already feeds
-    # the round contention labels).
-    inleg_all = [
-        il
-        for arr in ((inleg or {}).get(cores_lo, []), (inleg or {}).get(cores_hi, []))
-        for il in arr
-        if il and il.get("gbps_med", -1.0) >= 0
-    ]
-    # per-round contention labels from IN-ROUND evidence (anti-scaled
-    # stages, in-leg bus samples, steal, in-VM busy cores) — the
-    # between-leg probes above certify the gaps, these certify the legs
-    # themselves.  The clean headline is the median same-round pair
-    # over uncontended rounds.
-    inleg = inleg or {}
-    rounds_detail = []
-    clean_effs = []
-    for i in range(n_pairs):
-        pair_eff = (walls[cores_lo][i] / walls[cores_hi][i]) / (cores_hi / cores_lo)
-        reasons = _round_contention(
-            ((stage_rounds or {}).get(cores_lo) or [None] * n_pairs)[i],
-            ((stage_rounds or {}).get(cores_hi) or [None] * n_pairs)[i],
-            (inleg.get(cores_lo) or [None] * n_pairs)[i],
-            (inleg.get(cores_hi) or [None] * n_pairs)[i],
-            core_ratio=cores_hi / cores_lo,
-        )
-        rounds_detail.append({"eff": round(pair_eff, 3), "contended": reasons})
-        if not reasons:
-            clean_effs.append(pair_eff)
-    basis = "probes"
-    if inleg_all and len(inleg_all) == 2 * n_pairs:
-        # The CPU axis normally keeps the between-leg probe (tasks/s
-        # has no direct in-leg equivalent) — but a SINGLE degraded gap
-        # probe must not invalidate rounds that all certified clean on
-        # the five in-round axes (anti/super-linear stage walls, in-leg
-        # bus, steal, in-VM busy cores): the final r6 dress run was
-        # wrongly invalidated by a 1888-tasks/s probe taken while a
-        # concurrent oracle check ran BETWEEN rounds.  A persistently
-        # CPU-sick window (EVERY probe < 3000 — the campaign-2 garbage-
-        # pair regime) still invalidates regardless of round labels.
-        all_rounds_clean = bool(rounds_detail) and all(
-            not r["contended"] for r in rounds_detail
-        )
-        cpu_ok = bool(tps) and (
-            min(tps) >= 3000 or (all_rounds_clean and max(tps) >= 3000)
-        )
-        window_valid = (
-            min(il["gbps_med"] for il in inleg_all) >= 1.0
-            and max(il.get("steal_pct", 0.0) for il in inleg_all) <= 5.0
-            and cpu_ok
-        )
-        basis = "inleg+rounds" if cpu_ok and min(tps) < 3000 else "inleg"
+def _scaling_summary(legs: dict[int, list[dict]], cores_lo: int, cores_hi: int) -> dict:
+    """Figures from the legs so far.  Host noise only ever slows a leg, so
+    the fastest leg per core count is the least disturbed estimate."""
+    lo, hi = legs[cores_lo], legs[cores_hi]
+    ratio = cores_hi / cores_lo
+    t_lo = min(leg["wall_sec"] for leg in lo)
+    t_hi = min(leg["wall_sec"] for leg in hi)
+    n = hi[0]["n_clips"]
+    flags = [_round_contention(a["stage_ms"], b["stage_ms"], ratio) for a, b in zip(lo, hi)]
     return {
-        "scaling_window_valid": window_valid,
-        "window_valid_basis": basis,
-        "min_inleg_gbps": round(min(il["gbps_med"] for il in inleg_all), 2)
-        if inleg_all else -1.0,
-        "min_stream_gbps": round(min(gbps), 3) if gbps else -1.0,
-        "min_tasks_per_sec": round(min(tps), 1) if tps else -1.0,
-        "n_clips": n_clips,
+        "value": round(n / t_hi, 2),
+        "scaling_efficiency": round(t_lo / t_hi / ratio, 3),
+        "recall": min(leg["recall"] for leg in hi),
+        "precision": min(leg["precision"] for leg in hi),
+        "rounds": len(flags),
+        "flagged_rounds": sum(1 for f in flags if f),
+        "n_clips": n,
         "cores_n": cores_lo,
         "cores_4n": cores_hi,
-        "wall_sec_n": round(t_lo, 2),
-        "wall_sec_4n": round(t_hi, 2),
-        "wall_samples_n": [round(x, 2) for x in walls[cores_lo]],
-        "wall_samples_4n": [round(x, 2) for x in walls[cores_hi]],
-        "host_probes": probes,
-        "clips_per_sec_n": round(n_clips / t_lo, 2),
-        "clips_per_sec_4n": round(n_clips / t_hi, 2),
-        "scaling_efficiency": round(eff, 3),
-        "scaling_efficiency_min_legs": round((m_lo / m_hi) / (cores_hi / cores_lo), 3),
-        "scaling_efficiency_best_round": round(best_round, 3),
-        "scaling_efficiency_clean": round(_median(clean_effs), 3) if clean_effs else -1.0,
-        "clean_rounds": f"{len(clean_effs)}/{n_pairs}",
-        "stage_ms_n": stage_ms.get(cores_lo, {}),
-        "stage_ms_4n": stage_ms.get(cores_hi, {}),
-        "stage_ms_rounds_n": (stage_rounds or {}).get(cores_lo, []),
-        "stage_ms_rounds_4n": (stage_rounds or {}).get(cores_hi, []),
-        "inleg_n": inleg.get(cores_lo, []),
-        "inleg_4n": inleg.get(cores_hi, []),
-        "rounds_detail": rounds_detail,
+        "clips_per_sec_n": round(n / t_lo, 2),
+        "wall_sec_n": [leg["wall_sec"] for leg in lo],
+        "wall_sec_4n": [leg["wall_sec"] for leg in hi],
+        "stage_ms_n": [leg["stage_ms"] for leg in lo],
+        "stage_ms_4n": [leg["stage_ms"] for leg in hi],
+        "round_flags": flags,
     }
 
 
-def bench_scaling(cores_hi: int, n_clips: int, rounds: int = 3, max_extra: int = 2,
-                  base_result: dict | None = None, reserve_sec: float = 0.0) -> dict:
-    """North-rule scaling evidence: the same pipeline on the same corpus
-    at N and 4N cores (the sandbox stand-in for N vs 4N executors).
-
-    Methodology (drift defenses, in response to the r1 host-noise
-    artifact): legs are INTERLEAVED (N, 4N, N, 4N, ...) so slow host
-    windows hit both core counts equally; each leg is a fresh JVM that
-    pre-reads the corpus into page cache, runs one full-size warmup
-    pass (AQE finalizes plans from runtime stats, so only a same-size
-    pass pre-compiles the plans the timed pass will run — see
-    pipeline_run), then times the second full pass; the headline figure
-    is the median leg per core count; samples implying super-linear
-    efficiency (> 1.05) are physically impossible here and trigger
-    extra rounds instead of being reported.
-
-    Deadline-aware: stops adding rounds (and shortens the pre-flight
-    bus-health wait) when the SPARK_GRAFT_BENCH_DEADLINE_SEC budget
-    would be exceeded; a best-so-far artifact is emitted after every
-    completed round via `emit()`.
-    """
-    if not _acquire_scaling_lock(reserve_sec):
-        raise RuntimeError("scaling lock held past the deadline window")
-    try:
-        return _bench_scaling_locked(cores_hi, n_clips, rounds, max_extra,
-                                     base_result, reserve_sec)
-    finally:
-        _release_scaling_lock()
-
-
-def _bench_scaling_locked(cores_hi, n_clips, rounds, max_extra,
-                          base_result, reserve_sec) -> dict:
-    from kmcp_spark.config import get_spark
-    from kmcp_spark.corpus import generate_clips
-
-    # size-suffixed path: two concurrent bench runs with different
-    # corpus sizes must never clobber each other's input mid-leg
-    # (observed: a watcher-launched 16k run regenerating the corpus
-    # while a 600-clip smoke leg was scanning it -> FileNotFound)
-    corpus_path = os.path.join(REPO, f"_bench_corpus_{n_clips}")
-    marker = os.path.join(corpus_path, "_N.json")
-    need = True
-    if os.path.exists(marker):
-        try:
-            need = json.load(open(marker))["n"] != n_clips
-        except Exception:
-            need = True
-    if need:
+def bench_scaling(cores_hi: int, n_clips: int, rounds: int, result: dict) -> None:
+    """Interleaved fresh-JVM legs at cores_lo and cores_hi; updates ``result``
+    and emits it after every round."""
+    corpus = os.path.join(REPO, f"_bench_corpus_{n_clips}")
+    if not os.path.exists(os.path.join(corpus + "_truth", "_SUCCESS")):
         log(f"generating bench corpus n={n_clips} ...")
-        spark = get_spark(app="bench_gen")
-        clips, _ = generate_clips(spark, n_clips, min_dur_s=1.0, max_dur_s=5.0)
-        shutil.rmtree(corpus_path, ignore_errors=True)
-        clips.write.parquet(corpus_path)
-        spark.stop()
-        json.dump({"n": n_clips}, open(marker, "w"))
-
-    # pre-flight: if a co-tenant is saturating the memory bus, every leg
-    # is garbage — wait (bounded by attempts AND the deadline) for a
-    # window with usable bandwidth
-    for attempt in range(6):
-        p = _host_probe()
-        if p["stream_gbps"] >= 1.0 or p["stream_gbps"] < 0:
-            break
-        if _remaining() - reserve_sec < 600:
-            log("  deadline near — skipping remaining pre-flight waits")
-            break
-        log(f"  host stream bandwidth {p['stream_gbps']} GB/s — degraded, waiting 60s "
-            f"(attempt {attempt + 1}/6)")
-        time.sleep(60)
-
+        _child(["--gen-corpus", str(n_clips), corpus])
     cores_lo = max(cores_hi // 4, 1)
-    walls: dict[int, list[float]] = {cores_lo: [], cores_hi: []}
-    stage_ms: dict[int, dict] = {}
-    stage_rounds: dict[int, list[dict]] = {}
-    inleg: dict[int, list[dict]] = {cores_lo: [], cores_hi: []}
-    probes: list[dict] = []
-    round_walls: list[float] = []
-    r = 0
-    while r < rounds:
-        # deadline check BEFORE committing to a round: a round costs
-        # roughly what the last one did (or an N+4N leg guess of 8 min
-        # when none has run yet)
-        est = round_walls[-1] if round_walls else 480.0
-        if r > 0 and _remaining() - reserve_sec < est * 1.15:
-            log(f"  deadline: {_remaining():.0f}s left (reserve {reserve_sec:.0f}s) "
-                f"< est round {est:.0f}s — stopping at {r} rounds")
+    legs: dict[int, list[dict]] = {cores_lo: [], cores_hi: []}
+    last = 0.0
+    for r in range(rounds):
+        if r and _remaining() < last:
+            log(f"deadline: {_remaining():.0f}s left < last round {last:.0f}s; stopping")
             break
-        rt0 = time.time()
-        probes.append(_host_probe())
+        t0 = time.time()
         for cores in (cores_lo, cores_hi):
-            payload = _one_leg(cores, corpus_path)
-            walls[cores].append(payload["wall_sec"])
-            stage_ms[cores] = payload["stage_ms"]
-            # per-round stage walls, both legs: the per-stage 1->4
-            # ratios are the attribution evidence (which stage eats the
-            # efficiency), and only same-round pairs are comparable
-            stage_rounds.setdefault(cores, []).append(payload["stage_ms"])
-            il = payload.get("inleg", {})
-            inleg[cores].append(il)
-            log(f"  round {r} local[{cores}]: {payload['wall_sec']:.1f}s "
-                f"({n_clips / payload['wall_sec']:.1f} clips/s, probe {probes[-1]}, "
-                f"inleg med {il.get('gbps_med', -1)} GB/s min {il.get('gbps_min', -1)} "
-                f"steal {il.get('steal_pct', -1)}%)")
-        round_walls.append(time.time() - rt0)
-        r += 1
-        summary = _scaling_summary(walls, stage_ms, probes, cores_lo, cores_hi, n_clips, stage_rounds, inleg)
-        if base_result is not None:  # rewrite the artifact after EVERY round
-            partial = dict(base_result)
-            partial.update(summary)
-            partial["value"] = summary["clips_per_sec_4n"]
-            emit(partial, phase=f"scaling_round_{r}")
-        eff = summary["scaling_efficiency"]
-        if r >= rounds and eff > 1.05 and r < rounds + max_extra and _remaining() > est * 1.15:
-            log(f"  super-linear eff {eff:.3f} — host noise, running an extra round")
-            rounds += 1
-    if not walls[cores_lo] or not walls[cores_hi]:
-        raise RuntimeError("no complete scaling round inside the deadline")
-    return _scaling_summary(walls, stage_ms, probes, cores_lo, cores_hi, n_clips, stage_rounds, inleg)
+            out = os.path.join(REPO, f"_bench_pipe_{n_clips}_{cores}")
+            try:
+                stdout = _child(["--pipeline-run", str(cores), corpus, out])
+            finally:
+                shutil.rmtree(out, ignore_errors=True)
+            leg = json.loads(stdout.splitlines()[-1])
+            legs[cores].append(leg)
+            log(f"round {r + 1} local[{cores}]: {leg['wall_sec']}s, recall "
+                f"{leg['recall']}, precision {leg['precision']}, stages {leg['stage_ms']}")
+        last = time.time() - t0
+        result.update(_scaling_summary(legs, cores_lo, cores_hi))
+        emit(result, phase=f"scaling_round_{r + 1}")
+
+
+# ---------------------------------------------------------------- queries
+
+def bench_queries(sf_dir: str, cores: int, result: dict) -> None:
+    """Time every driver query into ``result["queries"]`` (-1 on error),
+    emitting a best-so-far line after each."""
+    import __spark_entry__ as entrymod
+    from kmcp_spark.config import get_spark
+
+    spark = get_spark(app="bench_queries", cores=cores, shuffle_partitions=max(cores, 8))
+    for name, fn in entrymod.queries().items():
+        t0 = time.time()
+        try:
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            result["queries"][name] = round(time.time() - t0, 3)
+            log(f"  {name}: {result['queries'][name]}s")
+        except Exception as ex:  # report, don't die
+            log(f"  {name}: ERROR {ex}")
+            result["queries"][name] = -1.0
+        # each timing independent of the relations its predecessors persisted
+        spark.catalog.clearCache()
+        emit(_headline(result), phase=f"queries_{len(result['queries'])}")
+    spark.stop()
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--pipeline-run":
+    if sys.argv[1:2] == ["--pipeline-run"]:
         pipeline_run(int(sys.argv[2]), sys.argv[3], sys.argv[4])
+        return
+    if sys.argv[1:2] == ["--gen-corpus"]:
+        gen_corpus(int(sys.argv[2]), sys.argv[3])
         return
     signal.signal(signal.SIGTERM, _on_kill)
     signal.signal(signal.SIGINT, _on_kill)
@@ -741,69 +272,17 @@ def main() -> None:
     from kmcp_spark.config import _default_cores
 
     cores = _default_cores()
-    # default 16k clips keeps the unattended per-round bench inside the
-    # r1-proven ~15-20 min budget; the 32k fixed-overhead-amortized
-    # campaign (SPARK_GRAFT_BENCH_CLIPS=32000, 5 rounds) is recorded in
-    # BENCH/BASELINE.md — corpus size moved the measured efficiency by
-    # <0.1 because the binding constraint is the shared memory bus (see
-    # the data-plane attribution section there)
-    n_clips = int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "16000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
-
-    result = {
-        "metric": "clips_per_sec_4n(dedup pipeline, N vs 4N cores)",
-        "value": None,
-        "unit": "clips/sec",
-        "queries": {},
-        "sf": sf,
-        "total_query_sec": 0.0,
-    }
-    # SCALING RUNS FIRST (r5 lesson: the final r5 record carried a
-    # deadline scaling_error because three query-phase hours ate the
-    # budget and the last scaling leg hit the 120 s timeout floor).
-    # The headline metric gets the freshest budget; the query sweep
-    # runs after, inside a reserve the scaling phase never spends.
-    query_reserve = float(os.environ.get("SPARK_GRAFT_QUERY_RESERVE_SEC", "420"))
-    if os.environ.get("SPARK_GRAFT_ONLY_SCALING") == "1":
-        # no query sweep follows: reserving for it would stop scaling
-        # rounds early for nothing (observed: a 1400 s scaling-only run
-        # stopped at 1 round with 786 s left because of the reserve)
-        query_reserve = 0.0
+    result = {"metric": METRIC, "value": None, "unit": "clips/sec", "sf": sf, "queries": {}}
     if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        # scaling pair defaults to local[1] vs local[4]: this VM's
-        # memory bus caps every pair that loads it — 8->32 at 0.52,
-        # and end-to-end 2->8 at ~0.66-0.73 WORK-ONLY (r2 measured;
-        # the 2.1GB parquet scan + Arrow transfers saturate the
-        # contended bus at 8 cores even when the pure-CPU probe pair
-        # ceiling is 0.83-0.93).  At <=4 cores the pipeline's aggregate
-        # bandwidth demand stays under the healthy bus, so 1->4 is the
-        # only pair whose HARDWARE ceiling (0.84-0.87 measured by
-        # tools/host_probe.py) sits above the 0.8 target
-        scale_hi = int(os.environ.get("SPARK_GRAFT_SCALE_CORES", "4"))
-        rounds = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "3"))
         try:
-            scaling = bench_scaling(scale_hi, n_clips, rounds=rounds,
-                                    base_result=result, reserve_sec=query_reserve)
-            result.update(scaling)
-            result["value"] = scaling["clips_per_sec_4n"]
-        except Exception as ex:  # never lose the round artifact
-            log("scaling bench failed:", ex)
+            bench_scaling(cores, int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "16000")),
+                          int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "3")), result)
+        except Exception as ex:  # keep the rounds that completed
+            log("scaling bench failed:\n" + traceback.format_exc())
             result["scaling_error"] = str(ex)[:300]
-    if result.get("value") is None:
-        # scaling skipped or failed: the headline is the query total —
-        # relabel the WHOLE contract triple (metric+value+unit) so the
-        # artifact never says clips_per_sec while carrying seconds
-        result["metric"] = "total_query_sec"
-        result["unit"] = "sec"
-    if os.environ.get("SPARK_GRAFT_ONLY_SCALING") == "1":
-        qtimes = {}
-    else:
-        qtimes = bench_queries(sf_dir, cores, result=result)
-    result["queries"] = qtimes
-    result["total_query_sec"] = round(sum(v for v in qtimes.values() if v > 0), 2)
-    if result.get("value") is None:
-        result["value"] = result["total_query_sec"]
-    emit(result, phase="final")
+    bench_queries(sf_dir, cores, result)
+    emit(_headline(result), phase="final")
 
 
 if __name__ == "__main__":

@@ -51,14 +51,20 @@ def _write(df, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
+def _min_dur_gate(clips, cfg: PipelineConfig):
+    """F4: clips shorter than `min_dur_ms` are neither sketched nor searched
+    (kmcp gates queries the same way, `util-db-search.go:778-786`)."""
+    if cfg.sketch.min_dur_ms > 0:
+        clips = clips.filter(F.col("dur_ms") >= cfg.sketch.min_dur_ms)
+    return clips
+
+
 def cmd_compute(args) -> dict:
     from kmcp_spark.operators.sketch import sketch_clips
 
     spark = get_spark(app="kmcp_compute", cores=args.cores)
-    clips = spark.read.parquet(args.input)
     cfg = PipelineConfig()
-    if cfg.sketch.min_dur_ms > 0:
-        clips = clips.filter(F.col("dur_ms") >= cfg.sketch.min_dur_ms)
+    clips = _min_dur_gate(spark.read.parquet(args.input), cfg)
     _write(sketch_clips(clips, cfg), args.out_dir)
     from kmcp_spark.sources.tables import checkpoint_rows
 
@@ -84,7 +90,7 @@ def cmd_search(args) -> dict:
 
     spark = get_spark(app="kmcp_search", cores=args.cores)
     cfg = PipelineConfig()
-    q_clips = spark.read.parquet(args.query)
+    q_clips = _min_dur_gate(spark.read.parquet(args.query), cfg)
     q_sk = sketch_clips(q_clips, cfg)
     q_bands = band_buckets(q_sk, cfg.lsh.bands, cfg.lsh.rows_per_band).select(
         F.col("clip_id").alias("a"), "band_id", "band_hash"

@@ -243,6 +243,8 @@ def _flag_batch(
     bands_done = _is_committed(bands_dir, batch_id, sid)
     if flags_done and index_done and bands_done:
         return  # fully-committed replay (foreachBatch is at-least-once)
+    if cfg.sketch.min_dur_ms > 0:  # F4 gate, as in the batch pipeline
+        batch = batch.filter(F.col("dur_ms") >= cfg.sketch.min_dur_ms)
     sk_new = sketch_clips(batch, cfg).localCheckpoint(eager=True)
     bands_new = band_buckets(
         sk_new, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands

@@ -1,9 +1,8 @@
 """The driver captures only the last ~2000 chars of bench.py stdout and
-parses the LAST line as the round artifact.  Round 3's final line carried
-wall-sample / per-round-stage / host-probe arrays and blew past that
-budget (BENCH_r03.json: rc=0, parsed=null).  These tests pin the fix:
-bulky diagnostics go to BENCH/bench_side.json, the stdout line stays
-under bench.LINE_BUDGET even with every query + scaling field present.
+parses the LAST line as the round artifact.  These tests pin that line:
+under bench.LINE_BUDGET with every query and scaling field present, bulky
+per-leg detail in the side file, a metric/value/unit triple that agrees,
+and the scaling figures and round flags computed from the legs.
 """
 
 import io
@@ -13,51 +12,26 @@ import sys
 import bench
 import __spark_entry__ as entrymod
 
+_STAGES = ("exact_groups", "sketches", "candidates", "verified", "clusters")
+
+
+def _leg(wall, stage_ms=None, recall=1.0, precision=1.0):
+    return {"cores": 0, "n_clips": 16000, "wall_sec": wall,
+            "stage_ms": stage_ms or {s: 12345 for s in _STAGES},
+            "recall": recall, "precision": precision}
+
 
 def _worst_case_result():
-    # every registered query (plus headroom for future additions), full
-    # scaling summary, all bulky diagnostics attached
+    # every registered query (plus headroom for future additions), a
+    # scaling summary over many rounds, and a scaling error
     queries = {name: 123.456 for name in entrymod.queries()}
     for i in range(8):  # headroom: 8 more queries than exist today
         queries[f"future_query_with_a_long_name_{i}"] = 123.456
-    return {
-        "metric": "clips_per_sec_4n(dedup pipeline, N vs 4N cores)",
-        "value": 368.86,
-        "unit": "clips/sec",
-        "queries": queries,
-        "sf": 0.1,
-        "total_query_sec": 61.21,
-        "scaling_window_valid": True,
-        "min_stream_gbps": 6.035,
-        "n_clips": 16000,
-        "cores_n": 1,
-        "cores_4n": 4,
-        "wall_sec_n": 140.6,
-        "wall_sec_4n": 43.38,
-        "clips_per_sec_n": 113.8,
-        "clips_per_sec_4n": 368.86,
-        "scaling_efficiency": 0.81,
-        "scaling_efficiency_min_legs": 0.788,
-        "scaling_efficiency_best_round": 1.085,
-        "scaling_error": "x" * 300,
-        # bulky diagnostics that must be diverted to the side file
-        "wall_samples_n": [140.6, 188.23, 134.99] * 3,
-        "wall_samples_4n": [42.8, 43.38, 68.56] * 3,
-        "host_probes": [{"tasks_per_sec": 7384.07, "stream_gbps": 6.773}] * 9,
-        "stage_ms_n": {s: 12345 for s in
-                       ("exact_groups", "sketches", "candidates", "verified", "clusters")},
-        "stage_ms_4n": {s: 12345 for s in
-                        ("exact_groups", "sketches", "candidates", "verified", "clusters")},
-        "stage_ms_rounds_n": [{s: 12345 for s in ("a", "b", "c", "d", "e")}] * 9,
-        "stage_ms_rounds_4n": [{s: 12345 for s in ("a", "b", "c", "d", "e")}] * 9,
-        "scaling_efficiency_clean": 0.85,
-        "clean_rounds": "2/3",
-        "inleg_n": [{"samples": [[6.0, 5.4]] * 20, "gbps_min": 1.2,
-                     "gbps_med": 5.4, "steal_pct": 0.3}] * 9,
-        "inleg_4n": [{"samples": [[6.0, 5.4]] * 20, "gbps_min": 1.2,
-                      "gbps_med": 5.4, "steal_pct": 0.3}] * 9,
-        "rounds_detail": [{"eff": 0.81, "contended": ["anti-scale:verified"]}] * 9,
-    }
+    result = {"metric": bench.METRIC, "value": None, "unit": "clips/sec",
+              "sf": 0.1, "queries": queries, "scaling_error": "x" * 300}
+    legs = {1: [_leg(140.61)] * 9, 4: [_leg(43.38)] * 9}
+    result.update(bench._scaling_summary(legs, 1, 4))
+    return bench._headline(result)
 
 
 def test_final_line_fits_driver_tail_capture(monkeypatch, tmp_path):
@@ -72,20 +46,15 @@ def test_final_line_fits_driver_tail_capture(monkeypatch, tmp_path):
         f"final artifact line is {len(line)} chars; driver tail capture is ~2000"
     )
     parsed = json.loads(line)
-    # the driver contract fields survive the shrink
-    assert parsed["scaling_efficiency"] == 0.81
-    assert parsed["scaling_window_valid"] is True
-    assert parsed["queries"]
-    assert "metric" in parsed and "value" in parsed and "unit" in parsed
-    # bulky keys are NOT on the line
+    assert parsed["scaling_efficiency"] == round((140.61 / 43.38) / 4, 3)
+    assert parsed["recall"] == 1.0 and parsed["precision"] == 1.0
+    assert len(parsed["queries"]) == len(entrymod.queries()) + 8
+    assert parsed["metric"] == bench.METRIC and parsed["unit"] == "clips/sec"
+    # bulky keys are NOT on the line, but all of them are in the side file
+    side = json.load(open(tmp_path / "_bench_side.json"))
     for k in bench._SIDE_KEYS:
         assert k not in parsed
-    # ... but they are all in the side artifact
-    side = json.load(open(tmp_path / "BENCH" / "bench_side.json"))
-    for k in bench._SIDE_KEYS:
         assert k in side
-    # and the kill-safe mirror file holds the same compact line
-    assert json.loads(open(tmp_path / "_bench_partial.json").read()) == parsed
 
 
 def test_emit_without_scaling_fields(monkeypatch, tmp_path):
@@ -103,188 +72,59 @@ def test_emit_without_scaling_fields(monkeypatch, tmp_path):
 
 
 def test_fallback_contract_triple_is_consistent():
-    """r5 regression: when the scaling phase fails or is skipped, the
-    artifact must NOT carry the clips/sec metric name with a seconds
-    value — the whole metric/value/unit triple is relabeled."""
-    import os
-    import subprocess
-
-    env = dict(os.environ)
-    env["SPARK_GRAFT_SKIP_SCALING"] = "1"
-    env["SPARK_GRAFT_ONLY_SCALING"] = "1"  # no queries either: instant
-    r = subprocess.run(
-        [sys.executable, bench.__file__], capture_output=True, text=True,
-        env=env, timeout=120,
-    )
-    line = [ln for ln in r.stdout.splitlines() if ln.strip()][-1]
-    parsed = json.loads(line)
+    """When no scaling round completed, the line must NOT carry the
+    clips/sec metric name with a seconds value: the whole
+    metric/value/unit triple is relabelled to the query total."""
+    result = {"metric": bench.METRIC, "value": None, "unit": "clips/sec",
+              "sf": 0.1, "queries": {"a": 1.25, "b": 2.5, "c": -1.0}}
+    parsed = bench._headline(result)
     assert parsed["metric"] == "total_query_sec"
     assert parsed["unit"] == "sec"
-    assert parsed["value"] == parsed["total_query_sec"]
-    assert "clips_per_sec" not in parsed["metric"]
+    assert parsed["value"] == parsed["total_query_sec"] == 3.75
+    # a completed scaling round keeps the clips/sec headline
+    kept = bench._headline(dict(result, value=368.86))
+    assert (kept["metric"], kept["value"], kept["unit"]) == (bench.METRIC, 368.86, "clips/sec")
 
 
 def test_round_contention_labels():
-    """In-round evidence (anti-scaled stages, in-leg bus median, steal)
-    labels a round contended; a clean round carries no reasons.  This is
-    the codified r6-campaign-3 lesson: between-leg probes bracket the
-    legs, these signals certify them."""
+    """Stage walls that scale anti-linearly (slower at 4 cores) or
+    super-linearly (more than 1.1 x the core ratio) label a round."""
     clean = bench._round_contention(
         {"sketches": 60000, "verified": 3000},
         {"sketches": 17000, "verified": 2900},
-        {"gbps_med": 5.0, "steal_pct": 0.2},
-        {"gbps_med": 4.0, "steal_pct": 0.3},
     )
     assert clean == []
     bad = bench._round_contention(
         {"sketches": 95000, "verified": 3600},
         {"sketches": 30000, "verified": 5200},   # verified ANTI-scales
-        {"gbps_med": 0.5, "steal_pct": 9.0},     # bus collapsed + steal
-        {"gbps_med": 4.0, "steal_pct": 0.3},
     )
-    assert any(r.startswith("anti-scale:verified") for r in bad)
-    assert any(r.startswith("inleg-bus:n") for r in bad)
-    assert any(r.startswith("steal:n") for r in bad)
+    assert bad == ["anti-scale:verified"]
     # sub-2s stages are too short to discriminate: no anti-scale label
-    short = bench._round_contention({"clusters": 1500}, {"clusters": 2500}, None, None)
+    short = bench._round_contention({"clusters": 1500}, {"clusters": 2500})
     assert short == []
-    # SUPER-linear stage scaling means the 1-core leg was inflated (r6
-    # campaign 12: a "clean" 0.935 round carried sketches at 4.77x over
-    # a 4x core ratio — impossible on quiet hardware)
-    sup = bench._round_contention(
-        {"sketches": 97000}, {"sketches": 20300}, None, None, core_ratio=4.0
-    )
+    # SUPER-linear stage scaling means the 1-core leg was inflated
+    # (sketches at 4.78x over a 4x core ratio)
+    sup = bench._round_contention({"sketches": 97000}, {"sketches": 20300}, core_ratio=4.0)
     assert any(r.startswith("super-scale:sketches") for r in sup)
     # ... but ratios within 10% of the core ratio are legitimate
-    ok = bench._round_contention(
-        {"sketches": 80000}, {"sketches": 20000}, None, None, core_ratio=4.0
-    )
+    ok = bench._round_contention({"sketches": 80000}, {"sketches": 20000}, core_ratio=4.0)
     assert ok == []
 
 
-def test_scaling_summary_clean_rounds():
-    walls = {1: [90.0, 140.0], 4: [27.0, 60.0]}
-    stage_rounds = {
-        1: [{"sketches": 60000}, {"sketches": 95000, "verified": 3600}],
-        4: [{"sketches": 17000}, {"sketches": 30000, "verified": 5200}],
+def test_scaling_summary_min_estimator():
+    """Efficiency pairs the fastest leg of each core count, even from
+    different rounds; quality is the worst cores_hi leg's; a round with an
+    anti-scaled stage is flagged but still counted."""
+    legs = {
+        1: [_leg(90.0, {"sketches": 60000}), _leg(140.0, {"sketches": 95000, "verified": 3600})],
+        4: [_leg(30.0, {"sketches": 17000}, recall=0.998),
+            _leg(27.0, {"sketches": 30000, "verified": 5200}, precision=0.999)],
     }
-    inleg = {
-        1: [{"gbps_med": 5.0, "steal_pct": 0.1}, {"gbps_med": 0.5, "steal_pct": 9.0}],
-        4: [{"gbps_med": 4.0, "steal_pct": 0.2}, {"gbps_med": 0.4, "steal_pct": 8.0}],
-    }
-    probes = [{"stream_gbps": 5.0, "tasks_per_sec": 4100},
-              {"stream_gbps": 4.8, "tasks_per_sec": 4000}]
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, probes, 1, 4, 16000,
-                               stage_rounds, inleg)
-    assert s["clean_rounds"] == "1/2"
-    # the clean headline is the uncontended round's same-round pair only
-    assert s["scaling_efficiency_clean"] == round((90.0 / 27.0) / 4, 3)
-    assert s["rounds_detail"][0]["contended"] == []
-    assert s["rounds_detail"][1]["contended"]
-
-
-def test_run_leg_sampled_drains_pipes_and_samples(tmp_path):
-    """The sampler must drain the child's pipes (Spark logs overflow the
-    64 KB pipe buffer) and attach in-leg samples; the timeout path must
-    raise TimeoutExpired like subprocess.run did."""
-    import subprocess
-    import textwrap
-
-    child = tmp_path / "child.py"
-    child.write_text(textwrap.dedent("""\
-        import sys, time, json
-        for i in range(3000):
-            print("x" * 100, file=sys.stderr)   # ~300 KB >> pipe buffer
-        time.sleep(7)
-        print(json.dumps({"ok": 1}))
-    """))
-    cp, il = bench._run_leg_sampled([sys.executable, str(child)], timeout=60)
-    assert cp.returncode == 0
-    assert json.loads(cp.stdout.strip()) == {"ok": 1}
-    assert len(cp.stderr) > 200_000
-    assert len(il["samples"]) >= 1
-    assert il["gbps_med"] > 0
-    try:
-        bench._run_leg_sampled([sys.executable, "-c", "import time; time.sleep(60)"],
-                               timeout=7)
-        raise AssertionError("timeout not raised")
-    except subprocess.TimeoutExpired:
-        pass
-
-
-def test_window_validity_basis_prefers_inleg():
-    """In-leg samples supersede the bus probe for window validity:
-    a degraded probe BETWEEN rounds must not invalidate legs that all
-    sampled healthy during execution (and vice versa)."""
-    walls = {1: [80.0], 4: [27.0]}
-    stage_rounds = {1: [{"sketches": 60000}], 4: [{"sketches": 17000}]}
-    good_leg = {"gbps_med": 9.5, "gbps_min": 5.0, "steal_pct": 0.2}
-    bad_leg = {"gbps_med": 0.4, "gbps_min": 0.1, "steal_pct": 0.2}
-    # degraded probe + healthy in-leg -> valid on the inleg basis
-    probes = [{"stream_gbps": 0.2, "tasks_per_sec": 4000}]
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, probes, 1, 4, 16000,
-                               stage_rounds, {1: [good_leg], 4: [good_leg]})
-    assert s["scaling_window_valid"] is True
-    assert s["window_valid_basis"] == "inleg" and s["min_inleg_gbps"] == 9.5
-    # healthy probe + degraded in-leg -> INVALID on the inleg basis
-    probes = [{"stream_gbps": 6.0, "tasks_per_sec": 4000}]
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, probes, 1, 4, 16000,
-                               stage_rounds, {1: [good_leg], 4: [bad_leg]})
-    assert s["scaling_window_valid"] is False
-    assert s["window_valid_basis"] == "inleg"
-    # no in-leg data (old runs) -> probe basis unchanged
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, probes, 1, 4, 16000,
-                               stage_rounds, None)
-    assert s["scaling_window_valid"] is True
-    assert s["window_valid_basis"] == "probes"
-    # CPU axis still gates on the probe even with healthy in-leg bus
-    probes = [{"stream_gbps": 6.0, "tasks_per_sec": 2000}]
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, probes, 1, 4, 16000,
-                               stage_rounds, {1: [good_leg], 4: [good_leg]})
-    assert s["scaling_window_valid"] is False
-
-
-def test_window_validity_single_cpu_probe_dip_vs_sick_window():
-    """One degraded gap probe must not invalidate rounds that all
-    certified clean on the in-round axes (the r6 dress-run lesson: a
-    concurrent process between rounds sank one probe to 1888 tasks/s);
-    a window where EVERY probe is CPU-degraded (campaign 2's garbage-
-    pair regime) stays invalid, as does a dip alongside any contended
-    round."""
-    walls = {1: [80.0, 81.0], 4: [27.0, 27.5]}
-    clean_st = {1: [{"sketches": 60000}] * 2, 4: [{"sketches": 17000}] * 2}
-    leg = {"gbps_med": 9.5, "gbps_min": 5.0, "steal_pct": 0.2}
-    inleg = {1: [leg, leg], 4: [leg, leg]}
-    dip = [{"stream_gbps": 6.0, "tasks_per_sec": 4000},
-           {"stream_gbps": 6.0, "tasks_per_sec": 1888}]
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, dip, 1, 4, 16000,
-                               clean_st, inleg)
-    assert s["scaling_window_valid"] is True
-    assert s["window_valid_basis"] == "inleg+rounds"
-    # every probe degraded -> persistently sick window, invalid
-    sick = [{"stream_gbps": 6.0, "tasks_per_sec": 2400},
-            {"stream_gbps": 6.0, "tasks_per_sec": 2800}]
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, sick, 1, 4, 16000,
-                               clean_st, inleg)
-    assert s["scaling_window_valid"] is False
-    # dip + a contended round -> the relaxation does not apply
-    anti_st = {1: [{"sketches": 60000}, {"sketches": 60000}],
-               4: [{"sketches": 17000}, {"sketches": 65000}]}
-    s = bench._scaling_summary(walls, {1: {}, 4: {}}, dip, 1, 4, 16000,
-                               anti_st, inleg)
-    assert s["scaling_window_valid"] is False
-
-
-def test_invm_cpu_contention_label():
-    """An in-VM co-tenant burning cores leaves the bus and steal clean;
-    the whole-VM busy-core count during the leg is the only tell (r6:
-    an 8-core job alongside a 1-core leg produced a clean-labeled 1.34
-    pair before this check)."""
-    quiet = {"gbps_med": 9.0, "steal_pct": 0.1, "busy_cores": 2.1, "cores": 1}
-    crowded = {"gbps_med": 9.0, "steal_pct": 0.1, "busy_cores": 9.6, "cores": 1}
-    ok = bench._round_contention({"sketches": 60000}, {"sketches": 17000},
-                                 quiet, dict(quiet, cores=4, busy_cores=5.9))
-    assert ok == []
-    bad = bench._round_contention({"sketches": 60000}, {"sketches": 17000},
-                                  crowded, dict(quiet, cores=4))
-    assert any(r.startswith("invm-cpu:n=9.6") for r in bad)
+    s = bench._scaling_summary(legs, 1, 4)
+    assert s["scaling_efficiency"] == round((90.0 / 27.0) / 4, 3)
+    assert s["value"] == round(16000 / 27.0, 2)
+    assert s["clips_per_sec_n"] == round(16000 / 90.0, 2)
+    assert (s["recall"], s["precision"]) == (0.998, 0.999)
+    assert s["rounds"] == 2 and s["flagged_rounds"] == 1
+    assert s["round_flags"] == [[], ["anti-scale:verified"]]
+    assert s["wall_sec_n"] == [90.0, 140.0] and s["wall_sec_4n"] == [30.0, 27.0]

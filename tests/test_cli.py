@@ -5,6 +5,7 @@ check the chain finds exactly the planted clusters."""
 import os
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from kmcp_spark.cli import main
 from kmcp_spark.corpus import CLIPS_SCHEMA, make_rows
@@ -39,6 +40,23 @@ def test_cli_chain(spark, tmp_out):
         "--out-dir", hits, "--cores", "8",
     ])
     assert r["rows"] > 0
+    member = "clip_0000000041"
+    assert member in {x.query_id for x in spark.read.parquet(hits).collect()}
+
+    # F4 gate on queries: a 30 ms query is not searched, even when its
+    # bytes are a planted member's
+    short_q = os.path.join(tmp_out, "short_q")
+    short_hits = os.path.join(tmp_out, "short_hits")
+    (
+        spark.read.parquet(clips)
+        .filter(F.col("clip_id").isin(member, "clip_0000000042"))
+        .withColumn("dur_ms", F.when(F.col("clip_id") == member, 30).otherwise(F.col("dur_ms")))
+        .write.parquet(short_q)
+    )
+    main(["search", "--query", short_q, "--index", idx, "--sketches", sk,
+          "--out-dir", short_hits, "--cores", "8"])
+    got_q = {x.query_id for x in spark.read.parquet(short_hits).collect()}
+    assert got_q == {"clip_0000000042"}
 
     r = main([
         "profile", "--matches", hits, "--sketches", sk,

@@ -2,6 +2,8 @@
 floor, oversized-bucket escalation, weak-edge pruning, pointer-jumping
 CC convergence, and the matched_chunk_frac fix."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -46,7 +48,7 @@ def test_min_dur_gate_excludes_short_clips(spark, tmp_out):
     assert "clip_0000000001" not in ids and "clip_0000000000" in ids
 
     cfg_open = PipelineConfig(sketch=SketchConfig(min_dur_ms=0))
-    res2 = DedupPipeline(spark, cfg_open, tmp_out + "_open").run(clips)
+    res2 = DedupPipeline(spark, cfg_open, os.path.join(tmp_out, "open")).run(clips)
     ids2 = {r.clip_id for r in res2.clusters.select("clip_id").collect()}
     assert "clip_0000000001" in ids2
 

@@ -73,6 +73,18 @@ def test_streaming_neardup_flags_cross_batch(spark, tmp_out):
     streaming_neardup_flags(spark, in_dir, index, flags, ckpt, cfg)
     assert spark.read.parquet(flags).count() == len(expected)
 
+    # F4 gate, as in the batch pipeline: a 30 ms copy of a planted
+    # member is neither flagged nor indexed
+    short = make_rows(np.array([41]), min_dur_s=0.5, max_dur_s=0.8).assign(
+        clip_id="clip_short_41", dur_ms=30
+    )
+    spark.createDataFrame(
+        short.drop(columns=["cluster_id", "transform"]), schema=CLIPS_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(in_dir)
+    streaming_neardup_flags(spark, in_dir, index, flags, ckpt, cfg)
+    assert spark.read.parquet(flags).count() == len(expected)
+    assert spark.read.parquet(index).count() == 14
+
 
 def test_flag_batch_replay_is_idempotent(spark, tmp_out):
     """foreachBatch is at-least-once: re-running a batch_id whose sinks
