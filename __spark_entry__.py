@@ -794,16 +794,13 @@ def _clips_recall_precision(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB can re-derive the same metrics."""
     from pyspark.sql import functions as F
 
-    from kmcp_spark.operators.cluster import (
-        cluster_report,
-        connected_components,
-        prune_weak_edges,
-    )
+    from kmcp_spark.operators.cluster import cluster_report, connected_components
     from kmcp_spark.plans.pipeline import dup_pairs_from_clusters
 
     clips, truth, sk, verified = _clips_verified(spark)
-    edges = prune_weak_edges(verified, alpha=0.5)
-    labels = connected_components(edges, all_nodes=sk.select("clip_id"))
+    labels = connected_components(
+        verified, all_nodes=sk.select("clip_id"), prune_alpha=0.5
+    )
     pred = dup_pairs_from_clusters(cluster_report(labels))
     pred_path = _write_aux(pred, "clips_pred_pairs", ["a", "b"])
     truth_path = _write_aux(_truth_pairs(truth), "clips_truth_pairs", ["a", "b"])

@@ -132,12 +132,7 @@ def cmd_search(args) -> dict:
 
 
 def cmd_profile(args) -> dict:
-    from kmcp_spark.operators.cluster import (
-        cluster_report,
-        connected_components,
-        prune_weak_edges,
-        reassign_by_support,
-    )
+    from kmcp_spark.operators.cluster import cluster_report, connected_components
     from kmcp_spark.operators.report import write_reports
     from kmcp_spark.sources.tables import checkpoint_rows
 
@@ -170,17 +165,19 @@ def cmd_profile(args) -> dict:
         # discordance policy before resolution (operators/discordance):
         # e.g. --drop-class rerecording keeps each re-recording its own
         # cluster while label noise and ordinary duplicates merge.
-        # Applied before BOTH the CC edges and the EM support relation —
-        # a dropped edge must not pull its endpoint back in reassignment
+        # Applied before the resolver, so it filters BOTH the CC edges
+        # and the EM support relation — a dropped edge must not pull its
+        # endpoint back in reassignment
         from kmcp_spark.operators.discordance import filter_edges
 
         matches = filter_edges(matches, drop=drop)
-    edges = prune_weak_edges(matches, alpha=cfg.cc_prune_alpha)
     labels = connected_components(
-        edges, all_nodes=sk.select("clip_id"), max_iters=cfg.cc_max_iters
+        matches,
+        all_nodes=sk.select("clip_id"),
+        max_iters=cfg.cc_max_iters,
+        prune_alpha=cfg.cc_prune_alpha,
+        em_iters=cfg.em_reassign_iters,
     )
-    if cfg.em_reassign_iters > 0:
-        labels = reassign_by_support(labels, matches, iters=cfg.em_reassign_iters)
     clusters = cluster_report(labels)
     _write(clusters, args.out_dir + "/clusters")
     paths = write_reports(args.out_dir, clusters, matches)

@@ -3,7 +3,12 @@ analog — its 4-stage filter + EM loop resolves multi-mapped queries into
 final assignments, `kmcp/cmd/profile.go:761-2568`; our analog resolves
 verified dup pairs into duplicate clusters).
 
-Algorithm: iterative label propagation over the undirected pair graph.
+`connected_components` is the one resolver: weak-edge pruning ->
+components -> EM reassignment.  A graph of at most ``driver_max_edges``
+pairs is collected once and resolved in driver Python; a larger one
+runs the distributed chain below.
+
+Distributed CC: iterative label propagation over the undirected pair graph.
     label(v) <- min(label(v), min over neighbors label(u))   (hash-min)
     label(v) <- label(label(v))                              (pointer jump)
 implemented as a DataFrame join loop with
@@ -35,22 +40,121 @@ def connected_components(
     all_nodes: DataFrame | None = None,
     max_iters: int = 50,
     driver_max_edges: int = 100_000,
+    prune_alpha: float = 0.0,
+    em_iters: int = 0,
+    score_col: str = "containment",
 ) -> DataFrame:
-    """pairs(a,b) -> labels(clip_id, cluster_id) via hash-min propagation.
+    """pairs(a,b[,score]) -> labels(clip_id, cluster_id): the one cluster
+    resolver, prune -> connected components -> EM reassignment.
 
     ``all_nodes`` (one column ``clip_id``) adds singleton clusters for
     nodes with no edges; if None, only nodes appearing in pairs get rows.
+    ``prune_alpha > 0`` drops weak edges before CC (`prune_weak_edges`);
+    ``em_iters > 0`` then reassigns nodes over the UNPRUNED edges
+    (`reassign_by_support`).  Both read ``score_col``; with the defaults
+    the pairs need only ``a`` and ``b``.
 
-    Small-graph fast path: when the (already materialized) edge set has
-    at most ``driver_max_edges`` rows, a driver-side union-find resolves
-    components in one job + milliseconds of python instead of the
-    iterative join loop's ~2 jobs per round — the standard size-gated
+    Small-graph fast path: one bounded probe collects at most
+    ``driver_max_edges + 1`` pair rows.  At or under the cap, pruning,
+    union-find and the EM rounds all run in driver Python over that one
+    list (`_resolve_on_driver`), and the labels come back through one
+    ``createDataFrame`` — one collect (1–2 Spark jobs: the limit scans
+    partitions incrementally) instead of the distributed chain's
+    checkpoint, count and ~2 jobs per round, the standard size-gated
     switch of production CC implementations.  The bound is on EDGES
     (verified dup pairs), not input rows: 100k edges is ~10 MB on the
-    driver regardless of corpus size, and anything larger takes the
-    distributed hash-min + pointer-jumping loop below.  Both paths are
-    equivalence-tested (`test_cluster.py::test_cc_driver_and_loop_agree`).
+    driver regardless of corpus size.  Above the cap the distributed
+    chain runs: `prune_weak_edges`, the hash-min + pointer-jumping loop
+    (`_hash_min_labels`), then `reassign_by_support`.  Both paths are
+    equivalence-tested, weighted and unweighted
+    (`test_gates_and_escalation.py::test_cc_driver_and_loop_agree`).
     """
+    weighted = prune_alpha > 0 or em_iters > 0
+    cols = ["a", "b", score_col] if weighted else ["a", "b"]
+    rows = pairs.select(*cols).limit(driver_max_edges + 1).collect()
+    if len(rows) <= driver_max_edges:
+        labels = pairs.sparkSession.createDataFrame(
+            list(_resolve_on_driver(rows, prune_alpha, em_iters).items()),
+            "clip_id string, cluster_id string",
+        )
+        if all_nodes is None:
+            return labels
+        # labels is bounded by construction (<= 2*driver_max_edges
+        # nodes ~ 20 MB): broadcast it so the singleton fill-in is a
+        # map-side join — no shuffle of all_nodes
+        return (
+            all_nodes.select("clip_id")
+            .join(F.broadcast(labels), "clip_id", "left")
+            .select("clip_id", F.coalesce("cluster_id", F.col("clip_id")).alias("cluster_id"))
+        )
+    labels = _hash_min_labels(
+        prune_weak_edges(pairs, alpha=prune_alpha, score_col=score_col),
+        all_nodes,
+        max_iters,
+    )
+    if em_iters > 0:
+        labels = reassign_by_support(labels, pairs, score_col=score_col, iters=em_iters)
+    return labels
+
+
+def _resolve_on_driver(rows: list, alpha: float, em_iters: int) -> dict[str, str]:
+    """The distributed chain's driver twin over collected (a, b[, score])
+    rows: `prune_weak_edges`, union-find, then `reassign_by_support`,
+    with the same keep rule, min-member cluster ids and argmax/tie rules.
+
+    Scores are non-null (verified containment always is).  Every endpoint
+    gets a label; for ``alpha <= 1`` every node keeps its own best edge,
+    so this is the node set the distributed chain labels too.  Support
+    sums add in row order and Spark's in partition order, so the paths
+    can differ only when two supports tie to within float rounding.
+    """
+    parent: dict[str, str] = {}
+    for a, b, *_ in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+
+    kept = rows
+    if alpha > 0:
+        best: dict[str, float] = {}
+        for a, b, s in rows:
+            for v in (a, b):
+                best[v] = max(best.get(v, s), s)
+        kept = [(a, b, s) for a, b, s in rows if s >= alpha * min(best[a], best[b])]
+
+    def find(x: str) -> str:
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b, *_ in kept:
+        ra, rb = find(a), find(b)
+        if ra != rb:  # the smaller root wins: a root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    labels = {v: find(v) for v in parent}
+
+    for _ in range(em_iters):
+        # support[src][cluster] = summed score of src's edges into that cluster
+        support: dict[str, dict[str, float]] = {}
+        for a, b, s in rows:
+            for src, dst in ((a, b), (b, a)):
+                per = support.setdefault(src, {})
+                per[labels[dst]] = per.get(labels[dst], 0.0) + s
+        # argmax support, ties to the smaller cluster id
+        labels = {
+            v: min(support[v].items(), key=lambda kv: (-kv[1], kv[0]))[0] for v in labels
+        }
+    return labels
+
+
+def _hash_min_labels(
+    pairs: DataFrame, all_nodes: DataFrame | None, max_iters: int
+) -> DataFrame:
+    """The distributed hash-min + pointer-jumping loop described in the
+    module docstring, over pairs(a,b); ``all_nodes`` as in
+    `connected_components`."""
     from kmcp_spark.runtime import persistent_ids, unpersist_ids
 
     sc = pairs.sparkSession.sparkContext
@@ -59,54 +163,10 @@ def connected_components(
         .union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .distinct()
     )
+    # every round joins the edge relation: materialize it once
     ids0 = persistent_ids(sc)
     edges = edges.localCheckpoint(eager=True)
     edge_ids = persistent_ids(sc) - ids0
-    n_edges = edges.count()  # cheap: counts the checkpointed blocks
-
-    if n_edges <= driver_max_edges:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        rows = edges.collect()
-        unpersist_ids(sc, edge_ids)  # labels below are built from driver data
-        for row in rows:
-            a, b = row.src, row.dst
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        comp: dict[str, str] = {}
-        for node in parent:  # cluster_id = lexicographically-min member
-            r = find(node)
-            if r not in comp or node < comp[r]:
-                comp[r] = node
-        labels = pairs.sparkSession.createDataFrame(
-            [(n, comp[find(n)]) for n in parent],
-            "clip_id string, cluster_id string",
-        )
-        if all_nodes is not None:
-            # labels is bounded by construction (<= 2*driver_max_edges
-            # nodes ~ 20 MB): broadcast it so the singleton fill-in is a
-            # map-side join — no shuffle of all_nodes
-            labels = (
-                all_nodes.select("clip_id")
-                .join(F.broadcast(labels), "clip_id", "left")
-                .select(
-                    "clip_id",
-                    F.coalesce("cluster_id", F.col("clip_id")).alias("cluster_id"),
-                )
-            )
-        return labels
-
     labels = (
         edges.select(F.col("src").alias("clip_id"))
         .distinct()

@@ -12,9 +12,11 @@ Jaccard, then applies thresholds (`kmcp/cmd/util-db-search.go:90-92`,
   - signature-estimated Jaccard: fraction of equal MinHash positions,
     JVM-side ``zip_with`` + ``aggregate``.
   - SimHash Hamming: ``bit_count(a ^ b)`` — JVM-side.
-  - suffix-array longest-common-substring on transcripts: Arrow-batched
-    ``mapInPandas`` over the (few) surviving pairs.  This is the one
-    Python stage, and it runs only on verified-candidate volume.
+  - suffix-array longest-common-substring on transcripts: pairs with
+    equal transcripts take LCS(x, x) = |x| from the JVM's ``length``;
+    only pairs with UNEQUAL transcripts reach the Arrow-batched
+    ``mapInPandas`` LCS.  This is the one Python stage, and it runs only
+    on the unequal share of the plausible candidates.
 
 The dup verdict:  a pair is a near-duplicate iff
     containment >= min_containment
@@ -224,6 +226,18 @@ def verify_pairs(
         plausible.join(tr.withColumnRenamed("clip_id", "a").withColumnRenamed("transcript", "ta"), "a")
         .join(tr.withColumnRenamed("clip_id", "b").withColumnRenamed("transcript", "tb"), "b")
     )
+    # LCS(x, x) = |x|: equal transcripts get their answer on the JVM
+    # (`length` counts code points, as Python's `len` does) and cross the
+    # Arrow boundary as nulls, so only unequal pairs reach the Python
+    # LCS.  A null transcript compares null, so it keeps lcs_len = 0.
+    eq = F.col("ta") == F.col("tb")
+    withl = withl.withColumns(
+        {
+            "ta": F.when(eq, None).otherwise(F.col("ta")),
+            "tb": F.when(eq, None).otherwise(F.col("tb")),
+            "lcs_len": F.when(eq, F.length("ta")),
+        }
+    )
 
     out_schema = (
         "a string, b string, shared_bands bigint, n_common int, containment double, "
@@ -236,12 +250,12 @@ def verify_pairs(
         for pdf in batches:
             if not len(pdf):
                 continue
-            lcs = np.fromiter(
-                (suffix_array_lcs(x, y) for x, y in zip(pdf["ta"], pdf["tb"])),
-                dtype=np.int64,
-                count=len(pdf),
-            )
-            out = pdf.drop(columns=["ta", "tb"]).copy()
+            todo = pdf["lcs_len"].isna().to_numpy()
+            lcs = pdf["lcs_len"].fillna(0).to_numpy(dtype=np.int64)
+            lcs[todo] = [
+                suffix_array_lcs(x, y) for x, y in zip(pdf["ta"][todo], pdf["tb"][todo])
+            ]
+            out = pdf.drop(columns=["ta", "tb"])
             out["lcs_len"] = lcs
             yield out
 

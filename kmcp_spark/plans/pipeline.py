@@ -23,8 +23,7 @@ from kmcp_spark.config import PipelineConfig
 from kmcp_spark.operators.cluster import (
     cluster_report,
     connected_components,
-    prune_weak_edges,
-    reassign_by_support,
+    reassign_by_support,  # noqa: F401 -- perfbench/spans.py traces this name
 )
 from kmcp_spark.operators.lsh import band_buckets, bucket_stats, candidate_pairs
 from kmcp_spark.operators.sketch import sketch_clips
@@ -256,16 +255,13 @@ class DedupPipeline:
             # over-merge two dense clusters; EM-style reassignment over
             # the UNPRUNED edges (`profile.go:2075-2117`) then decides
             # final MEMBERSHIP by dominant accumulated support
-            edges = prune_weak_edges(verified, alpha=cfg.cc_prune_alpha)
             labels_rep = connected_components(
-                edges,
+                verified,
                 all_nodes=sketches.select("clip_id"),
                 max_iters=cfg.cc_max_iters,
+                prune_alpha=cfg.cc_prune_alpha,
+                em_iters=cfg.em_reassign_iters,
             )
-            if cfg.em_reassign_iters > 0:
-                labels_rep = reassign_by_support(
-                    labels_rep, verified, iters=cfg.em_reassign_iters
-                )
             # expand representative labels back over their exact groups
             full = exact.join(
                 labels_rep.withColumnRenamed("clip_id", "rep_id"), "rep_id"

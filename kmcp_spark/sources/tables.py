@@ -1,4 +1,4 @@
-"""Checkpoint-table IO and testdata loading.
+"""Checkpoint-table IO.
 
 Checkpoint tables are the resumability backbone (the analog of kmcp's
 file boundaries between compute / index / search / profile: each
@@ -17,21 +17,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(t)
 
 
 def _marker(path: str) -> str:

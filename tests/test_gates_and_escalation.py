@@ -255,9 +255,10 @@ def test_cc_raises_on_non_convergence(spark):
 
 
 def test_cc_driver_and_loop_agree(spark):
-    """The size-gated driver union-find and the distributed hash-min
-    loop must produce identical clusterings on a messy random graph
-    (multiple components, chains, a clique, singletons via all_nodes)."""
+    """The size-gated driver resolver and the distributed chain must
+    produce identical clusterings on a messy random graph (multiple
+    components, chains, a clique, singletons via all_nodes): plain CC,
+    and weighted with weak-edge pruning plus one EM round."""
     import random
 
     rng = random.Random(7)
@@ -278,6 +279,40 @@ def test_cc_driver_and_loop_agree(spark):
         ).collect()
     }
     assert fast == loop and len(fast) == 80
+
+    # dyadic weights: every support sum is exact, so the driver's
+    # row-order sums and Spark's partition-order sums tie identically
+    weighted = [(a, b, rng.choice((0.25, 0.5, 0.75, 1.0))) for a, b in edges]
+    weighted += [
+        # the bridge of test_prune_weak_edges_drops_bridge_keeps_best
+        ("a1", "a2", 1.0),
+        ("a2", "a3", 0.75),
+        ("b1", "b2", 1.0),
+        ("a3", "b1", 0.25),
+        ("c1", "c2", 0.25),
+        # the EM move of test_reassign_by_support_moves_to_dominant_cluster:
+        # x's best edge keeps it with A, but five pruned edges into the
+        # d-clique outweigh it (1.25 > 1.0)
+        ("a1", "x", 1.0),
+    ]
+    ds = [f"d{i}" for i in range(5)]
+    weighted += [(u, v, 1.0) for i, u in enumerate(ds) for v in ds[i + 1 :]]
+    weighted += [(d, "x", 0.25) for d in ds]
+    wpairs = spark.createDataFrame(weighted, "a string, b string, containment double")
+    names = sorted({v for a, b, _ in weighted for v in (a, b)} | {f"n{i:03d}" for i in range(80)})
+    wnodes = spark.createDataFrame([(v,) for v in names], "clip_id string")
+
+    def resolve(**kw):
+        out = connected_components(
+            wpairs, all_nodes=wnodes, prune_alpha=0.5, em_iters=1, **kw
+        )
+        return {r.clip_id: r.cluster_id for r in out.collect()}
+
+    fast, loop = resolve(), resolve(driver_max_edges=0)
+    assert fast == loop and len(fast) == len(names)
+    assert fast["a3"] == "a1" and fast["b1"] == fast["b2"] == "b1"
+    assert fast["c1"] == fast["c2"] == "c1"
+    assert fast["x"] == "d0"  # reassigned by support, not by connectivity
 
 
 # --------------------------------------------------- matched_chunk_frac
