@@ -42,45 +42,47 @@ def connected_components(
     driver_max_edges: int = 100_000,
     prune_alpha: float = 0.0,
     em_iters: int = 0,
-    score_col: str = "containment",
 ) -> DataFrame:
-    """pairs(a,b[,score]) -> labels(clip_id, cluster_id): the one cluster
+    """pairs(a,b[,containment]) -> labels(clip_id, cluster_id): the one cluster
     resolver, prune -> connected components -> EM reassignment.
 
     ``all_nodes`` (one column ``clip_id``) adds singleton clusters for
     nodes with no edges; if None, only nodes appearing in pairs get rows.
     ``prune_alpha > 0`` drops weak edges before CC (`prune_weak_edges`);
     ``em_iters > 0`` then reassigns nodes over the UNPRUNED edges
-    (`reassign_by_support`).  Both read ``score_col``; with the defaults
-    the pairs need only ``a`` and ``b``.
+    (`reassign_by_support`).  Both read the ``containment`` score; with
+    the defaults the pairs need only ``a`` and ``b``.
 
     Small-graph fast path: one bounded probe collects at most
-    ``driver_max_edges + 1`` pair rows.  At or under the cap, pruning,
-    union-find and the EM rounds all run in driver Python over that one
-    list (`_resolve_on_driver`), and the labels come back through one
-    ``createDataFrame`` — one collect (1–2 Spark jobs: the limit scans
-    partitions incrementally) instead of the distributed chain's
-    checkpoint, count and ~2 jobs per round, the standard size-gated
-    switch of production CC implementations.  The bound is on EDGES
-    (verified dup pairs), not input rows: 100k edges is ~10 MB on the
-    driver regardless of corpus size.  Above the cap the distributed
-    chain runs: `prune_weak_edges`, the hash-min + pointer-jumping loop
+    ``driver_max_edges // 2 + 1`` pair rows (each pair is two directed
+    edges, so the cap is on directed edges).  At or under the cap,
+    pruning, union-find and the EM rounds all run in driver Python over
+    that one list (`_resolve_on_driver`), and the labels come back
+    through one ``createDataFrame`` — one collect (1–2 Spark jobs: the
+    limit scans partitions incrementally) instead of the distributed
+    chain's checkpoint, count and ~2 jobs per round, the standard
+    size-gated switch of production CC implementations.  The bound is on
+    EDGES (verified dup pairs), not input rows: 100k directed edges is
+    ~10 MB on the driver regardless of corpus size.  Above the cap the
+    probe's rows are discarded and the distributed chain runs:
+    `prune_weak_edges`, the hash-min + pointer-jumping loop
     (`_hash_min_labels`), then `reassign_by_support`.  Both paths are
     equivalence-tested, weighted and unweighted
     (`test_gates_and_escalation.py::test_cc_driver_and_loop_agree`).
     """
     weighted = prune_alpha > 0 or em_iters > 0
-    cols = ["a", "b", score_col] if weighted else ["a", "b"]
-    rows = pairs.select(*cols).limit(driver_max_edges + 1).collect()
-    if len(rows) <= driver_max_edges:
+    cols = ["a", "b", "containment"] if weighted else ["a", "b"]
+    max_pairs = driver_max_edges // 2
+    rows = pairs.select(*cols).limit(max_pairs + 1).collect()
+    if len(rows) <= max_pairs:
         labels = pairs.sparkSession.createDataFrame(
             list(_resolve_on_driver(rows, prune_alpha, em_iters).items()),
             "clip_id string, cluster_id string",
         )
         if all_nodes is None:
             return labels
-        # labels is bounded by construction (<= 2*driver_max_edges
-        # nodes ~ 20 MB): broadcast it so the singleton fill-in is a
+        # labels is bounded by construction (<= driver_max_edges
+        # nodes ~ 10 MB): broadcast it so the singleton fill-in is a
         # map-side join — no shuffle of all_nodes
         return (
             all_nodes.select("clip_id")
@@ -88,17 +90,17 @@ def connected_components(
             .select("clip_id", F.coalesce("cluster_id", F.col("clip_id")).alias("cluster_id"))
         )
     labels = _hash_min_labels(
-        prune_weak_edges(pairs, alpha=prune_alpha, score_col=score_col),
+        prune_weak_edges(pairs, alpha=prune_alpha),
         all_nodes,
         max_iters,
     )
     if em_iters > 0:
-        labels = reassign_by_support(labels, pairs, score_col=score_col, iters=em_iters)
+        labels = reassign_by_support(labels, pairs, iters=em_iters)
     return labels
 
 
 def _resolve_on_driver(rows: list, alpha: float, em_iters: int) -> dict[str, str]:
-    """The distributed chain's driver twin over collected (a, b[, score])
+    """The distributed chain's driver twin over collected (a, b[, containment])
     rows: `prune_weak_edges`, union-find, then `reassign_by_support`,
     with the same keep rule, min-member cluster ids and argmax/tie rules.
 
@@ -256,6 +258,9 @@ def prune_weak_edges(
     orphan a genuine duplicate; what it removes are weak one-off bridges
     that would otherwise over-merge two dense clusters through a single
     borderline pair.  ``alpha=0`` disables pruning.
+
+    `_resolve_on_driver` applies the same keep rule to graphs under the
+    driver cap; a change to the rule here must be made there too.
     """
     if alpha <= 0:
         return pairs
@@ -300,6 +305,10 @@ def reassign_by_support(
     cluster rejoin it — the pruning decides graph connectivity, the
     reassignment decides final membership, exactly the stage-3/stage-4
     split of the reference profiler.
+
+    `_resolve_on_driver` runs the same rounds (sums, argmax, tie to the
+    smaller cluster id) for graphs under the driver cap; a change to the
+    rule here must be made there too.
     """
     from kmcp_spark.runtime import persistent_ids, unpersist_ids
 
