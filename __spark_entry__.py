@@ -290,8 +290,9 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
     """LSH bucket-cap semantics over a planted oversized bucket: a
     60-doc byte-identical class lands in ONE bucket per band (> cap 20),
     a 5-doc class stays under it.  The band relation is staged as an aux
-    table (the xxhash64 banding is not SQL-expressible; everything after
-    it is) and BOTH cap behaviors run from that same relation:
+    table (DuckDB has no Spark-compatible xxhash64, so the oracle cannot
+    recompute the band hashes; everything after them it can) and BOTH
+    cap behaviors run from that same relation:
 
       path='drop'      the shared ``lsh.bucket_pairs`` kernel — oversized
                        buckets are dropped outright (the document path);

@@ -87,7 +87,7 @@ def connected_components(
         return (
             all_nodes.select("clip_id")
             .join(F.broadcast(labels), "clip_id", "left")
-            .select("clip_id", F.coalesce("cluster_id", F.col("clip_id")).alias("cluster_id"))
+            .selectExpr("clip_id", "coalesce(cluster_id, clip_id) AS cluster_id")
         )
     labels = _hash_min_labels(
         prune_weak_edges(pairs, alpha=prune_alpha),
@@ -350,10 +350,10 @@ def cluster_report(labels: DataFrame) -> DataFrame:
     The canonical pick is the analog of kmcp profile's per-target
     reporting (representative + member stats, `kmcp/cmd/profile.go:2882`).
     """
-    w = Window.partitionBy("cluster_id")
-    return labels.select(
+    w = "OVER (PARTITION BY cluster_id)"
+    return labels.selectExpr(
         "clip_id",
         "cluster_id",
-        F.count("*").over(w).alias("cluster_size"),
-        (F.col("clip_id") == F.min("clip_id").over(w)).alias("is_canonical"),
+        f"count(*) {w} AS cluster_size",
+        f"clip_id = min(clip_id) {w} AS is_canonical",
     )

@@ -308,7 +308,8 @@ def doc_band_rows(
     """(doc_id, band_id, band_hash) band relation from minhash
     signatures — the shared front half of ``lsh_candidates``, exposed so
     the cap-semantics oracle can STAGE the band relation and have DuckDB
-    mirror everything downstream of the (non-SQL) xxhash64 banding.
+    mirror everything downstream of the xxhash64 banding (DuckDB has no
+    Spark-compatible xxhash64).
     Delegates to the single banding kernel (``lsh.band_rows``) so the
     document path can never desynchronize from the clip pipeline's."""
     return band_rows(signatures, bands, rows_per_band, "doc_id")

@@ -32,7 +32,7 @@ also counted into the metrics table (no silent caps).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def band_rows(src: DataFrame, bands: int, rows_per_band: int,
@@ -47,28 +47,24 @@ def band_rows(src: DataFrame, bands: int, rows_per_band: int,
     the staged skew-oracle tables derive from this exact expression.
     The band hash is computed JVM-side:
     ``xxhash64(band_id, slice(sig))`` — no Python in this stage at all.
+    The whole band array is one Spark SQL string, so building the plan
+    takes ~16 driver→JVM round trips; an unrolled Column tree of 32
+    bands took ~2.3k (110–170 ms a pass).
 
     ``sig_col``/``band_offset`` let domain-scoped signatures (text-only
     / audio-only MinHash, SketchConfig.domain_perm) reuse the same
     kernel under disjoint band_id ranges, so combined and domain bands
     coexist in one bucket table without key collisions.
     """
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band_offset + b).alias("band_id"),
-                F.xxhash64(
-                    F.lit(band_offset + b),
-                    F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    structs = ", ".join(
+        f"struct({band_offset + b} AS band_id, xxhash64({band_offset + b}, "
+        f"slice(`{sig_col}`, {b * rows_per_band + 1}, {rows_per_band})) AS band_hash)"
+        for b in range(bands)
     )
     return (
-        src.filter(F.col(sig_col).isNotNull())
-        .select(id_col, F.explode(band_structs).alias("band"))
-        .select(id_col, F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash"))
+        src.where(f"`{sig_col}` IS NOT NULL")
+        .selectExpr(f"`{id_col}`", f"explode(array({structs})) AS band")
+        .selectExpr(f"`{id_col}`", "band.band_id AS band_id", "band.band_hash AS band_hash")
     )
 
 
@@ -127,14 +123,14 @@ def _annotate(buckets: DataFrame, id_col: str) -> DataFrame:
     ReusedExchange); a sizes-aggregation + join + self-join shape
     measured 2-3 s more driver-serial work per leg.  Anchors no consumer
     reads are pruned from the window by Catalyst."""
-    w = Window.partitionBy("band_id", "band_hash")
-    return buckets.select(
+    w = "OVER (PARTITION BY band_id, band_hash)"
+    return buckets.selectExpr(
         "band_id",
         "band_hash",
-        id_col,
-        F.count("*").over(w).alias("bucket_size"),
-        F.min(id_col).over(w).alias("anchor_lo"),
-        F.max(id_col).over(w).alias("anchor_hi"),
+        f"`{id_col}`",
+        f"count(*) {w} AS bucket_size",
+        f"min(`{id_col}`) {w} AS anchor_lo",
+        f"max(`{id_col}`) {w} AS anchor_hi",
     )
 
 
@@ -147,23 +143,20 @@ def _expand(ann: DataFrame, max_bucket: int, id_col: str) -> DataFrame:
     window's spillable sort, never into an in-memory array).  The
     groupBy keys match the window partitioning, so no second exchange."""
     grouped = (
-        ann.filter((F.col("bucket_size") > 1) & (F.col("bucket_size") <= max_bucket))
+        ann.where(f"bucket_size > 1 AND bucket_size <= {max_bucket}")
         .groupBy("band_id", "band_hash")
-        .agg(F.collect_list(id_col).alias("members"))
+        .agg(F.expr(f"collect_list(`{id_col}`) AS members"))
     )
     return (
-        grouped.select("members", F.posexplode("members").alias("i", "ca"))
-        .select(
-            "ca",
-            F.explode(F.slice("members", F.col("i") + 2, F.size("members"))).alias("cb"),
-        )
+        grouped.selectExpr("members", "posexplode(members) AS (i, ca)")
+        .selectExpr("ca", "explode(slice(members, i + 2, size(members))) AS cb")
         # an id can appear twice in one bucket (e.g. streaming unions
         # bands_new with prior band tables and a clip is re-delivered);
         # such (x, x) rows are not pairs
-        .filter(F.col("ca") != F.col("cb"))
+        .where("ca != cb")
         # (least, greatest) so the nondeterministic collect_list order
         # never leaks into results
-        .select(F.least("ca", "cb").alias("a"), F.greatest("ca", "cb").alias("b"))
+        .selectExpr("least(ca, cb) AS a", "greatest(ca, cb) AS b")
     )
 
 
@@ -181,7 +174,7 @@ def bucket_pairs(
     return (
         _expand(_annotate(buckets, id_col), max_bucket, id_col)
         .groupBy("a", "b")
-        .agg(F.count("*").alias("shared_bands"))
+        .agg(F.expr("count(*) AS shared_bands"))
     )
 
 
@@ -219,28 +212,19 @@ def candidate_pairs(
 
     release_deferred(tag="lsh")
     over_rel = defer_unpersist(
-        ann.filter(F.col("bucket_size") > max_bucket).persist(
-            StorageLevel.MEMORY_AND_DISK
-        ),
+        ann.where(f"bucket_size > {max_bucket}").persist(StorageLevel.MEMORY_AND_DISK),
         tag="lsh",
     )
     escalated = (
-        over_rel.select(
-            "clip_id", F.explode(F.array("anchor_lo", "anchor_hi")).alias("anchor")
-        )
-        .filter(F.col("clip_id") != F.col("anchor"))
-        .select(
-            F.least("clip_id", "anchor").alias("a"),
-            F.greatest("clip_id", "anchor").alias("b"),
-        )
+        over_rel.selectExpr("clip_id", "explode(array(anchor_lo, anchor_hi)) AS anchor")
+        .where("clip_id != anchor")
+        .selectExpr("least(clip_id, anchor) AS a", "greatest(clip_id, anchor) AS b")
     )
     pairs = (
         _expand(ann, max_bucket, "clip_id")
         .union(escalated)
         .groupBy("a", "b")
-        .agg(F.count("*").alias("shared_bands"))
+        .agg(F.expr("count(*) AS shared_bands"))
     )
-    oversized = (
-        over_rel.select("band_id", "band_hash", "bucket_size").distinct()
-    )
+    oversized = over_rel.select("band_id", "band_hash", "bucket_size").distinct()
     return pairs, oversized

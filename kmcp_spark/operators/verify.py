@@ -105,66 +105,57 @@ def score_pairs(pairs: DataFrame, sketches: DataFrame, cfg: PipelineConfig) -> D
     """pairs(a,b,shared_bands) ⨝ sketches x2 -> scored pairs (JVM-only).
 
     Two shuffle joins on clip_id (sketches are pre-partitioned by the
-    caller so both joins reuse one exchange).
+    caller so both joins reuse one exchange).  The projection is Spark
+    SQL text: one py4j call per column instead of a Column tree built
+    call by call.
     """
     sk = sketches.select(
-        F.col("clip_id"),
-        F.col("codes_text"),
-        F.col("codes_audio"),
-        F.col("minhash"),
-        F.col("simhash"),
-        F.col("size"),
-        F.col("n_text"),
-        F.col("n_audio"),
+        "clip_id", "codes_text", "codes_audio", "minhash", "simhash", "size",
+        "n_text", "n_audio",
     )
-    a = sk.alias("ska")
-    b = sk.alias("skb")
     j = (
-        pairs.join(a, pairs["a"] == F.col("ska.clip_id"))
-        .join(b, pairs["b"] == F.col("skb.clip_id"))
+        pairs.join(sk.alias("ska"), F.expr("a = ska.clip_id"))
+        .join(sk.alias("skb"), F.expr("b = skb.clip_id"))
     )
-    it = F.size(F.array_intersect(F.col("ska.codes_text"), F.col("skb.codes_text")))
-    ia = F.size(F.array_intersect(F.col("ska.codes_audio"), F.col("skb.codes_audio")))
-    inter = it + ia  # domains are hash-disjoint: combined ∩ adds up
-    sz_a, sz_b = F.col("ska.size"), F.col("skb.size")
-    nt_a, nt_b = F.col("ska.n_text"), F.col("skb.n_text")
-    na_a, na_b = F.col("ska.n_audio"), F.col("skb.n_audio")
-    est_j = F.aggregate(
-        F.zip_with("ska.minhash", "skb.minhash", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.size("ska.minhash")
-    return j.select(
-        F.col("a"),
-        F.col("b"),
-        F.col("shared_bands"),
-        inter.alias("n_common"),
-        (inter / F.least(sz_a, sz_b)).alias("containment"),
-        (inter / F.greatest(sz_a, sz_b)).alias("tcov"),
-        (inter / (sz_a + sz_b - inter)).alias("jaccard"),
-        (it / F.greatest(nt_a + nt_b - it, F.lit(1))).alias("text_jaccard"),
-        (ia / F.greatest(na_a + na_b - ia, F.lit(1))).alias("audio_jaccard"),
-        F.least(na_a, na_b).alias("min_n_audio"),
-        F.least(nt_a, nt_b).alias("min_n_text"),
-        est_j.alias("est_jaccard"),
-        F.bit_count(F.col("ska.simhash").bitwiseXOR(F.col("skb.simhash"))).alias(
-            "simhash_hamming"
-        ),
+    it = "size(array_intersect(ska.codes_text, skb.codes_text))"
+    ia = "size(array_intersect(ska.codes_audio, skb.codes_audio))"
+    inter = f"({it} + {ia})"  # domains are hash-disjoint: combined ∩ adds up
+    containment = f"({inter} / least(ska.size, skb.size))"
+    est_j = (
+        "aggregate(zip_with(ska.minhash, skb.minhash, (x, y) -> CAST(x = y AS INT)),"
+        " 0, (acc, v) -> acc + v) / size(ska.minhash)"
+    )
+    return j.selectExpr(
+        "a",
+        "b",
+        "shared_bands",
+        f"{inter} AS n_common",
+        f"{containment} AS containment",
+        f"{inter} / greatest(ska.size, skb.size) AS tcov",
+        f"{inter} / (ska.size + skb.size - {inter}) AS jaccard",
+        f"{it} / greatest(ska.n_text + skb.n_text - {it}, 1) AS text_jaccard",
+        f"{ia} / greatest(ska.n_audio + skb.n_audio - {ia}, 1) AS audio_jaccard",
+        "least(ska.n_audio, skb.n_audio) AS min_n_audio",
+        "least(ska.n_text, skb.n_text) AS min_n_text",
+        f"{est_j} AS est_jaccard",
+        "bit_count(ska.simhash ^ skb.simhash) AS simhash_hamming",
         # X10: the reference's qCov -> sequence-similarity%% cubic model
         # (`kmcp/cmd/cov2simi.go:55`); qCov analog here = containment
-        _cov2simi_col(inter / F.least(sz_a, sz_b)).alias("similarity_pct"),
+        f"{_cov2simi_sql(containment)} AS similarity_pct",
     )
 
 
-def _cov2simi_col(q):
-    """Column form of kmcp's published cov->similarity cubic (X10)."""
-    s = (
-        F.lit(87.456)
-        + F.lit(26.410) * q
-        - F.lit(22.008) * q * q
-        + F.lit(7.325) * q * q * q
-    )
-    return F.round(F.least(F.greatest(s, F.lit(0.0)), F.lit(100.0)), 3)
+def _cov2simi_sql(q: str) -> str:
+    """SQL form of kmcp's published cov->similarity cubic (X10).  The
+    ``D`` suffix keeps the literals DOUBLE: bare ``87.456`` parses as a
+    DECIMAL in Spark SQL."""
+    s = f"87.456D + 26.41D * {q} - 22.008D * {q} * {q} + 7.325D * {q} * {q} * {q}"
+    return f"round(least(greatest({s}, 0.0D), 100.0D), 3)"
+
+
+def _dbl(x: float) -> str:
+    """A Spark SQL DOUBLE literal (``0.7`` alone would parse as DECIMAL)."""
+    return f"{float(x)!r}D"
 
 
 def min_bands_for_fpr(
@@ -205,37 +196,32 @@ def verify_pairs(
             cfg.lsh.bands, cfg.lsh.rows_per_band, v.null_jaccard, v.max_chance_fpr
         ),
     )
+    audio_path = (
+        f"(audio_jaccard >= {_dbl(v.min_domain_jaccard)}"
+        f" AND min_n_audio >= {v.min_domain_size})"
+    )
+    # one modality is (near-)identical and substantial: T4 (same audio,
+    # edited transcript) or T2/T3 (same transcript)
     domain_path = (
-        # one modality is (near-)identical and substantial: T4 (same
-        # audio, edited transcript) or T2/T3 (same transcript)
-        (
-            (F.col("audio_jaccard") >= v.min_domain_jaccard)
-            & (F.col("min_n_audio") >= v.min_domain_size)
-        )
-        | (
-            (F.col("text_jaccard") >= v.min_domain_jaccard)
-            & (F.col("min_n_text") >= v.min_domain_size)
-        )
+        f"({audio_path} OR (text_jaccard >= {_dbl(v.min_domain_jaccard)}"
+        f" AND min_n_text >= {v.min_domain_size}))"
     )
-    plausible = scored.filter(
-        (F.col("shared_bands") >= eff_min_bands)
-        & ((F.col("containment") >= v.min_containment) | domain_path)
+    plausible = scored.where(
+        f"shared_bands >= {eff_min_bands}"
+        f" AND (containment >= {_dbl(v.min_containment)} OR {domain_path})"
     )
-    tr = clips.select("clip_id", "transcript")
-    withl = (
-        plausible.join(tr.withColumnRenamed("clip_id", "a").withColumnRenamed("transcript", "ta"), "a")
-        .join(tr.withColumnRenamed("clip_id", "b").withColumnRenamed("transcript", "tb"), "b")
-    )
+    joined = plausible.join(
+        clips.selectExpr("clip_id AS a", "transcript AS ta"), "a"
+    ).join(clips.selectExpr("clip_id AS b", "transcript AS tb"), "b")
     # LCS(x, x) = |x|: equal transcripts get their answer on the JVM
     # (`length` counts code points, as Python's `len` does) and cross the
     # Arrow boundary as nulls, so only unequal pairs reach the Python
     # LCS.  A null transcript compares null, so it keeps lcs_len = 0.
-    eq = F.col("ta") == F.col("tb")
-    withl = withl.withColumns(
+    withl = joined.withColumns(
         {
-            "ta": F.when(eq, None).otherwise(F.col("ta")),
-            "tb": F.when(eq, None).otherwise(F.col("tb")),
-            "lcs_len": F.when(eq, F.length("ta")),
+            "ta": F.expr("CASE WHEN ta = tb THEN NULL ELSE ta END"),
+            "tb": F.expr("CASE WHEN ta = tb THEN NULL ELSE tb END"),
+            "lcs_len": F.expr("CASE WHEN ta = tb THEN length(ta) END"),
         }
     )
 
@@ -260,11 +246,7 @@ def verify_pairs(
             yield out
 
     verified = withl.mapInPandas(lcs_stage, schema=out_schema)
-    return verified.filter(
-        (F.col("simhash_hamming") <= v.max_simhash_hamming)
-        | (F.col("lcs_len") >= v.min_common_substring)
-        | (
-            (F.col("audio_jaccard") >= v.min_domain_jaccard)
-            & (F.col("min_n_audio") >= v.min_domain_size)
-        )
+    return verified.where(
+        f"simhash_hamming <= {v.max_simhash_hamming}"
+        f" OR lcs_len >= {v.min_common_substring} OR {audio_path}"
     )

@@ -17,7 +17,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kmcp_spark.config import PipelineConfig
 from kmcp_spark.operators.cluster import (
@@ -85,13 +85,7 @@ class DedupPipeline:
         self.metrics: list[StageMetric] = []
         os.makedirs(out_dir, exist_ok=True)
 
-    def _stage(
-        self,
-        name: str,
-        build,
-        partition_by: list[str] | None = None,
-        force: bool = False,
-    ) -> DataFrame:
+    def _stage(self, name: str, build, force: bool = False) -> DataFrame:
         path = os.path.join(self.out_dir, name)
         t0 = time.time()
         if not force and checkpoint_valid(path, self.fp):
@@ -100,9 +94,11 @@ class DedupPipeline:
             return df
         df = build()
         t_w = time.time()
-        write_checkpoint_data(df, path, partition_by)
+        write_checkpoint_data(df, path)
         t_post = time.time()
-        out = read_checkpoint(self.spark, path)
+        # the schema is the one just written: inferring it back would be
+        # one more Spark job (a footer read) and ~45 ms of driver time
+        out = read_checkpoint(self.spark, path, schema=df.schema)
         # rows_out from parquet footers: a count() here was one whole
         # extra Spark job per stage (5 jobs/run of pure fixed latency).
         # The same footer walk yields the per-partition lineage records
@@ -165,7 +161,7 @@ class DedupPipeline:
         # The predicate is a pushed-down parquet filter (no extra stage);
         # the gated count is recorded in the metrics file.
         if cfg.sketch.min_dur_ms > 0:
-            clips = clips.filter(F.col("dur_ms") >= cfg.sketch.min_dur_ms)
+            clips = clips.where(f"dur_ms >= {cfg.sketch.min_dur_ms}")
 
         # exact-duplicate short-circuit (T0 / byte-identical): one JVM
         # hash-agg groups identical (bytes, transcript) rows; only one
@@ -179,19 +175,14 @@ class DedupPipeline:
             # two independently-seeded xxhash64 passes = 128 bits of
             # content hash (birthday-safe at 10^12 rows) at ~10x the
             # throughput of md5 on the JVM
-            w = Window.partitionBy("h1", "h2")
-            return (
-                clips.select(
-                    "clip_id",
-                    F.xxhash64(F.lit(1), "bytes", "transcript").alias("h1"),
-                    F.xxhash64(F.lit(2), "bytes", "transcript").alias("h2"),
-                )
-                .withColumn("rep_id", F.min("clip_id").over(w))
-                .select("clip_id", "rep_id")
-            )
+            return clips.selectExpr(
+                "clip_id",
+                "xxhash64(1, bytes, transcript) AS h1",
+                "xxhash64(2, bytes, transcript) AS h2",
+            ).selectExpr("clip_id", "min(clip_id) OVER (PARTITION BY h1, h2) AS rep_id")
 
         exact = self._stage("exact_groups", build_exact, force=force)
-        reps = exact.filter(F.col("clip_id") == F.col("rep_id")).select("clip_id")
+        reps = exact.where("clip_id = rep_id").select("clip_id")
         rep_clips = clips.join(reps, "clip_id", "left_semi")
 
         sketches = self._stage(
@@ -264,7 +255,7 @@ class DedupPipeline:
             )
             # expand representative labels back over their exact groups
             full = exact.join(
-                labels_rep.withColumnRenamed("clip_id", "rep_id"), "rep_id"
+                labels_rep.selectExpr("clip_id AS rep_id", "cluster_id"), "rep_id"
             ).select("clip_id", "cluster_id")
             return cluster_report(full)
 

@@ -17,6 +17,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _marker(path: str) -> str:
@@ -89,11 +90,21 @@ def _iceberg_ident(path: str) -> str:
     return ".".join(safe)
 
 
-def read_checkpoint(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
+def read_checkpoint(
+    spark: SparkSession,
+    path: str,
+    fmt: str | None = None,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """A checkpoint table as a DataFrame.  ``schema``, when the caller
+    knows it (it just wrote the table), skips parquet schema inference —
+    a Spark job of its own per read; without it the schema is inferred
+    (a resumed stage knows nothing but the path)."""
     fmt = fmt or os.environ.get("SPARK_GRAFT_CHECKPOINT_FORMAT", "parquet")
     if fmt == "iceberg":
         return spark.read.table(_iceberg_ident(path))
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def partition_lineage(path: str) -> list[dict]:

@@ -251,10 +251,15 @@ def _flag_batch(
     )
     if not flags_done:
         # prior batches' band rows come from the persisted band table —
-        # the index is banded once, on arrival, never again
+        # the index is banded once, on arrival, never again.  Committed
+        # band and index tables were written from relations of the same
+        # schemas as bands_new / sk_new, so both reads take that schema
+        # instead of inferring it (a Spark job per read)
         prior_band_paths = _committed_paths(bands_dir, cur)
         buckets = (
-            bands_new.unionByName(spark.read.parquet(*prior_band_paths))
+            bands_new.unionByName(
+                spark.read.schema(bands_new.schema).parquet(*prior_band_paths)
+            )
             if prior_band_paths
             else bands_new
         )
@@ -269,7 +274,7 @@ def _flag_batch(
         )
         prior_index_paths = _committed_paths(index_dir, cur)
         sk_all = (
-            sk_new.unionByName(spark.read.parquet(*prior_index_paths))
+            sk_new.unionByName(spark.read.schema(sk_new.schema).parquet(*prior_index_paths))
             if prior_index_paths
             else sk_new
         )

@@ -77,11 +77,72 @@ def test_canonical_is_unique_per_cluster(result):
     assert per.filter(F.col("n_canon") != 1).count() == 0
 
 
+def _assert_same_rows(got, want):
+    assert got.schema == want.schema
+    assert got.count() == want.count()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
 def test_resume_skips_all_stages(spark, corpus, result):
-    _, out = result
+    res, out = result
     clips, _ = corpus
     res2 = DedupPipeline(spark, PipelineConfig(), out).run(clips)
     assert all(m.resumed for m in res2.metrics)
+    # a resumed stage infers its checkpoint's schema; the first run read
+    # the same files back with the schema it wrote
+    _assert_same_rows(res2.clusters, res.clusters)
+    _assert_same_rows(res2.verified, res.verified)
+
+
+@pytest.fixture(scope="module")
+def counted_run(spark, corpus, tmp_path_factory):
+    """One pass in a fresh directory under its own Spark job group,
+    recording the schema each stage's checkpoint is read back with."""
+    import kmcp_spark.plans.pipeline as P
+
+    out = str(tmp_path_factory.mktemp("pipe_jobs"))
+    clips, _ = corpus
+    read_with = {}
+    orig = P.read_checkpoint
+
+    def recording_read(spark_, path, *a, **k):
+        read_with[path] = k.get("schema")
+        return orig(spark_, path, *a, **k)
+
+    sc = spark.sparkContext
+    group = "test_pipeline_job_budget"
+    P.read_checkpoint = recording_read
+    sc.setJobGroup(group, group)
+    try:
+        DedupPipeline(spark, PipelineConfig(), out).run(clips)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        P.read_checkpoint = orig
+    return read_with, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_read_with_known_schema_matches_inference(spark, counted_run):
+    """Reading a stage back with the schema it was written with gives
+    the schema and rows that parquet inference gives."""
+    import os
+
+    from kmcp_spark.sources.tables import read_checkpoint
+
+    read_with, _ = counted_run
+    stages = {"exact_groups", "sketches", "candidates", "verified", "clusters"}
+    assert {os.path.basename(p) for p in read_with} == stages
+    for path, schema in read_with.items():
+        assert schema is not None, path
+        _assert_same_rows(
+            read_checkpoint(spark, path, schema=schema), read_checkpoint(spark, path)
+        )
+
+
+def test_pass_spark_job_budget(counted_run):
+    """One pass on the 240-clip corpus stays within 20 Spark jobs: a
+    re-added schema inference or count job per stage breaks this."""
+    _, n_jobs = counted_run
+    assert 0 < n_jobs <= 20, n_jobs
 
 
 def test_partition_lineage_records_every_stage_file(result):
