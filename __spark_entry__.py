@@ -630,9 +630,10 @@ def _snippet_rows(clips: DataFrame) -> DataFrame:
     vote must land on n//4 exactly."""
     import pandas as pd
 
-    from kmcp_spark.functions.audio import decode_pcm, encode_wav, resample_pcm
+    from kmcp_spark.config import SketchConfig
+    from kmcp_spark.functions.audio import decode_work_pcm, encode_wav
 
-    SR, HOP, FRAME = 16000, 160, 400
+    SR, HOP, FRAME = SketchConfig().sr_work, 160, 400
     schema = (
         "clip_id string, bytes binary, sr_hz int, dur_ms int, "
         "codec string, transcript string"
@@ -644,9 +645,8 @@ def _snippet_rows(clips: DataFrame) -> DataFrame:
             for cid, buf, sr, codec in zip(
                 pdf["clip_id"], pdf["bytes"], pdf["sr_hz"], pdf["codec"]
             ):
-                try:
-                    pcm = resample_pcm(decode_pcm(buf, codec), int(sr), SR)
-                except (NotImplementedError, ValueError):
+                pcm = decode_work_pcm(buf, codec, sr, SR)
+                if pcm is None:
                     continue  # lossy/corrupt clips yield no query row
                 n_frames = (len(pcm) - FRAME) // HOP + 1 if len(pcm) >= FRAME else 0
                 if n_frames < 24:

@@ -44,27 +44,19 @@ if __package__ in (None, ""):
 
 from pyspark.sql import functions as F
 
-from kmcp_spark.config import PipelineConfig, get_spark
+from kmcp_spark.config import PipelineConfig, VerifyConfig, get_spark
 
 
 def _write(df, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
-def _min_dur_gate(clips, cfg: PipelineConfig):
-    """F4: clips shorter than `min_dur_ms` are neither sketched nor searched
-    (kmcp gates queries the same way, `util-db-search.go:778-786`)."""
-    if cfg.sketch.min_dur_ms > 0:
-        clips = clips.filter(F.col("dur_ms") >= cfg.sketch.min_dur_ms)
-    return clips
-
-
 def cmd_compute(args) -> dict:
-    from kmcp_spark.operators.sketch import sketch_clips
+    from kmcp_spark.operators.sketch import min_dur_gate, sketch_clips
 
     spark = get_spark(app="kmcp_compute", cores=args.cores)
     cfg = PipelineConfig()
-    clips = _min_dur_gate(spark.read.parquet(args.input), cfg)
+    clips = min_dur_gate(spark.read.parquet(args.input), cfg)
     _write(sketch_clips(clips, cfg), args.out_dir)
     from kmcp_spark.sources.tables import checkpoint_rows
 
@@ -84,13 +76,13 @@ def cmd_index(args) -> dict:
 
 def cmd_search(args) -> dict:
     from kmcp_spark.operators.lsh import band_buckets
-    from kmcp_spark.operators.sketch import sketch_clips
-    from kmcp_spark.operators.verify import min_bands_for_fpr, score_pairs
+    from kmcp_spark.operators.sketch import min_dur_gate, sketch_clips
+    from kmcp_spark.operators.verify import score_pairs, shared_bands_floor
     from kmcp_spark.sources.tables import checkpoint_rows
 
     spark = get_spark(app="kmcp_search", cores=args.cores)
     cfg = PipelineConfig()
-    q_clips = _min_dur_gate(spark.read.parquet(args.query), cfg)
+    q_clips = min_dur_gate(spark.read.parquet(args.query), cfg)
     q_sk = sketch_clips(q_clips, cfg)
     q_bands = band_buckets(q_sk, cfg.lsh.bands, cfg.lsh.rows_per_band).select(
         F.col("clip_id").alias("a"), "band_id", "band_hash"
@@ -108,13 +100,7 @@ def cmd_search(args) -> dict:
         ["clip_id"]
     )
     scored = score_pairs(pairs, sk_all, cfg)
-    v = cfg.verify
-    floor = max(
-        v.min_shared_bands,
-        min_bands_for_fpr(
-            cfg.lsh.bands, cfg.lsh.rows_per_band, v.null_jaccard, v.max_chance_fpr
-        ),
-    )
+    floor = shared_bands_floor(cfg)
     hits = scored.filter(F.col("shared_bands") >= floor)
     if args.top:
         from pyspark.sql import Window
@@ -220,19 +206,14 @@ def cmd_filter(args) -> dict:
     (-f/--max-fpr, X9 math), optional top-N per query and keep-main
     score-gap — the same gates `search`/`profile` apply, exposed as a
     standalone relocatable step."""
-    from kmcp_spark.operators.verify import min_bands_for_fpr
+    from kmcp_spark.operators.verify import shared_bands_floor
     from kmcp_spark.sources.tables import checkpoint_rows
 
     spark = get_spark(app="kmcp_filter", cores=args.cores)
-    cfg = PipelineConfig()
+    cfg = PipelineConfig(verify=VerifyConfig(max_chance_fpr=args.max_fpr))
     m = spark.read.parquet(args.matches)
     qcol = "query_id" if "query_id" in m.columns else "a"
-    floor = max(
-        cfg.verify.min_shared_bands,
-        min_bands_for_fpr(
-            cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.verify.null_jaccard, args.max_fpr
-        ),
-    )
+    floor = shared_bands_floor(cfg)
     out = m.filter(
         (F.col("containment") >= args.min_query_cov)
         & (F.col("shared_bands") >= floor)

@@ -18,16 +18,18 @@ The input table carries opaque ``bytes`` plus typed metadata
     Stereo downmixes to mono for the feature path (below).
   - anything else (mp3/ogg/aac): STUBBED — lossy audio codecs genuinely
     need native libraries absent from this container; ``decode_pcm``
-    raises NotImplementedError and the operators flow the row through
-    as ``decode_ok=false``.  The Spark-side plumbing (schema, UDF
+    raises NotImplementedError and ``decode_work_pcm`` (the decode
+    contract every audio operator calls) flows the row through as
+    ``decode_ok=false``.  The Spark-side plumbing (schema, UDF
     signature, batch shape) is identical to the real paths.
 
 Spectral tokens: frames of ``frame_len`` samples with hop ``hop_len``;
 per frame, log-energies of ``n_bands`` rFFT bands are normalized by the
 frame's total energy (making tokens invariant to amplitude scaling —
 detection path T2 in FIXTURES.md §2) and quantized to ``quant_levels``;
-the per-band levels pack into one uint64 token per frame.  Token
-sequences then shingle like text (rolling n-gram hash).
+the per-band levels pack into one uint64 token per frame
+(``spectral_tokens_batch``, the one tokenizer).  Token sequences then
+shingle like text (rolling n-gram hash, ``select_shingles``).
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from __future__ import annotations
 import numpy as np
 
 from kmcp_spark.functions.hashing import hash_bytes_rolling
+from kmcp_spark.functions.minhash import minimizer_sketch, syncmer_sketch
 
 _U64 = np.uint64
 
@@ -65,6 +68,28 @@ def decode_pcm(data: bytes, codec: str) -> np.ndarray:
         "libraries are not installed); pcm_s16le, wav, and flac "
         "(functions/flac.py, subset) are supported"
     )
+
+
+def decode_work_pcm(
+    data: bytes, codec: str, sr_hz: int, sr_work: int
+) -> np.ndarray | None:
+    """The one audio decode contract: bytes -> float32 PCM at the working
+    rate ``sr_work`` (0 keeps the native rate), or None when the payload
+    cannot be decoded.
+
+    NotImplementedError (no decoder for this codec) and ValueError (the
+    decoder rejected a malformed payload: truncation, CRC mismatch,
+    spec-invalid stream, an invalid sample rate) both mean
+    ``decode_ok=false``: the row flows through, and a corrupt clip never
+    crashes a Spark task.  Resampling every clip to one working rate
+    keeps the same recording ingested at 8/16/44.1 kHz in one frame
+    geometry (FIXTURES.md T6; see :func:`resample_pcm`).
+    """
+    try:
+        pcm = decode_pcm(data, codec)
+        return resample_pcm(pcm, int(sr_hz), sr_work) if sr_work else pcm
+    except (NotImplementedError, ValueError):
+        return None
 
 
 def _decode_wav(data: bytes) -> np.ndarray:
@@ -240,54 +265,111 @@ def _wav_container(tag: int, sr_hz: int, block_align: int, bits: int,
     return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
 
 
-def spectral_tokens(
-    pcm: np.ndarray,
-    sr_hz: int,
+def spectral_tokens_batch(
+    pcms: list[np.ndarray],
+    srs: list[int],
     frame_ms: int = 25,
     hop_ms: int = 10,
     n_bands: int = 8,
     quant_levels: int = 8,
-) -> np.ndarray:
-    """PCM -> uint64 token per frame (amplitude-invariant quantized bands)."""
-    frame_len = max(int(sr_hz * frame_ms / 1000), 8)
-    hop_len = max(int(sr_hz * hop_ms / 1000), 4)
-    # float32 to match the batched kernel exactly (see
-    # spectral_shingle_hashes_batch — bandwidth-bound at scale)
-    x = np.asarray(pcm, dtype=np.float32)
-    if x.shape[0] < frame_len:
-        return np.empty(0, dtype=_U64)
-    n_frames = 1 + (x.shape[0] - frame_len) // hop_len
-    idx = np.arange(frame_len)[None, :] + hop_len * np.arange(n_frames)[:, None]
-    frames = x[idx] * np.hanning(frame_len).astype(np.float32)[None, :]
-    spec_c = np.fft.rfft(frames, axis=1)
-    spec = spec_c.real**2 + spec_c.imag**2  # (n_frames, nbins)
-    nbins = spec.shape[1]
-    edges = np.linspace(0, nbins, n_bands + 1).astype(int)
-    band_e = np.stack(
-        [spec[:, edges[b] : max(edges[b + 1], edges[b] + 1)].sum(axis=1) for b in range(n_bands)],
-        axis=1,
-    )
-    total = band_e.sum(axis=1, keepdims=True)
-    rel = band_e / np.maximum(total, 1e-30)  # amplitude cancels here
-    q = np.minimum((rel * quant_levels).astype(np.int64), quant_levels - 1)
-    # pack band levels into one token (levels <= 8 -> 3 bits/band)
+) -> list[np.ndarray]:
+    """PCM rows -> per row, one uint64 token per frame (amplitude-invariant
+    quantized bands).  The one audio tokenizer: every shingle path
+    (whole-clip sketch, chunk sketch) frames its audio here.
+
+    Rows are grouped by sample rate (same frame geometry); each group's
+    frames are stacked into matrices of at most ~1M float32 elements,
+    each transformed with ONE rfft + one quantization pass, then split
+    back per row.  Every frame is windowed, transformed and quantized on
+    its own, so a row's tokens do not depend on the rows batched with
+    it; stacking buys one large allocation + FFT per chunk instead of
+    per row — per-row allocation churn is what throttles scaling at high
+    core counts on page-fault-slow hosts.
+    """
+    out: list[np.ndarray] = [np.empty(0, dtype=_U64)] * len(pcms)
+    by_sr: dict[int, list[int]] = {}
+    for i, sr in enumerate(srs):
+        by_sr.setdefault(int(sr), []).append(i)
+    # bound the stacked frame matrix to ~1M float32 (4 MB): small enough
+    # that frames + rFFT output + band sums stay L2/L3-resident per task
+    # (the earlier 8M-element bound made every pass stream ~100 MB of
+    # working set through the shared memory bus, which capped 1→4-core
+    # scaling at ~0.5 on this host), large enough that each chunk still
+    # amortizes the FFT call over hundreds of frames
+    max_elems = 1_000_000
+    # (frame_len, hop_len, rows, frames per row) per stacked chunk
+    chunked: list[tuple[int, int, list[int], list[int]]] = []
+    for sr, rows in by_sr.items():
+        frame_len = max(int(sr * frame_ms / 1000), 8)
+        hop_len = max(int(sr * hop_ms / 1000), 4)
+        cur: list[int] = []
+        counts: list[int] = []
+        cur_elems = 0
+        for i in rows:
+            nf = max(1 + (len(pcms[i]) - frame_len) // hop_len, 0)
+            if cur and cur_elems + nf * frame_len > max_elems:
+                chunked.append((frame_len, hop_len, cur, counts))
+                cur, counts, cur_elems = [], [], 0
+            cur.append(i)
+            counts.append(nf)
+            cur_elems += nf * frame_len
+        if cur:
+            chunked.append((frame_len, hop_len, cur, counts))
     bits = max(int(np.ceil(np.log2(quant_levels))), 1)
-    tok = np.zeros(q.shape[0], dtype=_U64)
-    for b in range(n_bands):
-        tok = (tok << _U64(bits)) | q[:, b].astype(_U64)
-    return tok
+    for frame_len, hop_len, rows, counts in chunked:
+        total = sum(counts)
+        if total == 0:
+            continue
+        # float32 throughout: this kernel is memory-bandwidth-bound at
+        # high parallelism; halving element width nearly doubles
+        # aggregate throughput.  (Quantized band ratios are insensitive
+        # to the reduced precision.)
+        frames = np.empty((total, frame_len), dtype=np.float32)
+        pos = 0
+        for i, nf in zip(rows, counts):
+            if nf == 0:
+                continue
+            x = np.asarray(pcms[i], dtype=np.float32)
+            # strided view of the hopped frames — no int64 index matrix
+            # (the index gather cost 8 bytes of extra traffic per sample)
+            view = np.lib.stride_tricks.sliding_window_view(x, frame_len)[::hop_len]
+            frames[pos : pos + nf] = view[:nf]
+            pos += nf
+        frames *= np.hanning(frame_len).astype(np.float32)[None, :]
+        spec_c = np.fft.rfft(frames, axis=1)
+        spec = spec_c.real**2 + spec_c.imag**2  # (n_frames, nbins)
+        nbins = spec.shape[1]
+        edges = np.linspace(0, nbins, n_bands + 1).astype(int)
+        band_e = np.stack(
+            [
+                spec[:, edges[b] : max(edges[b + 1], edges[b] + 1)].sum(axis=1)
+                for b in range(n_bands)
+            ],
+            axis=1,
+        )
+        # amplitude cancels in the ratio to the frame's total energy
+        rel = band_e / np.maximum(band_e.sum(axis=1, keepdims=True), 1e-30)
+        q = np.minimum((rel * quant_levels).astype(np.int64), quant_levels - 1)
+        # pack band levels into one token (levels <= 8 -> 3 bits/band)
+        tok = np.zeros(q.shape[0], dtype=_U64)
+        for b in range(n_bands):
+            tok = (tok << _U64(bits)) | q[:, b].astype(_U64)
+        pos = 0
+        for i, nf in zip(rows, counts):
+            out[i] = tok[pos : pos + nf]
+            pos += nf
+    return out
 
 
-def spectral_shingle_hashes(
-    pcm: np.ndarray,
-    sr_hz: int,
+def select_shingles(
+    tok: np.ndarray,
     ngram: int = 4,
     select: str = "full",
     minimizer_w: int = 8,
     syncmer_s: int = 5,
-    **tok_kwargs,
 ) -> np.ndarray:
-    """PCM -> sorted distinct hashes of token n-grams (the audio shingle set).
+    """One row's tokens -> sorted distinct hashes of token n-grams (the
+    audio shingle set).
 
     ``select`` picks the down-sampling scheme over the positional n-gram
     hash stream, mirroring kmcp's sketch families
@@ -295,17 +377,12 @@ def spectral_shingle_hashes(
     "minimizer" keeps window minima (Roberts 2004), "syncmer" keeps
     closed syncmers (Edgar 2021).
     """
-    tok = spectral_tokens(pcm, sr_hz, **tok_kwargs)
     if tok.shape[0] < ngram:
         return np.empty(0, dtype=_U64)
     h = hash_bytes_rolling(tok, ngram)  # positional stream
     if select == "minimizer":
-        from kmcp_spark.functions.minhash import minimizer_sketch
-
         return minimizer_sketch(h, minimizer_w)
     if select == "syncmer":
-        from kmcp_spark.functions.minhash import syncmer_sketch
-
         return syncmer_sketch(h, syncmer_s)
     return np.unique(h)
 
@@ -322,115 +399,25 @@ def spectral_shingle_hashes_batch(
     n_bands: int = 8,
     quant_levels: int = 8,
 ) -> list[np.ndarray]:
-    """Batched variant of :func:`spectral_shingle_hashes`.
+    """PCM rows -> per row, the audio shingle set:
+    :func:`spectral_tokens_batch`, then :func:`select_shingles`."""
+    toks = spectral_tokens_batch(pcms, srs, frame_ms, hop_ms, n_bands, quant_levels)
+    return [select_shingles(t, ngram, select, minimizer_w, syncmer_s) for t in toks]
 
-    Rows are grouped by sample rate (same frame geometry); each group's
-    frames are stacked into ONE matrix and transformed with ONE rfft +
-    one quantization pass, then split back per row.  Identical output to
-    the per-row function (same windowing/quantization math), but ~one
-    large allocation + FFT per group instead of per row — per-row
-    allocation churn is what throttles scaling at high core counts on
-    page-fault-slow hosts.
-    """
-    n = len(pcms)
-    out: list[np.ndarray] = [np.empty(0, dtype=_U64)] * n
-    by_sr: dict[int, list[int]] = {}
-    for i, sr in enumerate(srs):
-        by_sr.setdefault(int(sr), []).append(i)
-    # bound the stacked frame matrix to ~1M float32 (4 MB): small enough
-    # that frames + rFFT output + band sums stay L2/L3-resident per task
-    # (the earlier 8M-element bound made every pass stream ~100 MB of
-    # working set through the shared memory bus, which capped 1→4-core
-    # scaling at ~0.5 on this host), large enough that each chunk still
-    # amortizes the FFT call over hundreds of frames
-    max_elems = 1_000_000
-    chunked: list[tuple[int, list[int]]] = []
-    for sr, rows in by_sr.items():
-        frame_len = max(int(sr * frame_ms / 1000), 8)
-        hop_len = max(int(sr * hop_ms / 1000), 4)
-        cur: list[int] = []
-        cur_elems = 0
-        for i in rows:
-            nf = max(1 + (len(pcms[i]) - frame_len) // hop_len, 0)
-            if cur and cur_elems + nf * frame_len > max_elems:
-                chunked.append((sr, cur))
-                cur, cur_elems = [], 0
-            cur.append(i)
-            cur_elems += nf * frame_len
-        if cur:
-            chunked.append((sr, cur))
-    for sr, rows in chunked:
-        frame_len = max(int(sr * frame_ms / 1000), 8)
-        hop_len = max(int(sr * hop_ms / 1000), 4)
-        # float32 throughout: this kernel is memory-bandwidth-bound at
-        # high parallelism; halving element width nearly doubles
-        # aggregate throughput.  (Quantized band ratios are insensitive
-        # to the reduced precision.)
-        window = np.hanning(frame_len).astype(np.float32)
-        counts = []
-        total = 0
-        for i in rows:
-            nf = (
-                1 + (len(pcms[i]) - frame_len) // hop_len
-                if len(pcms[i]) >= frame_len
-                else 0
-            )
-            counts.append(nf)
-            total += nf
-        if total == 0:
-            continue
-        frames = np.empty((total, frame_len), dtype=np.float32)
-        pos0 = 0
-        for ci, i in enumerate(rows):
-            nf = counts[ci]
-            if nf == 0:
-                continue
-            x = np.asarray(pcms[i], dtype=np.float32)
-            # strided view of the hopped frames — no int64 index matrix
-            # (the index gather cost 8 bytes of extra traffic per sample)
-            view = np.lib.stride_tricks.sliding_window_view(x, frame_len)[::hop_len]
-            frames[pos0 : pos0 + nf] = view[:nf]
-            pos0 += nf
-        frames *= window[None, :]
-        spec_c = np.fft.rfft(frames, axis=1)
-        spec = (spec_c.real**2 + spec_c.imag**2)
-        nbins = spec.shape[1]
-        edges = np.linspace(0, nbins, n_bands + 1).astype(int)
-        band_e = np.stack(
-            [
-                spec[:, edges[b] : max(edges[b + 1], edges[b] + 1)].sum(axis=1)
-                for b in range(n_bands)
-            ],
-            axis=1,
-        )
-        rel = band_e / np.maximum(band_e.sum(axis=1, keepdims=True), 1e-30)
-        q = np.minimum((rel * quant_levels).astype(np.int64), quant_levels - 1)
-        bits = max(int(np.ceil(np.log2(quant_levels))), 1)
-        tok = np.zeros(q.shape[0], dtype=_U64)
-        for b in range(n_bands):
-            tok = (tok << _U64(bits)) | q[:, b].astype(_U64)
-        # split token stream back per row and shingle
-        pos = 0
-        ci = 0
-        for i in rows:
-            c = counts[ci]
-            ci += 1
-            t = tok[pos : pos + c]
-            pos += c
-            if t.shape[0] < ngram:
-                continue
-            h = hash_bytes_rolling(t, ngram)
-            if select == "minimizer":
-                from kmcp_spark.functions.minhash import minimizer_sketch
 
-                out[i] = minimizer_sketch(h, minimizer_w)
-            elif select == "syncmer":
-                from kmcp_spark.functions.minhash import syncmer_sketch
-
-                out[i] = syncmer_sketch(h, syncmer_s)
-            else:
-                out[i] = np.unique(h)
-    return out
+def spectral_shingle_hashes(
+    pcm: np.ndarray,
+    sr_hz: int,
+    ngram: int = 4,
+    select: str = "full",
+    minimizer_w: int = 8,
+    syncmer_s: int = 5,
+    **tok_kwargs,
+) -> np.ndarray:
+    """One clip's audio shingle set: a batch of one."""
+    return spectral_shingle_hashes_batch(
+        [pcm], [sr_hz], ngram, select, minimizer_w, syncmer_s, **tok_kwargs
+    )[0]
 
 
 def _next_smooth(n: int) -> int:

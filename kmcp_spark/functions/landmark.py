@@ -38,8 +38,8 @@ def _log_spectrogram(
 ) -> np.ndarray:
     """Hann-windowed STFT log-power spectrogram, shape (n_frames, n_bins).
 
-    Same framing geometry as functions/audio.py::spectral_tokens so the
-    two audio paths share one time base (t_idx = frame index = hop_ms
+    Same framing geometry as functions/audio.py::spectral_tokens_batch
+    so the two audio paths share one time base (t_idx = frame index = hop_ms
     milliseconds).  Log-power because the peak threshold below is
     mean-relative: a per-clip gain g shifts every cell by 2·log10(g)
     and cancels — landmark sets are gain-invariant (FIXTURES.md T2).

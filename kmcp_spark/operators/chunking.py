@@ -26,13 +26,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kmcp_spark.config import PipelineConfig
-from kmcp_spark.functions.audio import decode_pcm, resample_pcm, spectral_tokens
-from kmcp_spark.functions.hashing import hash_bytes_rolling, splitmix64
+from kmcp_spark.functions.audio import select_shingles, spectral_tokens_batch
+from kmcp_spark.functions.hashing import splitmix64
 from kmcp_spark.functions.minhash import minhash_signatures
 from kmcp_spark.operators.lsh import band_rows, bucket_pairs
-
-_U64 = np.uint64
-_AUDIO_SALT = 0xA5D10  # same domain salt as the whole-clip sketch stage
+from kmcp_spark.operators.sketch import _AUDIO_SALT, decode_batch
 
 CHUNK_SKETCH_SCHEMA = (
     "clip_id string, chunk_idx int, n_chunks int, size bigint, "
@@ -68,64 +66,38 @@ def sketch_clips_chunked(
 ) -> DataFrame:
     """clips -> one sketch row per (clip, chunk) over audio shingles."""
     sk = cfg.sketch
+    frames_per_sec = 1000.0 / sk.hop_ms
+    chunk_frames = max(int(chunk_sec * frames_per_sec), sk.audio_ngram)
+    overlap_frames = int(overlap_sec * frames_per_sec)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
+            # the whole-clip sketch stage's decode and tokenizer, so
+            # chunk matches also cross sample rates
+            pcms, rates, oks = decode_batch(pdf, sk)
+            toks = spectral_tokens_batch(
+                pcms, rates, sk.frame_ms, sk.hop_ms, sk.n_bands, sk.quant_levels
+            )
             ids: list[str] = []
             idxs: list[int] = []
             totals: list[int] = []
             starts: list[int] = []
             ends: list[int] = []
-            oks: list[bool] = []
+            chunk_oks: list[bool] = []
             sets: list[np.ndarray] = []
-            # list-zip, not iterrows: iterrows builds a pandas Series per
-            # row (observed slow-path in r1); columns are pulled once
-            for cid, buf, sr, codec in zip(
-                pdf["clip_id"].tolist(),
-                pdf["bytes"].tolist(),
-                pdf["sr_hz"].tolist(),
-                pdf["codec"].tolist(),
-            ):
-                try:
-                    pcm = decode_pcm(buf, codec)
-                    if sk.sr_work:
-                        # same canonical-rate normalization as the
-                        # whole-clip sketch stage (operators/sketch.py)
-                        # so chunk matches also cross sample rates
-                        pcm = resample_pcm(pcm, int(sr), sk.sr_work)
-                    tok = spectral_tokens(
-                        pcm,
-                        sk.sr_work or int(sr),
-                        frame_ms=sk.frame_ms,
-                        hop_ms=sk.hop_ms,
-                        n_bands=sk.n_bands,
-                        quant_levels=sk.quant_levels,
-                    )
-                    ok = True
-                except (NotImplementedError, ValueError):
-                    tok, ok = np.empty(0, dtype=_U64), False
-                frames_per_sec = 1000.0 / sk.hop_ms
-                bounds = _chunk_bounds(
-                    len(tok),
-                    max(int(chunk_sec * frames_per_sec), sk.audio_ngram),
-                    int(overlap_sec * frames_per_sec),
-                )
+            for cid, tok, ok in zip(pdf["clip_id"].tolist(), toks, oks):
+                bounds = _chunk_bounds(len(tok), chunk_frames, overlap_frames)
                 for ci, (s, e) in enumerate(bounds):
-                    seg = tok[s:e]
-                    if len(seg) >= sk.audio_ngram:
-                        h = np.unique(hash_bytes_rolling(seg, sk.audio_ngram))
-                        h = splitmix64(h, seed=_AUDIO_SALT)
-                    else:
-                        h = np.empty(0, dtype=_U64)
+                    h = select_shingles(tok[s:e], sk.audio_ngram)
                     ids.append(cid)
                     idxs.append(ci)
                     totals.append(len(bounds))
                     starts.append(s)
                     ends.append(e)
-                    oks.append(ok)
-                    sets.append(np.unique(h))
+                    chunk_oks.append(ok)
+                    sets.append(np.unique(splitmix64(h, seed=_AUDIO_SALT)))
             sig = minhash_signatures(sets, sk.num_perm, sk.master_seed)
             yield pd.DataFrame(
                 {
@@ -137,7 +109,7 @@ def sketch_clips_chunked(
                     "end_frame": np.array(ends, dtype=np.int32),
                     "codes": [s.view(np.int64) for s in sets],
                     "minhash": list(sig.view(np.int64)),
-                    "decode_ok": np.array(oks, dtype=bool),
+                    "decode_ok": np.array(chunk_oks, dtype=bool),
                 }
             )
 

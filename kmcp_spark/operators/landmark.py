@@ -37,25 +37,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kmcp_spark.functions.audio import decode_pcm, resample_pcm
+from kmcp_spark.config import SketchConfig
+from kmcp_spark.functions.audio import decode_work_pcm
 from kmcp_spark.functions.landmark import landmark_hashes
 
 LANDMARK_SCHEMA = "clip_id string, lhash bigint, t_idx int"
 
 
-def clip_landmarks(
-    clips: DataFrame,
-    sr_work: int = 16000,
-    **kernel_kwargs,
-) -> DataFrame:
+def clip_landmarks(clips: DataFrame, **kernel_kwargs) -> DataFrame:
     """clips -> (clip_id, lhash, t_idx) landmark postings.
 
     Decode failures flow through as zero landmarks for the clip (the
-    decode_ok=false contract of operators/sketch.py — a lossy/corrupt
-    clip must never crash the task); ``sr_work`` re-uses the sketch
-    stage's canonical-rate normalization so cross-sample-rate duplicate
-    pairs (FIXTURES.md T6) land on one frame geometry.
+    decode_ok=false contract of ``decode_work_pcm`` — a lossy/corrupt
+    clip must never crash the task); clips are framed at the sketch
+    stage's working rate (``SketchConfig.sr_work``) so cross-sample-rate
+    duplicate pairs (FIXTURES.md T6) land on one frame geometry.
     """
+    sr_work = SketchConfig().sr_work
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -65,15 +63,10 @@ def clip_landmarks(
             for cid, buf, sr, codec in zip(
                 pdf["clip_id"], pdf["bytes"], pdf["sr_hz"], pdf["codec"]
             ):
-                try:
-                    pcm = decode_pcm(buf, codec)
-                    if sr_work:
-                        pcm = resample_pcm(pcm, int(sr), sr_work)
-                except (NotImplementedError, ValueError):
+                pcm = decode_work_pcm(buf, codec, sr, sr_work)
+                if pcm is None:
                     continue
-                h, t = landmark_hashes(
-                    pcm, sr_work if sr_work else int(sr), **kernel_kwargs
-                )
+                h, t = landmark_hashes(pcm, sr_work, **kernel_kwargs)
                 if h.size:
                     ids.extend([cid] * h.size)
                     hs.append(h)

@@ -1,161 +1,21 @@
-"""Multimodal column operators: opaque ``binary`` payloads + typed
-metadata, processed with Arrow-batched ``mapInPandas``.
+"""Image column operators: opaque ``binary`` payloads processed with
+Arrow-batched ``mapInPandas``.
 
-Audio decode + feature extraction are REAL (stdlib/numpy WAV + PCM16),
-and image decode is REAL for PNG/BMP/PPM and baseline-sequential JPEG
+Image decode is REAL for PNG/BMP/PPM and baseline-sequential JPEG
 (pure numpy/stdlib codecs, ``functions/image.py`` + ``functions/
 jpeg.py``) feeding dHash fingerprinting + near-dup pairing.  The
-remaining honest stubs are lossy audio codecs that genuinely need
-native libraries absent from this container (MP3/OGG/AAC — FLAC is
-real as of r5, ``functions/flac.py``) plus the
-non-baseline JPEG modes (progressive, arithmetic, 12-bit) — all
-clearly marked, all landing as ``decode_ok=False`` rather than
-crashing, and the Spark-side plumbing (schema, partitioning, UDF
-signature, Arrow batch shape) is identical to the real paths.
+non-baseline JPEG modes (progressive, arithmetic, 12-bit) and unknown
+containers land as ``decode_ok=False`` rather than crashing.  Audio
+payloads go through ``functions/audio.py::decode_work_pcm`` instead.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-
-from kmcp_spark.functions.audio import decode_pcm, spectral_tokens
-
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, n_samples bigint, rms double, peak double, "
-    "zero_crossings bigint, n_frames bigint, dominant_band int, decode_ok boolean"
-)
-
-
-def audio_features(clips: DataFrame) -> DataFrame:
-    """Real feature extraction over the audio binary column."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # list-zip, not iterrows (no per-row Series construction)
-            for cid, buf, sr, codec in zip(
-                pdf["clip_id"].tolist(),
-                pdf["bytes"].tolist(),
-                pdf["sr_hz"].tolist(),
-                pdf["codec"].tolist(),
-            ):
-                try:
-                    pcm = decode_pcm(buf, codec)
-                    tok = spectral_tokens(pcm, int(sr))
-                    zc = int(((pcm[:-1] * pcm[1:]) < 0).sum()) if len(pcm) > 1 else 0
-                    rows.append(
-                        dict(
-                            clip_id=cid,
-                            n_samples=len(pcm),
-                            rms=float(np.sqrt(np.mean(pcm**2))) if len(pcm) else 0.0,
-                            peak=float(np.abs(pcm).max()) if len(pcm) else 0.0,
-                            zero_crossings=zc,
-                            n_frames=len(tok),
-                            dominant_band=int(tok[0] & np.uint64(7)) if len(tok) else -1,
-                            decode_ok=True,
-                        )
-                    )
-                except (NotImplementedError, ValueError):
-                    rows.append(
-                        dict(
-                            clip_id=cid, n_samples=0, rms=0.0, peak=0.0,
-                            zero_crossings=0, n_frames=0, dominant_band=-1,
-                            decode_ok=False,
-                        )
-                    )
-            yield pd.DataFrame(rows)
-
-    cols = ["clip_id", "bytes", "sr_hz", "codec"]
-    return clips.select(*cols).mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def frame_sample(clips: DataFrame, every_ms: int = 500, max_frames: int = 16) -> DataFrame:
-    """Sample short PCM windows every ``every_ms`` — the audio analog of
-    video frame-sampling.  One row in → up to ``max_frames`` rows out
-    (UDTF shape, like the reference's record Slider
-    `kmcp/cmd/compute.go:706-727`).  Window bytes are re-emitted as
-    binary so downstream stages treat frames as first-class media rows.
-    """
-    schema = "clip_id string, frame_idx int, t_ms int, frame_bytes binary, frame_rms double"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, buf, sr, codec in zip(
-                pdf["clip_id"].tolist(),
-                pdf["bytes"].tolist(),
-                pdf["sr_hz"].tolist(),
-                pdf["codec"].tolist(),
-            ):
-                try:
-                    pcm = decode_pcm(buf, codec)
-                except (NotImplementedError, ValueError):
-                    continue
-                sr = int(sr)
-                step = max(int(sr * every_ms / 1000), 1)
-                win = max(int(sr * 0.1), 1)  # 100 ms windows
-                for k, s0 in enumerate(range(0, len(pcm), step)):
-                    if k >= max_frames:
-                        break
-                    w = pcm[s0 : s0 + win]
-                    rows.append(
-                        dict(
-                            clip_id=cid,
-                            frame_idx=k,
-                            t_ms=int(s0 / sr * 1000),
-                            frame_bytes=(np.clip(w, -1, 1) * 32767).astype("<i2").tobytes(),
-                            frame_rms=float(np.sqrt(np.mean(w**2))) if len(w) else 0.0,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["clip_id", "frame_idx", "t_ms", "frame_bytes", "frame_rms"],
-            )
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(run, schema=schema)
-
-
-# ----------------------------------------------------------- image/video
-
-IMAGE_FEATURES_SCHEMA = (
-    "item_id string, width int, height int, mean_luma double, decode_ok boolean"
-)
-
-
-def image_features(items: DataFrame, id_col: str = "item_id", bytes_col: str = "bytes") -> DataFrame:
-    """REAL image feature extraction over the binary column.
-
-    PNG/BMP/PPM/baseline-JPEG decode is pure numpy/stdlib
-    (``functions/image.py``, ``functions/jpeg.py``); unsupported JPEG
-    modes (progressive, arithmetic, 12-bit) and unknown containers land
-    as ``decode_ok=False`` flow-through."""
-    from kmcp_spark.functions.image import decode_image, luma
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for iid, buf in zip(pdf[id_col].tolist(), pdf[bytes_col].tolist()):
-                try:
-                    img = decode_image(bytes(buf))
-                    rows.append(
-                        dict(
-                            item_id=iid, width=img.shape[1], height=img.shape[0],
-                            mean_luma=float(luma(img).mean()), decode_ok=True,
-                        )
-                    )
-                except (NotImplementedError, ValueError):
-                    rows.append(
-                        dict(item_id=iid, width=-1, height=-1, mean_luma=0.0, decode_ok=False)
-                    )
-            yield pd.DataFrame(rows)
-
-    return items.select(id_col, bytes_col).mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
-
 
 IMAGE_DHASH_SCHEMA = "item_id string, dhash bigint, width int, height int, decode_ok boolean"
 

@@ -77,20 +77,20 @@ def frame_stat_arrays(
 
 
 def clip_frame_stats(
-    clips: DataFrame,
-    frame_ms: int = 25,
-    hop_ms: int = 10,
-    sr_work: int = 16000,
+    clips: DataFrame, frame_ms: int = 25, hop_ms: int = 10
 ) -> DataFrame:
     """Per-frame integer quality counters for every decodable clip.
 
-    Decode → canonical-rate resample (the same ``sr_work``
-    normalization the sketch stage uses, so thresholds mean the same
-    thing for an 8 kHz and a 44.1 kHz ingest) → vectorized framing.
-    Undecodable clips (lossy codecs, corrupt payloads) emit no rows —
+    Decode → canonical-rate resample (the sketch stage's working rate,
+    ``SketchConfig.sr_work``, so thresholds mean the same thing for an
+    8 kHz and a 44.1 kHz ingest) → vectorized framing.  Undecodable
+    clips (lossy codecs, corrupt payloads) emit no rows —
     ``audio_quality_gates`` surfaces them via its metadata join.
     """
-    from kmcp_spark.functions.audio import decode_pcm, resample_pcm
+    from kmcp_spark.config import SketchConfig
+    from kmcp_spark.functions.audio import decode_work_pcm
+
+    sr_work = SketchConfig().sr_work
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -101,9 +101,8 @@ def clip_frame_stats(
                 pdf["sr_hz"].tolist(),
                 pdf["codec"].tolist(),
             ):
-                try:
-                    pcm = resample_pcm(decode_pcm(buf, codec), int(sr), sr_work)
-                except (NotImplementedError, ValueError):
+                pcm = decode_work_pcm(buf, codec, sr, sr_work)
+                if pcm is None:
                     continue
                 rms_q, peak_q, zc = frame_stat_arrays(pcm, sr_work, frame_ms, hop_ms)
                 if rms_q.size == 0:

@@ -33,12 +33,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from kmcp_spark.config import PipelineConfig
-from kmcp_spark.functions.audio import (
-    decode_pcm,
-    resample_pcm,
-    spectral_shingle_hashes_batch,
-)
+from kmcp_spark.config import PipelineConfig, SketchConfig
+from kmcp_spark.functions.audio import decode_work_pcm, spectral_shingle_hashes_batch
 from kmcp_spark.functions.hashing import splitmix64
 from kmcp_spark.functions.minhash import minhash_signatures, scaled_sketch
 from kmcp_spark.functions.shingle import char_kgram_hashes_batch, word_ngram_hashes_batch
@@ -55,6 +51,24 @@ SKETCH_SCHEMA = (
 )
 
 
+def decode_batch(
+    pdf: pd.DataFrame, sk: SketchConfig
+) -> tuple[list[np.ndarray], list[int], list[bool]]:
+    """One Arrow batch's audio through the decode contract: per row the
+    PCM at the working rate (empty where decode failed), the rate its
+    frames are cut at, and decode_ok."""
+    pcms = [
+        decode_work_pcm(buf, codec, sr, sk.sr_work)
+        for buf, codec, sr in zip(
+            pdf["bytes"].tolist(), pdf["codec"].tolist(), pdf["sr_hz"].tolist()
+        )
+    ]
+    oks = [p is not None for p in pcms]
+    pcms = [np.empty(0, dtype=np.float32) if p is None else p for p in pcms]
+    rates = [sk.sr_work] * len(pcms) if sk.sr_work else pdf["sr_hz"].tolist()
+    return pcms, rates, oks
+
+
 def _domain_shingles(
     pdf: pd.DataFrame, cfg: PipelineConfig
 ) -> tuple[list[np.ndarray], list[np.ndarray], list[bool]]:
@@ -64,34 +78,10 @@ def _domain_shingles(
     sk = cfg.sketch
     char_sets = char_kgram_hashes_batch(pdf["transcript"], sk.char_k)
     word_sets = word_ngram_hashes_batch(pdf["transcript"], sk.word_n)
-    codecs = pdf["codec"].tolist()
-    srs = pdf["sr_hz"].tolist()
-    bufs = pdf["bytes"].tolist()
-    # decode per row (zero-copy frombuffer), then ONE batched FFT pass
-    pcms: list[np.ndarray] = []
-    oks: list[bool] = []
-    sr_work = sk.sr_work
-    for i in range(len(pdf)):
-        try:
-            pcm = decode_pcm(bufs[i], codecs[i])
-            if sr_work:
-                # canonical-rate normalization: cross-sample-rate dup
-                # pairs (FIXTURES.md T6) tokenize into disjoint sets
-                # without it (band edges are relative bin fractions)
-                pcm = resample_pcm(pcm, int(srs[i]), sr_work)
-            pcms.append(pcm)
-            oks.append(True)
-        except (NotImplementedError, ValueError):
-            # NotImplementedError: no decoder for this codec (lossy);
-            # ValueError: the decoder rejected a malformed payload
-            # (truncation, CRC mismatch, spec-invalid stream).  Both are
-            # the decode_ok=false flow-through — a corrupt clip must
-            # never crash the Spark task (same contract as media.py)
-            pcms.append(np.empty(0, dtype=np.float64))
-            oks.append(False)
+    pcms, rates, oks = decode_batch(pdf, sk)
     audio_sets = spectral_shingle_hashes_batch(
         pcms,
-        [sr_work] * len(srs) if sr_work else srs,
+        rates,
         ngram=sk.audio_ngram,
         select=sk.audio_select,
         minimizer_w=sk.minimizer_w,
@@ -148,6 +138,17 @@ def sketch_batch(pdf: pd.DataFrame, cfg: PipelineConfig) -> pd.DataFrame:
         out["minhash_text"] = _domain_sig(texts, dp, seed + 101)
         out["minhash_audio"] = _domain_sig(audios, dp, seed + 202)
     return out
+
+
+def min_dur_gate(clips: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """F4 minimum-query-length gate (kmcp drops queries shorter than the
+    k-mer size, `kmcp/cmd/util-db-search.go:778-786`): clips too short to
+    form a single audio shingle are neither sketched nor searched.  A
+    SQL string, so the predicate costs one py4j call and pushes down
+    into the parquet scan."""
+    if cfg.sketch.min_dur_ms > 0:
+        return clips.where(f"dur_ms >= {cfg.sketch.min_dur_ms}")
+    return clips
 
 
 def sketch_clips(clips: DataFrame, cfg: PipelineConfig) -> DataFrame:

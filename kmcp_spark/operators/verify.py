@@ -180,6 +180,19 @@ def min_bands_for_fpr(
     return bands
 
 
+def shared_bands_floor(cfg: PipelineConfig) -> int:
+    """The shared-bands gate every candidate path applies:
+    ``max(min_shared_bands, min_bands_for_fpr(...))`` — the configured
+    floor, raised to the X9 chance-FPR floor of the banding."""
+    v = cfg.verify
+    return max(
+        v.min_shared_bands,
+        min_bands_for_fpr(
+            cfg.lsh.bands, cfg.lsh.rows_per_band, v.null_jaccard, v.max_chance_fpr
+        ),
+    )
+
+
 def verify_pairs(
     scored: DataFrame, clips: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
@@ -190,12 +203,7 @@ def verify_pairs(
     pushdown, `kmcp/cmd/util-profile.go:105-133`).
     """
     v = cfg.verify
-    eff_min_bands = max(
-        v.min_shared_bands,
-        min_bands_for_fpr(
-            cfg.lsh.bands, cfg.lsh.rows_per_band, v.null_jaccard, v.max_chance_fpr
-        ),
-    )
+    eff_min_bands = shared_bands_floor(cfg)
     audio_path = (
         f"(audio_jaccard >= {_dbl(v.min_domain_jaccard)}"
         f" AND min_n_audio >= {v.min_domain_size})"

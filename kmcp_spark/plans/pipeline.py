@@ -25,8 +25,8 @@ from kmcp_spark.operators.cluster import (
     connected_components,
     reassign_by_support,  # noqa: F401 -- perfbench/spans.py traces this name
 )
-from kmcp_spark.operators.lsh import band_buckets, bucket_stats, candidate_pairs
-from kmcp_spark.operators.sketch import sketch_clips
+from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
+from kmcp_spark.operators.sketch import min_dur_gate, sketch_clips
 from kmcp_spark.operators.verify import score_pairs, verify_pairs
 from kmcp_spark.sources.tables import (
     checkpoint_valid,
@@ -85,10 +85,10 @@ class DedupPipeline:
         self.metrics: list[StageMetric] = []
         os.makedirs(out_dir, exist_ok=True)
 
-    def _stage(self, name: str, build, force: bool = False) -> DataFrame:
+    def _stage(self, name: str, build) -> DataFrame:
         path = os.path.join(self.out_dir, name)
         t0 = time.time()
-        if not force and checkpoint_valid(path, self.fp):
+        if checkpoint_valid(path, self.fp):
             df = read_checkpoint(self.spark, path)
             self.metrics.append(StageMetric(name, -1, int((time.time() - t0) * 1000), True))
             return df
@@ -143,9 +143,7 @@ class DedupPipeline:
         )
         return out
 
-    def run(
-        self, clips: DataFrame, force: bool = False, diagnostics: bool = False
-    ) -> PipelineResult:
+    def run(self, clips: DataFrame) -> PipelineResult:
         from kmcp_spark.runtime import persistent_ids, unpersist_ids
 
         cfg = self.cfg
@@ -155,13 +153,7 @@ class DedupPipeline:
         # long-lived session keeps a flat cache footprint across runs
         ids_at_entry = persistent_ids(self.spark.sparkContext)
 
-        # F4 minimum-query-length gate (kmcp drops queries shorter than
-        # the k-mer size, `kmcp/cmd/util-db-search.go:778-786`): clips too
-        # short to form a single audio shingle are excluded from dedup.
-        # The predicate is a pushed-down parquet filter (no extra stage);
-        # the gated count is recorded in the metrics file.
-        if cfg.sketch.min_dur_ms > 0:
-            clips = clips.where(f"dur_ms >= {cfg.sketch.min_dur_ms}")
+        clips = min_dur_gate(clips, cfg)
 
         # exact-duplicate short-circuit (T0 / byte-identical): one JVM
         # hash-agg groups identical (bytes, transcript) rows; only one
@@ -181,13 +173,11 @@ class DedupPipeline:
                 "xxhash64(2, bytes, transcript) AS h2",
             ).selectExpr("clip_id", "min(clip_id) OVER (PARTITION BY h1, h2) AS rep_id")
 
-        exact = self._stage("exact_groups", build_exact, force=force)
+        exact = self._stage("exact_groups", build_exact)
         reps = exact.where("clip_id = rep_id").select("clip_id")
         rep_clips = clips.join(reps, "clip_id", "left_semi")
 
-        sketches = self._stage(
-            "sketches", lambda: sketch_clips(rep_clips, cfg), force=force
-        )
+        sketches = self._stage("sketches", lambda: sketch_clips(rep_clips, cfg))
 
         # buckets is a VIRTUAL stage: a narrow JVM map (slice + xxhash64)
         # derived 1:1 from the sketches checkpoint.  It is deliberately
@@ -196,7 +186,7 @@ class DedupPipeline:
         # candidates stage at local[4]/32k — serializing the bands-fold
         # 1M-row relation), and at 10^12 input rows a cached 32x-exploded
         # band relation cannot fit ANY cluster's memory.  Each consumer
-        # (size agg, pair join, escalation, diagnostics) instead re-runs
+        # (size agg, pair join, escalation) instead re-runs
         # the narrow map over the column-pruned sketches scan
         # (ReadSchema struct<clip_id,minhash>) — cheap, parallel, and
         # the only shape that survives at scale.  No partitionBy
@@ -213,7 +203,7 @@ class DedupPipeline:
             pairs, oversized = candidate_pairs(buckets, cfg.lsh.max_bucket)
             return pairs
 
-        candidates = self._stage("candidates", build_pairs, force=force)
+        candidates = self._stage("candidates", build_pairs)
         if oversized is not None:
             # no silent caps: record exactly what was not expanded.  The
             # count runs AFTER the checkpoint write on purpose: the write
@@ -237,7 +227,7 @@ class DedupPipeline:
             scored = score_pairs(candidates, sketches, cfg)
             return verify_pairs(scored, clips, cfg)
 
-        verified = self._stage("verified", build_verified, force=force)
+        verified = self._stage("verified", build_verified)
 
         def build_clusters():
             # stage-3/stage-4 split of the reference profiler: weak-edge
@@ -259,11 +249,7 @@ class DedupPipeline:
             ).select("clip_id", "cluster_id")
             return cluster_report(full)
 
-        clusters = self._stage("clusters", build_clusters, force=force)
-
-        if diagnostics:
-            # bucket-size histogram = `utils index-density` analog
-            self._stage("bucket_histogram", lambda: bucket_stats(buckets), force=force)
+        clusters = self._stage("clusters", build_clusters)
 
         # sweep any blocks persisted during this run (e.g. the CC loop's
         # final label snapshot — superseded by the clusters checkpoint).

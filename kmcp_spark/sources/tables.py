@@ -32,41 +32,22 @@ def checkpoint_valid(path: str, fingerprint: str) -> bool:
         return False
 
 
-def write_checkpoint(
-    df: DataFrame,
-    path: str,
-    fingerprint: str,
-    partition_by: list[str] | None = None,
-    fmt: str | None = None,
-) -> None:
-    """Write a stage output durably; the marker lands only on success.
+def write_checkpoint_data(df: DataFrame, path: str, fmt: str | None = None) -> None:
+    """Write a stage output's data; the ``_FINGERPRINT`` marker is a
+    separate step (``write_checkpoint_marker``), so a caller can record
+    lineage between the two and marker-valid always implies
+    lineage-recorded.
 
     ``fmt`` selects the table format: "parquet" (default) or "iceberg".
     On a cluster with an Iceberg catalog configured, pass fmt="iceberg"
     (or set SPARK_GRAFT_CHECKPOINT_FORMAT=iceberg) and ``path`` is used
     as the table identifier — stages then get Iceberg's snapshot
     isolation and atomic overwrite.  This sandbox has no Iceberg runtime
-    jar, so parquet directories with the atomic ``_FINGERPRINT`` marker
-    provide the same skip-if-valid resume semantics.
+    jar, so parquet directories with the atomic marker provide the same
+    skip-if-valid resume semantics.
     """
-    write_checkpoint_data(df, path, partition_by, fmt)
-    write_checkpoint_marker(path, fingerprint)
-
-
-def write_checkpoint_data(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    fmt: str | None = None,
-) -> None:
-    """The data half of ``write_checkpoint`` — no marker.  Callers that
-    record lineage between the data landing and the marker landing (so
-    marker-valid always implies lineage-recorded) use this +
-    ``write_checkpoint_marker`` directly."""
     fmt = fmt or os.environ.get("SPARK_GRAFT_CHECKPOINT_FORMAT", "parquet")
     w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
     if fmt == "iceberg":
         w.format("iceberg").saveAsTable(_iceberg_ident(path))
         # the marker still lands as a local sidecar: checkpoint_valid()
@@ -138,19 +119,5 @@ def partition_lineage(path: str) -> list[dict]:
 
 
 def checkpoint_rows(path: str) -> int:
-    """Exact row count from parquet footers (driver-side, no Spark job).
-
-    Stage metrics need rows_out, but a ``count()`` after every stage
-    write is one whole extra job per stage — footer metadata gives the
-    same number in milliseconds."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    # os.walk, not listdir: a checkpoint written with partition_by puts
-    # its files in subdirectories — a flat listing would silently report
-    # rows_out=0 for partitioned stages
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            if name.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, name)).metadata.num_rows
-    return total
+    """Exact row count from parquet footers (driver-side, no Spark job)."""
+    return sum(e["rows"] for e in partition_lineage(path))

@@ -48,7 +48,6 @@ and simply overwritten on replay.
 from __future__ import annotations
 
 import json
-import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -56,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from kmcp_spark.config import PipelineConfig
 from kmcp_spark.corpus import CLIPS_SCHEMA
 from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
-from kmcp_spark.operators.sketch import sketch_clips
+from kmcp_spark.operators.sketch import min_dur_gate, sketch_clips
 from kmcp_spark.operators.verify import score_pairs, verify_pairs
 
 
@@ -143,66 +142,8 @@ def _batch_path(root: str, batch_id: int, sid: str) -> str:
     return os.path.join(root, _batch_dirname(batch_id, sid))
 
 
-_log = logging.getLogger(__name__)
-_legacy_warned: set[tuple[str, str]] = set()
-
-
-def _warn_if_ambiguous_legacy(root: str, sid: str) -> None:
-    """Loud warning for the one silent failure mode of the legacy
-    fallback in ``_is_committed``: a NEW lineage (``sid`` with no scoped
-    commits under ``root`` yet) started over leftover bare
-    ``batch_id=N`` dirs would treat the OLD lineage's commits as its own
-    and silently skip writing its early batches.  Legacy names carry no
-    lineage, so the ambiguity cannot be resolved automatically — direct
-    the operator to migrate (rename to ``batch_id=N__<sid>``) or clear
-    the sink before relying on the fallback."""
-    if (root, sid) in _legacy_warned or not os.path.isdir(root):
-        return
-    names = os.listdir(root)
-    suffix = f"__{sid}"
-    has_scoped = any(
-        n.startswith("batch_id=")
-        and n.endswith(suffix)
-        and os.path.exists(os.path.join(root, n, "_SUCCESS"))
-        for n in names
-    )
-    if has_scoped:
-        return
-    legacy = sorted(
-        n
-        for n in names
-        if n.startswith("batch_id=")
-        and "__" not in n
-        and os.path.exists(os.path.join(root, n, "_SUCCESS"))
-    )
-    if legacy:
-        _legacy_warned.add((root, sid))
-        _log.warning(
-            "stream %s has no scoped commits under %s but found legacy "
-            "unscoped commit dirs %s: if these belong to THIS stream's "
-            "lineage (pre-upgrade run) they will be honored as commits; "
-            "if they belong to a DIFFERENT (deleted-checkpoint) lineage, "
-            "this stream will silently skip its own batches with those "
-            "ids — rename them to batch_id=N__<sid> or move them aside "
-            "before continuing.",
-            sid,
-            root,
-            legacy,
-        )
-
-
 def _is_committed(root: str, batch_id: int, sid: str) -> bool:
-    if os.path.exists(os.path.join(_batch_path(root, batch_id, sid), "_SUCCESS")):
-        return True
-    # Upgrade path: dirs written before batch ids were scoped by stream
-    # id are bare ``batch_id=N``.  A replay across the naming change has
-    # the SAME checkpoint lineage, so its legacy dir is its own commit —
-    # recognize it, or the replay would recompute the batch into
-    # ``batch_id=N__<sid>`` alongside the legacy dir and duplicate its
-    # rows in every downstream read.  (A NEW lineage started over legacy
-    # data from a DELETED checkpoint is inherently ambiguous — legacy
-    # names carry no lineage; migrate by renaming to the scoped scheme.)
-    return os.path.exists(os.path.join(root, f"batch_id={batch_id}", "_SUCCESS"))
+    return os.path.exists(os.path.join(_batch_path(root, batch_id, sid), "_SUCCESS"))
 
 
 def _committed_paths(root: str, exclude_dirname: str) -> list[str]:
@@ -236,16 +177,12 @@ def _flag_batch(
     sid = _stream_id(checkpoint_dir)
     cur = _batch_dirname(batch_id, sid)
     bands_dir = index_dir + "_bands"
-    for root in (flags_dir, index_dir, bands_dir):
-        _warn_if_ambiguous_legacy(root, sid)
     flags_done = _is_committed(flags_dir, batch_id, sid)
     index_done = _is_committed(index_dir, batch_id, sid)
     bands_done = _is_committed(bands_dir, batch_id, sid)
     if flags_done and index_done and bands_done:
         return  # fully-committed replay (foreachBatch is at-least-once)
-    if cfg.sketch.min_dur_ms > 0:  # F4 gate, as in the batch pipeline
-        batch = batch.filter(F.col("dur_ms") >= cfg.sketch.min_dur_ms)
-    sk_new = sketch_clips(batch, cfg).localCheckpoint(eager=True)
+    sk_new = sketch_clips(min_dur_gate(batch, cfg), cfg).localCheckpoint(eager=True)
     bands_new = band_buckets(
         sk_new, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands
     )

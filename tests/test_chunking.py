@@ -31,7 +31,7 @@ def test_chunk_bounds_geometry():
 @pytest.fixture(scope="module")
 def embedded_corpus(spark):
     """clip long_A of 8 s; clip sub_B = seconds 3..5 of A; clip other_C
-    unrelated."""
+    unrelated; clip bad_D a truncated (undecodable) wav."""
     sr = 16000
     rng = np.random.default_rng(77)
     t = np.arange(8 * sr) / sr
@@ -43,14 +43,15 @@ def embedded_corpus(spark):
     a += rng.normal(0, 0.01, len(t))
     b = a[3 * sr : 5 * sr]
     c = rng.normal(0, 0.2, 4 * sr)
+    corrupt = encode_wav(c, sr)[:-500]  # truncated upload
     rows = pd.DataFrame(
         {
-            "clip_id": ["long_A", "sub_B", "other_C"],
-            "bytes": [encode_wav(x, sr) for x in (a, b, c)],
-            "sr_hz": [sr] * 3,
-            "dur_ms": [8000, 2000, 4000],
-            "codec": ["wav"] * 3,
-            "transcript": ["alpha beta", "gamma delta", "epsilon zeta"],
+            "clip_id": ["long_A", "sub_B", "other_C", "bad_D"],
+            "bytes": [encode_wav(x, sr) for x in (a, b, c)] + [corrupt],
+            "sr_hz": [sr] * 4,
+            "dur_ms": [8000, 2000, 4000, 4000],
+            "codec": ["wav"] * 4,
+            "transcript": ["alpha beta", "gamma delta", "epsilon zeta", "eta theta"],
         }
     )
     return spark.createDataFrame(rows, schema=CLIPS_SCHEMA)
@@ -62,6 +63,10 @@ def test_embedded_excerpt_found_via_chunks(spark, embedded_corpus):
     skp = sk.toPandas()
     assert skp[skp.clip_id == "long_A"]["n_chunks"].iloc[0] > 1
     assert (skp[skp.clip_id == "sub_B"]["n_chunks"] == 1).all()
+    # the corrupt clip flows through as one empty chunk with decode_ok=false
+    bad = skp[skp.clip_id == "bad_D"]
+    assert len(bad) == 1 and not bad["decode_ok"].iloc[0] and bad["size"].iloc[0] == 0
+    assert skp[skp.clip_id != "bad_D"]["decode_ok"].all()
 
     sk_cached = sk.localCheckpoint(eager=True)
     pairs = chunk_candidate_pairs(sk_cached, bands=cfg.lsh.bands, rows_per_band=cfg.lsh.rows_per_band)
@@ -69,8 +74,9 @@ def test_embedded_excerpt_found_via_chunks(spark, embedded_corpus):
     ab = agg[(agg.a == "long_A") & (agg.b == "sub_B")]
     assert len(ab) == 1, f"excerpt not found: {agg}"
     assert ab["best_chunk_containment"].iloc[0] >= 0.8
-    # the unrelated clip must not pair with either
-    assert not ((agg.a == "other_C") | (agg.b == "other_C")).any()
+    # neither the unrelated clip nor the corrupt one pairs with anything
+    for other in ("other_C", "bad_D"):
+        assert not ((agg.a == other) | (agg.b == other)).any()
 
 
 def test_chunk_sketch_determinism(spark, embedded_corpus):

@@ -67,7 +67,11 @@ def quality_clips(spark):
             (cid, encode_wav(pcm, SR), SR, int(len(pcm) / SR * 1000), "wav", txt)
             for cid, pcm, txt in rows
         ]
-        + [("c_lossy", b"\xff\xfb\x90\x00garbage", SR, 800, "mp3", "lossy row")],
+        + [
+            ("c_lossy", b"\xff\xfb\x90\x00garbage", SR, 800, "mp3", "lossy row"),
+            # a truncated upload: the wav decoder rejects it
+            ("c_corrupt", encode_wav(_tone(0.8, 0.5), SR)[:-300], SR, 800, "wav", "cut off"),
+        ],
         "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
     )
     return df.localCheckpoint(eager=True)
@@ -84,15 +88,16 @@ def test_spark_quality_gates_flag_each_defect(spark, quality_clips):
         r.clip_id: r.asDict()
         for r in audio_quality_gates(fs, meta, max_cps_centi=100_000).collect()
     }
-    assert set(g) == {"c_clean", "c_quiet", "c_clipped", "c_silent", "c_lossy"}
+    assert set(g) == {"c_clean", "c_quiet", "c_clipped", "c_silent", "c_lossy", "c_corrupt"}
     assert g["c_clean"]["pass_all"] is True
     assert g["c_quiet"]["pass_loudness"] is False and g["c_quiet"]["pass_silence"] is True
     assert g["c_clipped"]["pass_clipping"] is False and g["c_clipped"]["clip_ppm"] == 1_000_000
     assert g["c_silent"]["pass_silence"] is False and g["c_silent"]["silence_ppm"] > 500_000
     # decode failure flows through the join, not an exception
-    lossy = g["c_lossy"]
-    assert lossy["pass_decode"] is False and lossy["pass_all"] is False
-    assert lossy["n_frames"] == 0 and lossy["mean_rms_q"] is None
+    for undecodable in ("c_lossy", "c_corrupt"):
+        row = g[undecodable]
+        assert row["pass_decode"] is False and row["pass_all"] is False
+        assert row["n_frames"] == 0 and row["mean_rms_q"] is None
     # only the defective gate fails: each defect row passes the others
     assert g["c_quiet"]["pass_clipping"] is True and g["c_quiet"]["pass_rate"] is True
     assert g["c_clipped"]["pass_loudness"] is True

@@ -161,23 +161,6 @@ def test_stream_id_not_cached_across_lineages(tmp_out):
     assert _stream_id(ckpt) == "22222222"
 
 
-def test_legacy_unscoped_batch_dir_counts_as_committed(tmp_out):
-    """Dirs written before batch ids were scoped by stream id
-    (bare batch_id=N) must be recognized as committed for the same
-    lineage, or a replay across the upgrade duplicates the batch."""
-    from kmcp_spark.streaming.dedup import _is_committed
-
-    root = os.path.join(tmp_out, "flags")
-    legacy = os.path.join(root, "batch_id=3")
-    os.makedirs(legacy)
-    open(os.path.join(legacy, "_SUCCESS"), "w").close()
-    assert _is_committed(root, 3, "deadbeef")
-    assert not _is_committed(root, 4, "deadbeef")
-    # an UNcommitted legacy dir (no _SUCCESS) is not a commit
-    os.makedirs(os.path.join(root, "batch_id=5"))
-    assert not _is_committed(root, 5, "deadbeef")
-
-
 def test_streaming_exact_dedup_watermark_variant(spark, tmp_out):
     """Bounded-state variant: within the watermark horizon, reposts are
     suppressed exactly like the all-history default."""
