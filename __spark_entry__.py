@@ -525,10 +525,8 @@ def _clips_verified(spark: SparkSession):
     sketch -> LSH -> score -> verify chain (8-13 s each at local[32]).
     The localCheckpointed results are valid for the life of the session,
     so the second and later consumers pay only the lookup."""
-    from kmcp_spark.config import PipelineConfig
-    from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
     from kmcp_spark.operators.sketch import sketch_clips
-    from kmcp_spark.operators.verify import score_pairs, verify_pairs
+    from kmcp_spark.plans.pipeline import near_dup_pairs
 
     key = (spark.sparkContext.applicationId, _FIXTURE_DIR)
     hit = _VERIFIED_CACHE.get(key)
@@ -537,16 +535,8 @@ def _clips_verified(spark: SparkSession):
     cfg = _clips_cfg()
     clips, truth = _clips_corpus(spark)
     sk = sketch_clips(clips, cfg).localCheckpoint(eager=True)
-    pairs, _ = candidate_pairs(
-        band_buckets(
-            sk, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands
-        ),
-        cfg.lsh.max_bucket,
-    )
-    verified = verify_pairs(score_pairs(pairs, sk, cfg), clips, cfg).localCheckpoint(
-        eager=True
-    )
-    _VERIFIED_CACHE[key] = (clips, truth, sk, verified)
+    verified, _ = near_dup_pairs(sk, clips, cfg)
+    _VERIFIED_CACHE[key] = (clips, truth, sk, verified.localCheckpoint(eager=True))
     return _VERIFIED_CACHE[key]
 
 

@@ -70,7 +70,7 @@ def cmd_index(args) -> dict:
     spark = get_spark(app="kmcp_index", cores=args.cores)
     cfg = PipelineConfig()
     sk = spark.read.parquet(args.sketches)
-    _write(band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band), args.out_dir)
+    _write(band_buckets(sk, cfg.lsh), args.out_dir)
     return {"cmd": "index", "out": args.out_dir, "rows": checkpoint_rows(args.out_dir)}
 
 
@@ -84,7 +84,7 @@ def cmd_search(args) -> dict:
     cfg = PipelineConfig()
     q_clips = min_dur_gate(spark.read.parquet(args.query), cfg)
     q_sk = sketch_clips(q_clips, cfg)
-    q_bands = band_buckets(q_sk, cfg.lsh.bands, cfg.lsh.rows_per_band).select(
+    q_bands = band_buckets(q_sk, cfg.lsh).select(
         F.col("clip_id").alias("a"), "band_id", "band_hash"
     )
     idx = spark.read.parquet(args.index).select(

@@ -462,11 +462,11 @@ def resample_pcm(pcm: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray:
     """
     import math
 
+    if sr_in <= 0 or sr_out <= 0:
+        raise ValueError(f"invalid sample rates {sr_in}->{sr_out}")
     x = np.asarray(pcm, dtype=np.float32)
     if sr_in == sr_out or x.shape[0] == 0:
         return x
-    if sr_in <= 0 or sr_out <= 0:
-        raise ValueError(f"invalid sample rates {sr_in}->{sr_out}")
     g = math.gcd(int(sr_in), int(sr_out))
     up, down = int(sr_out) // g, int(sr_in) // g
     n_in = x.shape[0]

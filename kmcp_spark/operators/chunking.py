@@ -90,7 +90,9 @@ def sketch_clips_chunked(
             for cid, tok, ok in zip(pdf["clip_id"].tolist(), toks, oks):
                 bounds = _chunk_bounds(len(tok), chunk_frames, overlap_frames)
                 for ci, (s, e) in enumerate(bounds):
-                    h = select_shingles(tok[s:e], sk.audio_ngram)
+                    h = select_shingles(
+                        tok[s:e], sk.audio_ngram, sk.audio_select, sk.minimizer_w, sk.syncmer_s
+                    )
                     ids.append(cid)
                     idxs.append(ci)
                     totals.append(len(bounds))

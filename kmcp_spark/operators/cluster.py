@@ -244,16 +244,15 @@ def _hash_min_labels(
     return labels
 
 
-def prune_weak_edges(
-    pairs: DataFrame, alpha: float = 0.5, score_col: str = "containment"
-) -> DataFrame:
+def prune_weak_edges(pairs: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Drop verified edges dominated by stronger alternatives before CC.
 
     The MegaPath-rule analog (`kmcp/cmd/profile.go:1357-1388`: matches
     whose support is a small fraction of the best match for that query
     are discarded before assignment).  Here an edge is kept iff its
     score is >= ``alpha`` x the best incident score of AT LEAST ONE of
-    its endpoints — equivalently score >= alpha * min(best_a, best_b).
+    its endpoints — equivalently score >= alpha * min(best_a, best_b),
+    the score being the edge's ``containment``.
     Every node's own best edge is always kept, so pruning can never
     orphan a genuine duplicate; what it removes are weak one-off bridges
     that would otherwise over-merge two dense clusters through a single
@@ -264,7 +263,7 @@ def prune_weak_edges(
     """
     if alpha <= 0:
         return pairs
-    s = F.col(score_col)
+    s = F.col("containment")
     per_node = (
         pairs.select(F.col("a").alias("clip_id"), s.alias("_s"))
         .union(pairs.select(F.col("b").alias("clip_id"), s.alias("_s")))
@@ -285,12 +284,7 @@ def prune_weak_edges(
     )
 
 
-def reassign_by_support(
-    labels: DataFrame,
-    pairs: DataFrame,
-    score_col: str = "containment",
-    iters: int = 1,
-) -> DataFrame:
+def reassign_by_support(labels: DataFrame, pairs: DataFrame, iters: int = 1) -> DataFrame:
     """EM-style ambiguity reassignment (the analog of kmcp profile's
     stage-4 multi-mapped read reassignment, `kmcp/cmd/profile.go:2075-2117`:
     a read mapping several references is re-assigned to the one with
@@ -313,7 +307,7 @@ def reassign_by_support(
     from kmcp_spark.runtime import persistent_ids, unpersist_ids
 
     sc = pairs.sparkSession.sparkContext
-    w = F.col(score_col)
+    w = F.col("containment")
     edges = pairs.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), w.alias("_w")
     ).union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), w.alias("_w")))

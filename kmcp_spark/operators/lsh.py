@@ -22,8 +22,9 @@ Skew policy (the analog of kmcp's block-size escalation 256→8→1 for
 oversized groups, `kmcp/cmd/index.go:787-894` / flags `:1453-1463`):
 buckets whose membership exceeds ``max_bucket`` would pair-expand
 quadratically in one task.  ``bucket_pairs`` drops them;
-``candidate_pairs`` (the clip pipeline, streaming and the driver
-fixture) ESCALATES them instead — each member is linked to the
+``candidate_pairs`` (the near-dup chain ``plans.pipeline.near_dup_pairs``
+that the clip pipeline, streaming and the driver fixture share)
+ESCALATES them instead — each member is linked to the
 bucket's deterministic min/max anchors (O(size) edges), so a giant
 *near*-dup class that floods every band still reconnects through
 verified anchor edges in connected components.  Oversized buckets are
@@ -33,6 +34,8 @@ also counted into the metrics table (no silent caps).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from kmcp_spark.config import LSHConfig
 
 
 def band_rows(src: DataFrame, bands: int, rows_per_band: int,
@@ -74,12 +77,11 @@ _TEXT_BAND_BASE = 10_000
 _AUDIO_BAND_BASE = 20_000
 
 
-def band_buckets(
-    sketches: DataFrame, bands: int, rows_per_band: int, domain_bands: int = 0
-) -> DataFrame:
-    """sketches -> buckets(band_id int, band_hash bigint, clip_id string).
+def band_buckets(sketches: DataFrame, lsh: LSHConfig) -> DataFrame:
+    """sketches -> buckets(band_id int, band_hash bigint, clip_id string),
+    banded by ``lsh.bands`` x ``lsh.rows_per_band``.
 
-    With ``domain_bands > 0`` the combined-signature bands are unioned
+    With ``lsh.domain_bands > 0`` the combined-signature bands are unioned
     with per-domain bands over ``minhash_text`` / ``minhash_audio``
     (NULL domain signatures — empty shingle sets, decode failures —
     emit no rows), so single-modality duplicates become candidates:
@@ -87,7 +89,8 @@ def band_buckets(
     every text band regardless of how much audio dilutes the combined
     signature.  Downstream shape is unchanged — one groupBy shuffle
     over the same (band_id, band_hash) key space."""
-    out = band_rows(sketches, bands, rows_per_band, "clip_id")
+    rows_per_band, domain_bands = lsh.rows_per_band, lsh.domain_bands
+    out = band_rows(sketches, lsh.bands, rows_per_band, "clip_id")
     if domain_bands > 0:
         if "minhash_text" not in sketches.columns:
             raise ValueError(

@@ -76,21 +76,21 @@ def frame_stat_arrays(
     return rms_q, peak_q, zc
 
 
-def clip_frame_stats(
-    clips: DataFrame, frame_ms: int = 25, hop_ms: int = 10
-) -> DataFrame:
+def clip_frame_stats(clips: DataFrame) -> DataFrame:
     """Per-frame integer quality counters for every decodable clip.
 
     Decode → canonical-rate resample (the sketch stage's working rate,
     ``SketchConfig.sr_work``, so thresholds mean the same thing for an
-    8 kHz and a 44.1 kHz ingest) → vectorized framing.  Undecodable
+    8 kHz and a 44.1 kHz ingest) → vectorized framing on the sketch
+    stage's ``frame_ms`` / ``hop_ms`` grid.  Undecodable
     clips (lossy codecs, corrupt payloads) emit no rows —
     ``audio_quality_gates`` surfaces them via its metadata join.
     """
     from kmcp_spark.config import SketchConfig
     from kmcp_spark.functions.audio import decode_work_pcm
 
-    sr_work = SketchConfig().sr_work
+    sk = SketchConfig()
+    sr_work = sk.sr_work
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -104,7 +104,7 @@ def clip_frame_stats(
                 pcm = decode_work_pcm(buf, codec, sr, sr_work)
                 if pcm is None:
                     continue
-                rms_q, peak_q, zc = frame_stat_arrays(pcm, sr_work, frame_ms, hop_ms)
+                rms_q, peak_q, zc = frame_stat_arrays(pcm, sr_work, sk.frame_ms, sk.hop_ms)
                 if rms_q.size == 0:
                     continue
                 out.append(

@@ -178,35 +178,10 @@ class DedupPipeline:
         rep_clips = clips.join(reps, "clip_id", "left_semi")
 
         sketches = self._stage("sketches", lambda: sketch_clips(rep_clips, cfg))
-
-        # buckets is a VIRTUAL stage: a narrow JVM map (slice + xxhash64)
-        # derived 1:1 from the sketches checkpoint.  It is deliberately
-        # NOT persisted and NOT written: r1 paid a parquet round-trip,
-        # r2 paid a MEMORY_AND_DISK materialization (measured 4 s of the
-        # candidates stage at local[4]/32k — serializing the bands-fold
-        # 1M-row relation), and at 10^12 input rows a cached 32x-exploded
-        # band relation cannot fit ANY cluster's memory.  Each consumer
-        # (size agg, pair join, escalation) instead re-runs
-        # the narrow map over the column-pruned sketches scan
-        # (ReadSchema struct<clip_id,minhash>) — cheap, parallel, and
-        # the only shape that survives at scale.  No partitionBy
-        # ("band_id") either: a partitioned write multiplies file count
-        # by the band fan-out (observed 12x slowdown at local[32]).
-        buckets = band_buckets(
-            sketches, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands
-        )
-
-        oversized = None
-
-        def build_pairs():
-            nonlocal oversized
-            pairs, oversized = candidate_pairs(buckets, cfg.lsh.max_bucket)
-            return pairs
-
-        candidates = self._stage("candidates", build_pairs)
+        verified, oversized = near_dup_pairs(sketches, clips, cfg, stage=self._stage)
         if oversized is not None:
             # no silent caps: record exactly what was not expanded.  The
-            # count runs AFTER the checkpoint write on purpose: the write
+            # count runs AFTER the candidates write on purpose: the write
             # job materializes candidate_pairs' persisted over_rel as a
             # side effect, so this reads the cache — counting BEFORE the
             # write re-derived the full band window (sketches scan +
@@ -222,12 +197,6 @@ class DedupPipeline:
                 # cap; a stale record would claim silent-cap accounting
                 # that never happened this run
                 os.remove(over_path)
-
-        def build_verified():
-            scored = score_pairs(candidates, sketches, cfg)
-            return verify_pairs(scored, clips, cfg)
-
-        verified = self._stage("verified", build_verified)
 
         def build_clusters():
             # stage-3/stage-4 split of the reference profiler: weak-edge
@@ -284,6 +253,57 @@ class DedupPipeline:
         with open(os.path.join(self.out_dir, "metrics.jsonl"), "a") as f:
             for r in rows:
                 f.write(json.dumps(r) + "\n")
+
+
+def near_dup_pairs(
+    sketches: DataFrame,
+    clips: DataFrame,
+    cfg: PipelineConfig,
+    stage=lambda name, build: build(),
+    index: tuple[DataFrame, DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """sketches -> (verified pairs, oversized buckets): THE near-dup chain
+    ``band_buckets`` -> ``candidate_pairs`` -> ``score_pairs`` ->
+    ``verify_pairs`` for every driver.
+
+    ``stage(name, build)`` is the sink at the ``candidates`` and
+    ``verified`` boundaries (a fingerprinted checkpoint in
+    ``DedupPipeline``; lazy by default).  ``clips`` supplies transcripts
+    for the LCS check.  ``index`` is the (bands, sketches) of earlier
+    clips: their bands join the probe's, only pairs touching
+    ``sketches`` are kept (the index's own pairs were found when it was
+    built), and they are scored against sketches ∪ index.  Without an
+    index the pass is a self-join, the same chain against an empty index.
+
+    The band relation is never persisted: each consumer re-runs the
+    narrow slice + xxhash64 map over the column-pruned sketches scan (a
+    cached 32x-exploded band relation cannot fit memory at scale).
+    ``oversized`` is None when ``stage`` resumed the candidates."""
+    bands = band_buckets(sketches, cfg.lsh)
+    sk_all = sketches
+    if index is not None:
+        index_bands, index_sketches = index
+        bands = bands.unionByName(index_bands)
+        sk_all = sketches.unionByName(index_sketches)
+    oversized = None
+
+    def build_candidates() -> DataFrame:
+        nonlocal oversized
+        pairs, oversized = candidate_pairs(bands, cfg.lsh.max_bucket)
+        if index is None:
+            return pairs
+        nid = sketches.select("clip_id")
+        return (
+            pairs.join(nid.withColumnRenamed("clip_id", "a"), "a", "leftsemi")
+            .unionByName(pairs.join(nid.withColumnRenamed("clip_id", "b"), "b", "leftsemi"))
+            .dropDuplicates(["a", "b"])
+        )
+
+    candidates = stage("candidates", build_candidates)
+    verified = stage(
+        "verified", lambda: verify_pairs(score_pairs(candidates, sk_all, cfg), clips, cfg)
+    )
+    return verified, oversized
 
 
 def dup_pairs_from_clusters(clusters: DataFrame) -> DataFrame:

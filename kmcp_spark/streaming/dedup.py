@@ -14,11 +14,12 @@ Two operators:
   a watermark + ``dropDuplicatesWithinWatermark`` — the all-history
   variant here matches the batch pipeline's semantics.
 - ``streaming_neardup_flags``: ``foreachBatch`` micro-batch loop —
-  sketch the batch, band-join its signatures against batch ∪ index,
-  keep candidate pairs touching the batch, score + verify with the SAME
-  ``score_pairs``/``verify_pairs`` operators the batch pipeline uses
-  (full parity: FPR band floor, domain gates, LCS verification), append
-  flags, append the batch's sketches to the index.  All state is
+  sketch the batch, run the batch pipeline's own near-dup chain
+  (``plans.pipeline.near_dup_pairs``) with the committed bands and
+  sketches as its index: band-join batch ∪ index, keep candidate pairs
+  touching the batch, score + verify (full parity: bucket cap, FPR band
+  floor, domain gates, LCS verification), append flags, append the
+  batch's bands and sketches to the index.  All state is
   external parquet — restart-safe via the stream checkpoint, nothing
   accumulates in executor memory.
 
@@ -54,9 +55,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kmcp_spark.config import PipelineConfig
 from kmcp_spark.corpus import CLIPS_SCHEMA
-from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
+from kmcp_spark.operators.lsh import band_buckets
 from kmcp_spark.operators.sketch import min_dur_gate, sketch_clips
-from kmcp_spark.operators.verify import score_pairs, verify_pairs
+from kmcp_spark.plans.pipeline import near_dup_pairs
 
 
 def streaming_exact_dedup(
@@ -183,43 +184,28 @@ def _flag_batch(
     if flags_done and index_done and bands_done:
         return  # fully-committed replay (foreachBatch is at-least-once)
     sk_new = sketch_clips(min_dur_gate(batch, cfg), cfg).localCheckpoint(eager=True)
-    bands_new = band_buckets(
-        sk_new, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands
-    )
+    bands_new = band_buckets(sk_new, cfg.lsh)
     if not flags_done:
         # prior batches' band rows come from the persisted band table —
         # the index is banded once, on arrival, never again.  Committed
         # band and index tables were written from relations of the same
         # schemas as bands_new / sk_new, so both reads take that schema
-        # instead of inferring it (a Spark job per read)
-        prior_band_paths = _committed_paths(bands_dir, cur)
-        buckets = (
-            bands_new.unionByName(
-                spark.read.schema(bands_new.schema).parquet(*prior_band_paths)
+        # instead of inferring it (a Spark job per read).  The first
+        # batch finds no index and takes the chain's self-join path
+        prior_bands = _committed_paths(bands_dir, cur)
+        prior_index = _committed_paths(index_dir, cur)
+        index = (
+            (
+                spark.read.schema(bands_new.schema).parquet(*prior_bands),
+                spark.read.schema(sk_new.schema).parquet(*prior_index),
             )
-            if prior_band_paths
-            else bands_new
+            if prior_bands and prior_index
+            else None
         )
-        pairs, _ = candidate_pairs(buckets, cfg.lsh.max_bucket)
-        # only pairs that touch this batch are new information — pairs
-        # entirely within the index were flagged when their batch arrived
-        nid = sk_new.select("clip_id")
-        pairs_new = (
-            pairs.join(nid.withColumnRenamed("clip_id", "a"), "a", "leftsemi")
-            .unionByName(pairs.join(nid.withColumnRenamed("clip_id", "b"), "b", "leftsemi"))
-            .dropDuplicates(["a", "b"])
-        )
-        prior_index_paths = _committed_paths(index_dir, cur)
-        sk_all = (
-            sk_new.unionByName(spark.read.schema(sk_new.schema).parquet(*prior_index_paths))
-            if prior_index_paths
-            else sk_new
-        )
-        scored = score_pairs(pairs_new, sk_all, cfg)
         # transcripts for the LCS stage come from the archive (all files
         # the stream has ever seen, incl. this batch) — column-pruned scan
         clips_hist = spark.read.schema(CLIPS_SCHEMA).parquet(archive_dir)
-        flags = verify_pairs(scored, clips_hist, cfg)
+        flags, _ = near_dup_pairs(sk_new, clips_hist, cfg, index=index)
         flags.write.mode("overwrite").parquet(_batch_path(flags_dir, batch_id, sid))
     if not bands_done:
         bands_new.write.mode("overwrite").parquet(_batch_path(bands_dir, batch_id, sid))

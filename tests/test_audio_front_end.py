@@ -45,8 +45,13 @@ _WAV = encode_wav(np.full(4000, 0.25, dtype=np.float32), 16000)
         (b"RIFF", "wav", 16000),
         (_WAV, "wav", 0),
         (_WAV, "wav", -8000),
+        (encode_wav(np.empty(0, dtype=np.float32), 16000), "wav", 0),
+        (encode_wav(np.empty(0, dtype=np.float32), 16000), "wav", -5),
     ],
-    ids=["unsupported-codec", "truncated-wav", "header-only-wav", "sr-zero", "sr-negative"],
+    ids=[
+        "unsupported-codec", "truncated-wav", "header-only-wav", "sr-zero", "sr-negative",
+        "empty-sr-zero", "empty-sr-negative",
+    ],
 )
 def test_decode_work_pcm_failure_is_none(buf, codec, sr_hz):
     assert decode_work_pcm(buf, codec, sr_hz, 16000) is None

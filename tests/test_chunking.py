@@ -57,6 +57,25 @@ def embedded_corpus(spark):
     return spark.createDataFrame(rows, schema=CLIPS_SCHEMA)
 
 
+def test_chunk_codes_follow_the_sketch_family(spark, embedded_corpus):
+    # a minimizer chunk sketch keeps a proper subset of the chunk's
+    # full shingle set, as the whole-clip sketch does
+    from dataclasses import replace
+
+    full_cfg = PipelineConfig()
+    mini_cfg = replace(full_cfg, sketch=replace(full_cfg.sketch, audio_select="minimizer"))
+
+    def codes(cfg):
+        pdf = sketch_clips_chunked(embedded_corpus, cfg).toPandas()
+        pdf = pdf[pdf.decode_ok]
+        return {(r.clip_id, r.chunk_idx): set(r.codes.tolist()) for r in pdf.itertuples()}
+
+    full, mini = codes(full_cfg), codes(mini_cfg)
+    assert full.keys() == mini.keys() and len(full) > 3
+    for key, m in mini.items():
+        assert m < full[key], key
+
+
 def test_embedded_excerpt_found_via_chunks(spark, embedded_corpus):
     cfg = PipelineConfig()
     sk = sketch_clips_chunked(embedded_corpus, cfg, chunk_sec=2.0, overlap_sec=0.5)

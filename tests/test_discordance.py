@@ -14,7 +14,7 @@ from kmcp_spark.corpus import make_rows
 from kmcp_spark.operators.discordance import classify_pairs, discordant_pairs
 from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
 from kmcp_spark.operators.sketch import sketch_clips
-from kmcp_spark.operators.verify import score_pairs, verify_pairs
+from kmcp_spark.plans.pipeline import near_dup_pairs
 
 
 def _domain_cfg():
@@ -146,12 +146,9 @@ def test_domain_bands_surface_single_modality_pairs(spark):
     assert row["take1"].n_text * 8 < row["take1"].size + row["take2"].size
 
     p0, _ = candidate_pairs(
-        band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band), cfg.lsh.max_bucket
+        band_buckets(sk, replace(cfg.lsh, domain_bands=0)), cfg.lsh.max_bucket
     )
-    p1, _ = candidate_pairs(
-        band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands),
-        cfg.lsh.max_bucket,
-    )
+    p1, _ = candidate_pairs(band_buckets(sk, cfg.lsh), cfg.lsh.max_bucket)
     assert p0.count() == 0, "combined-only banding should not reach this pair"
     got = p1.collect()
     assert len(got) == 1 and got[0].a == "take1" and got[0].b == "take2"
@@ -177,7 +174,7 @@ def test_null_domain_signature_emits_no_bands(spark):
     sk = sketch_clips(spark.createDataFrame(pdf), cfg)
     rows = sk.collect()
     assert all(r.minhash_audio is None for r in rows)
-    buckets = band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands)
+    buckets = band_buckets(sk, cfg.lsh)
     audio_rows = buckets.filter(F.col("band_id") >= 20_000).count()
     assert audio_rows == 0
 
@@ -207,7 +204,7 @@ def test_config_guards(spark):
     # banding without domain signatures in the sketch table
     sk = sketch_clips(clips, PipelineConfig())
     with pytest.raises(ValueError, match="domain signatures"):
-        band_buckets(sk, 32, 4, domain_bands=4)
+        band_buckets(sk, short.lsh)
 
 
 # --------------------------------------------------------- end-to-end
@@ -218,13 +215,8 @@ def test_discordant_pairs_end_to_end(spark):
     raw = _rows(140)
     clips = spark.createDataFrame(raw.drop(columns=["cluster_id", "transform"]))
     sk = sketch_clips(clips, cfg).localCheckpoint(eager=True)
-    pairs, _ = candidate_pairs(
-        band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands),
-        cfg.lsh.max_bucket,
-    )
-    verified = verify_pairs(score_pairs(pairs, sk, cfg), clips, cfg).localCheckpoint(
-        eager=True
-    )
+    verified, _ = near_dup_pairs(sk, clips, cfg)
+    verified = verified.localCheckpoint(eager=True)
     disc = discordant_pairs(verified).toPandas()
     tmap = dict(zip(raw.clip_id, raw["transform"]))
     by_class = {

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from kmcp_spark.config import LSHConfig
 from kmcp_spark.operators.lsh import (
     _AUDIO_BAND_BASE,
     _TEXT_BAND_BASE,
@@ -77,7 +78,7 @@ def _assert_same_rows(got, want):
 
 def test_combined_bands_match_reference(sketches):
     _assert_same_rows(
-        band_buckets(sketches, BANDS, ROWS),
+        band_buckets(sketches, LSHConfig(bands=BANDS, rows_per_band=ROWS)),
         _reference_band_rows(sketches, BANDS, ROWS, "clip_id"),
     )
 
@@ -90,7 +91,9 @@ def test_domain_bands_match_reference(sketches):
         .union(_reference_band_rows(sketches, DOMAIN_BANDS, ROWS, "clip_id",
                                     "minhash_audio", _AUDIO_BAND_BASE))
     )
-    got = band_buckets(sketches, BANDS, ROWS, domain_bands=DOMAIN_BANDS)
+    got = band_buckets(
+        sketches, LSHConfig(bands=BANDS, rows_per_band=ROWS, domain_bands=DOMAIN_BANDS)
+    )
     assert got.filter(F.col("band_id") >= _AUDIO_BAND_BASE).count() > 0
     _assert_same_rows(got, want)
 

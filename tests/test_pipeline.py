@@ -209,3 +209,47 @@ def test_no_cached_relations_after_run(spark, corpus, tmp_path_factory):
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     leaked = after - before
     assert not leaked, f"pipeline run left cached RDDs: {leaked}"
+
+
+@pytest.mark.parametrize("domain_bands", [0, 4], ids=["combined", "domain-bands"])
+def test_near_dup_pairs_index_probe_equals_self_join(spark, domain_bands):
+    """A probe of new sketches against an index of earlier ones finds
+    exactly the self-join's pairs that touch the new clips, scores
+    included: a batch pass is a probe against an empty index."""
+    from dataclasses import replace
+
+    from kmcp_spark.corpus import CLIPS_SCHEMA
+    from kmcp_spark.operators.lsh import band_buckets
+    from kmcp_spark.plans.pipeline import near_dup_pairs
+
+    cfg = PipelineConfig()
+    cfg = replace(
+        cfg,
+        sketch=replace(cfg.sketch, domain_perm=16 * (domain_bands > 0)),
+        lsh=replace(cfg.lsh, domain_bands=domain_bands),
+    )
+    # ids 40-43 are one planted cluster (base 40); 20-29 are independent.
+    # The cluster is split: 40 and 41 sit in the index, 42 and 43 arrive
+    # with the new rows, so the probe must find new-new and new-index
+    # pairs and must not re-emit the index-only pair (40, 41).
+    old_ids = [40, 41] + list(range(20, 26))
+    new_ids = [42, 43] + list(range(26, 30))
+    pdf = make_rows(np.array(old_ids + new_ids), min_dur_s=0.5, max_dur_s=0.8)
+    clips = spark.createDataFrame(
+        pdf.drop(columns=["cluster_id", "transform"]), schema=CLIPS_SCHEMA
+    )
+    sk = sketch_clips(clips, cfg).localCheckpoint(eager=True)
+    new = {f"clip_{i:010d}" for i in new_ids}
+    is_new = F.col("clip_id").isin(sorted(new))
+    sk_old, sk_new = sk.where(~is_new), sk.where(is_new)
+
+    got, _ = near_dup_pairs(sk_new, clips, cfg, index=(band_buckets(sk_old, cfg.lsh), sk_old))
+    want, _ = near_dup_pairs(sk, clips, cfg)
+    full = want.collect()
+    got_rows = sorted(got.collect())
+    assert got_rows == sorted(r for r in full if r.a in new or r.b in new)
+    m = [f"clip_{i:010d}" for i in (40, 41, 42, 43)]
+    assert (m[0], m[1]) in {(r.a, r.b) for r in full}
+    assert {(r.a, r.b) for r in got_rows} == {
+        (a, b) for i, a in enumerate(m) for b in m[i + 1 :]
+    } - {(m[0], m[1])}
