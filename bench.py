@@ -48,7 +48,7 @@ sys.path.insert(0, REPO)
 T0 = time.time()
 METRIC = "clips_per_sec_4n(dedup pipeline, N vs 4N cores)"
 LINE_BUDGET = 1800  # readers that keep only the last ~2000 chars of stdout still get it whole
-WARMUP_PASSES = 2  # one pass still leaves JIT/codegen residue in the small stages
+WARMUP_PASSES = 2  # the JIT is still warming up the small stages after one pass
 # per-leg detail and error text: written to the side file, never onto the line
 _SIDE_KEYS = (
     "n_clips", "cores_n", "cores_4n", "clips_per_sec_n", "wall_sec_n",

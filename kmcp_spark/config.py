@@ -263,8 +263,13 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", f"-Xms{mem}")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # audio rows are large; smaller splits balance the map waves
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
+        # one pass generates ~98 classes, and at the default 100 entries
+        # the codegen cache evicts before it is full: every identical
+        # later pass recompiled ~50 of them on the crawl_batch benchmark
+        # input and on the 240-clip test corpus, 30 on dup_dense
+        # (CodegenMetrics compilation count), and the JIT then compiled
+        # the fresh classes again.  At 1000 a warm pass compiles nothing
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # measured on this corpus (PCM16 + random 64-bit hashes — both
         # incompressible): snappy EXPANDS the bytes column 6% (71.3 vs
         # 67.1 MB per 500-clip file) and zstd-3 saves only 7% while

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from kmcp_spark.runtime import drop_zip_subpath_finders
+
 
 # Quantized cosine: components scaled by 1e6 and rounded to bigint, so
 # dot products and square norms are EXACT integer sums — identical in any
@@ -131,6 +133,7 @@ def cosine_dup_pairs(
     tagged = _block_pair_tagged(emb, B)
 
     def gemm(key, pdf):
+        drop_zip_subpath_finders()
         hits = _block_pair_hits(pdf, int(key[0]), int(key[1]), threshold, round_digits)
         if hits is None:
             return pd.DataFrame({"a": [], "b": [], "cosine": []}).astype(
@@ -220,6 +223,7 @@ def _cell_assigner(C, cell_ids, cn2):
     import numpy as np
 
     def assign(batches):
+        drop_zip_subpath_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -319,6 +323,7 @@ def ivf_topk(
         """quantized cosine vs the in-closure query matrix, vectorized:
         identical float64 op order to the JVM/SQL form
         (exact int64 dot -> double / sqrt(double * double))."""
+        drop_zip_subpath_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -411,6 +416,7 @@ def hyperplane_lsh_topk(
     pows = (2 ** np.arange(n_planes, dtype=np.int64))
 
     def bucketize(batches):
+        drop_zip_subpath_finders()
         flat = None
         for pdf in batches:
             if not len(pdf):
@@ -513,6 +519,7 @@ def semantic_dup_pairs(
     tagged = _block_pair_tagged(asg, n_blocks)
 
     def gemm(key, pdf):
+        drop_zip_subpath_finders()
         cell = int(key[0])
         hits = _block_pair_hits(pdf, int(key[1]), int(key[2]), threshold, round_digits)
         if hits is None:
@@ -579,6 +586,7 @@ def pq_topk(
     Qm, query_ids = head_q[:n_queries], head_ids[:n_queries]
 
     def encode(batches):
+        drop_zip_subpath_finders()
         for pdf in batches:
             if not len(pdf):
                 continue

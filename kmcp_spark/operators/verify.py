@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from kmcp_spark.config import PipelineConfig
+from kmcp_spark.runtime import drop_zip_subpath_finders
 
 VERIFIED_SCHEMA_EXTRA = ", lcs_len int"
 
@@ -241,6 +242,7 @@ def verify_pairs(
     )
 
     def lcs_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_subpath_finders()
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -41,7 +41,8 @@ matter where a failure lands between the three writes.  A NEW stream
 lineage (fresh/deleted checkpoint → new qid) restarts batch ids at 0;
 scoping the key by qid means its batch 0 neither skips on nor
 overwrites the old lineage's ``batch_id=0`` data — old-lineage flags,
-bands, and index rows remain part of the probed history.
+bands, and index rows remain part of the probed history, and the clips
+it re-delivers that the index already holds are dropped before sketching.
 Partially-written directories (no ``_SUCCESS``) are excluded from reads
 and simply overwritten on replay.
 """
@@ -183,6 +184,13 @@ def _flag_batch(
     bands_done = _is_committed(bands_dir, batch_id, sid)
     if flags_done and index_done and bands_done:
         return  # fully-committed replay (foreachBatch is at-least-once)
+    prior_index = _committed_paths(index_dir, cur)
+    if prior_index:
+        # a new lineage over the same drop directory re-delivers every
+        # clip; one already indexed would meet its own copy in batch ∪
+        # index and re-flag all of its pairs
+        indexed = spark.read.schema("clip_id string").parquet(*prior_index)
+        batch = batch.join(indexed, "clip_id", "left_anti")
     sk_new = sketch_clips(min_dur_gate(batch, cfg), cfg).localCheckpoint(eager=True)
     bands_new = band_buckets(sk_new, cfg.lsh)
     if not flags_done:
@@ -193,7 +201,6 @@ def _flag_batch(
         # instead of inferring it (a Spark job per read).  The first
         # batch finds no index and takes the chain's self-join path
         prior_bands = _committed_paths(bands_dir, cur)
-        prior_index = _committed_paths(index_dir, cur)
         index = (
             (
                 spark.read.schema(bands_new.schema).parquet(*prior_bands),

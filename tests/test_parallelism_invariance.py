@@ -47,3 +47,66 @@ def test_pipeline_output_invariant_to_parallelism(
             "cluster assignments changed with parallelism"
         )
     _shared["memberships"] = got
+
+
+@pytest.fixture(scope="module")
+def mixed_rate_parquet(tmp_path_factory):
+    """40 clips of the default 8/16/44.1 kHz mix as two ~2 MB parquet
+    files of 4-row row groups, so a 1 MB split cap cuts inside them."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kmcp_spark.corpus import make_rows
+
+    pdf = make_rows(np.arange(40), min_dur_s=1.0, max_dur_s=3.0)
+    assert pdf["sr_hz"].nunique() > 1
+    pdf = pdf.drop(columns=["cluster_id", "transform"]).astype(
+        {"sr_hz": "int32", "dur_ms": "int32"}
+    )
+    path = tmp_path_factory.mktemp("mixed_rate")
+    for i, part in enumerate((pdf[:20], pdf[20:])):
+        table = pa.Table.from_pandas(part, preserve_index=False)
+        pq.write_table(table, path / f"part-{i}.parquet", row_group_size=4)
+    return str(path)
+
+
+def _sketches_under(spark, path, key, value):
+    """Sketches of the clips at ``path`` with ``key`` set to ``value``
+    (None: the session's own setting), and the scan's split count."""
+    from kmcp_spark.corpus import CLIPS_SCHEMA
+    from kmcp_spark.operators.sketch import sketch_clips
+
+    old = spark.conf.get(key, None)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        clips = spark.read.schema(CLIPS_SCHEMA).parquet(path)
+        n_splits = clips.rdd.getNumPartitions()
+        sk = sketch_clips(clips, PipelineConfig()).localCheckpoint(eager=True)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    return sk, n_splits
+
+
+@pytest.mark.parametrize(
+    "key,a,b",
+    [
+        ("spark.sql.files.maxPartitionBytes", str(1024 * 1024), None),
+        ("spark.sql.execution.arrow.maxRecordsPerBatch", "1", "256"),
+    ],
+    ids=["split-size", "arrow-batch"],
+)
+def test_sketches_invariant_to_split_and_batch_size(spark, mixed_rate_parquet, key, a, b):
+    """Each clip's sketch depends on the clip alone: neither the scan's
+    split size (1 MB vs the session default) nor the Arrow batch size
+    (1 vs 256 rows) changes a row."""
+    sk_a, splits_a = _sketches_under(spark, mixed_rate_parquet, key, a)
+    sk_b, splits_b = _sketches_under(spark, mixed_rate_parquet, key, b)
+    if key == "spark.sql.files.maxPartitionBytes":
+        assert splits_a > splits_b
+    assert sk_a.count() == sk_b.count() == 40
+    assert sk_a.exceptAll(sk_b).isEmpty() and sk_b.exceptAll(sk_a).isEmpty()

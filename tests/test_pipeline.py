@@ -145,6 +145,21 @@ def test_pass_spark_job_budget(counted_run):
     assert 0 < n_jobs <= 20, n_jobs
 
 
+def test_warm_pass_compiles_no_code(spark, corpus, tmp_path_factory):
+    """The session's codegen cache holds every class one pass generates,
+    so an identical second pass compiles none (about 50 did at the
+    default 100-entry cache)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    clips, _ = corpus
+    compiled = []
+    for i in range(2):
+        out = str(tmp_path_factory.mktemp(f"pipe_warm{i}"))
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        DedupPipeline(spark, PipelineConfig(), out).run(clips)
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[1] == 0, compiled
+
+
 def test_partition_lineage_records_every_stage_file(result):
     """North rule: checkpoints carry per-partition lineage — one record
     per parquet file with rows + bytes, consistent with stage metrics."""

@@ -139,6 +139,34 @@ def test_flag_batch_replay_is_idempotent(spark, tmp_out):
     ]
 
 
+def test_new_lineage_over_same_drop_dir_adds_nothing(spark, tmp_out):
+    """A new stream lineage (fresh checkpoint) re-delivers every file of
+    the drop directory; clips the index already holds are dropped before
+    sketching, so flags, bands and index stay as the first lineage left
+    them."""
+    in_dir = os.path.join(tmp_out, "in")
+    index = os.path.join(tmp_out, "index")
+    flags = os.path.join(tmp_out, "flags")
+    os.makedirs(in_dir)
+    cfg = PipelineConfig()
+    _drop(spark, in_dir, list(range(40, 44)) + list(range(20, 26)))
+
+    def state():
+        return (
+            sorted(spark.read.parquet(flags).collect()),
+            sorted(spark.read.parquet(index + "_bands").collect()),
+            sorted(r.clip_id for r in spark.read.parquet(index).select("clip_id").collect()),
+        )
+
+    streaming_neardup_flags(spark, in_dir, index, flags, os.path.join(tmp_out, "ckpt1"), cfg)
+    first = state()
+    assert len(first[0]) == 6  # the planted cluster 40-43, each pair once
+    assert len(first[2]) == len(set(first[2])) == 10
+
+    streaming_neardup_flags(spark, in_dir, index, flags, os.path.join(tmp_out, "ckpt2"), cfg)
+    assert state() == first
+
+
 def test_stream_id_not_cached_across_lineages(tmp_out):
     """Deleting a checkpoint and starting a new stream at the SAME path
     within one driver process must yield the new lineage's id — a
