@@ -19,7 +19,8 @@
 The artifact is the last stdout line: one JSON object under LINE_BUDGET
 chars whose metric/value/unit agree.  A best-so-far line is printed
 after every round and every query and again on SIGTERM/SIGINT; the
-per-leg walls, stage walls, round flags and any scaling error go to
+per-leg walls, the JIT compile time of each timed pass (``jit_ms``),
+stage walls, round flags and any scaling error go to
 ``_bench_side.json``.
 
 Env knobs: SPARK_GRAFT_SF_DIR (query data, default sf0.1),
@@ -52,7 +53,8 @@ WARMUP_PASSES = 2  # the JIT is still warming up the small stages after one pass
 # per-leg detail and error text: written to the side file, never onto the line
 _SIDE_KEYS = (
     "n_clips", "cores_n", "cores_4n", "clips_per_sec_n", "wall_sec_n",
-    "wall_sec_4n", "stage_ms_n", "stage_ms_4n", "round_flags", "scaling_error",
+    "wall_sec_4n", "jit_ms_n", "jit_ms_4n", "stage_ms_n", "stage_ms_4n", "round_flags",
+    "scaling_error",
 )
 _BEST: str | None = None  # latest line, re-printed on SIGTERM/SIGINT
 
@@ -137,15 +139,19 @@ def pipeline_run(cores: int, corpus_path: str, out_dir: str) -> None:
     clips = spark.read.parquet(corpus_path)
     n = clips.count()
     cfg = PipelineConfig()
+    # the JVM's summed JIT compile time: its delta over the timed pass
+    # keeps the compiler's share of a leg visible
+    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     # AQE plans from runtime statistics, so only full-size passes warm up
     # the plans the timed pass runs
     for w in range(WARMUP_PASSES + 1):
         shutil.rmtree(out_dir, ignore_errors=True)
-        t0 = time.time()
+        jit0, t0 = jit.getTotalCompilationTime(), time.time()
         res = DedupPipeline(spark, cfg, out_dir).run(clips)
-        wall = time.time() - t0
+        wall, jit_ms = time.time() - t0, jit.getTotalCompilationTime() - jit0
     recall, precision = _pair_quality(spark, res.clusters, corpus_path + "_truth")
     print(json.dumps({"cores": cores, "n_clips": n, "wall_sec": round(wall, 2),
+                      "jit_ms": jit_ms,
                       "stage_ms": {m.stage: m.wall_ms for m in res.metrics},
                       "recall": recall, "precision": precision}))
     spark.stop()
@@ -199,6 +205,8 @@ def _scaling_summary(legs: dict[int, list[dict]], cores_lo: int, cores_hi: int) 
         "clips_per_sec_n": round(n / t_lo, 2),
         "wall_sec_n": [leg["wall_sec"] for leg in lo],
         "wall_sec_4n": [leg["wall_sec"] for leg in hi],
+        "jit_ms_n": [leg["jit_ms"] for leg in lo],
+        "jit_ms_4n": [leg["jit_ms"] for leg in hi],
         "stage_ms_n": [leg["stage_ms"] for leg in lo],
         "stage_ms_4n": [leg["stage_ms"] for leg in hi],
         "round_flags": flags,
@@ -228,7 +236,7 @@ def bench_scaling(cores_hi: int, n_clips: int, rounds: int, result: dict) -> Non
                 shutil.rmtree(out, ignore_errors=True)
             leg = json.loads(stdout.splitlines()[-1])
             legs[cores].append(leg)
-            log(f"round {r + 1} local[{cores}]: {leg['wall_sec']}s, recall "
+            log(f"round {r + 1} local[{cores}]: {leg['wall_sec']}s, jit {leg['jit_ms']} ms, recall "
                 f"{leg['recall']}, precision {leg['precision']}, stages {leg['stage_ms']}")
         last = time.time() - t0
         result.update(_scaling_summary(legs, cores_lo, cores_hi))

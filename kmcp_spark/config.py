@@ -246,6 +246,19 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(512 * 1024 * 1024))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))
     mem = _driver_mem(cores)
+    # JIT policy: C1 only.  With the default tiered C1+C2, the compiler
+    # threads took about half of a pipeline pass's CPU on a 4-CPU /
+    # 15 GiB host (local[4], 2g, perfbench dup_dense input, seed 41:
+    # 9.7 / 8.0 / 7.4 s of compile time in passes 2-4, 14.9 / 14.2 /
+    # 12.4 CPU-s per pass; C1 only: 1.7 / 1.0 / 0.8 s and 8.7 / 6.7 /
+    # 7.0 CPU-s), competing with the task slots and the Python workers.
+    # 10 alternating perfbench pairs: cpu_ms_per_clip 15.9 -> 9.1 on
+    # dup_dense and 19.7 -> 12.0 on crawl_batch, clips/s +8% / +17%.
+    # The cache size is required: C1 only otherwise falls back to the
+    # non-tiered 48 MB code cache, which Spark fills, so a long session
+    # flushes and recompiles (the 5th pass in one JVM rose from 8-9 to
+    # 14-15 CPU-s); at 240m nine passes stayed flat at 6.3-7.0 CPU-s
+    jit = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -260,7 +273,8 @@ def get_spark(
         # core counts; 256 keeps per-task batches ~25-130 MB
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory", mem)
-        .config("spark.driver.extraJavaOptions", f"-Xms{mem}")
+        .config("spark.driver.extraJavaOptions", f"-Xms{mem} {jit}")
+        .config("spark.executor.extraJavaOptions", jit)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # one pass generates ~98 classes, and at the default 100 entries

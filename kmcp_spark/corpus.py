@@ -45,7 +45,7 @@ import numpy as np
 import pandas as pd
 
 from kmcp_spark.functions.audio import encode_wav
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 CLIPS_SCHEMA = (
     "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string"
@@ -349,7 +349,7 @@ def generate_clips(spark, n: int, master_seed: int = 42,
     parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
 
     def gen(batches):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             yield make_rows(
                 pdf["id"].to_numpy(), master_seed, min_dur_s, max_dur_s,
@@ -490,7 +490,7 @@ def generate_images(spark, n: int, master_seed: int = 42, partitions: int | None
     parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
 
     def gen(batches):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             yield make_image_rows(pdf["id"].to_numpy(), master_seed)
 

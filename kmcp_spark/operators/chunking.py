@@ -31,7 +31,7 @@ from kmcp_spark.functions.hashing import splitmix64
 from kmcp_spark.functions.minhash import minhash_signatures
 from kmcp_spark.operators.lsh import band_rows, bucket_pairs
 from kmcp_spark.operators.sketch import _AUDIO_SALT, decode_batch
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 CHUNK_SKETCH_SCHEMA = (
     "clip_id string, chunk_idx int, n_chunks int, size bigint, "
@@ -72,7 +72,7 @@ def sketch_clips_chunked(
     overlap_frames = int(overlap_sec * frames_per_sec)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue

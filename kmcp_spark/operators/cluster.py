@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from kmcp_spark.runtime import local_relation
+
 
 def connected_components(
     pairs: DataFrame,
@@ -58,7 +60,7 @@ def connected_components(
     edges, so the cap is on directed edges).  At or under the cap,
     pruning, union-find and the EM rounds all run in driver Python over
     that one list (`_resolve_on_driver`), and the labels come back
-    through one ``createDataFrame`` — one collect (1–2 Spark jobs: the
+    as one `local_relation` — one collect (1–2 Spark jobs: the
     limit scans partitions incrementally) instead of the distributed
     chain's checkpoint, count and ~2 jobs per round, the standard
     size-gated switch of production CC implementations.  The bound is on
@@ -75,8 +77,9 @@ def connected_components(
     max_pairs = driver_max_edges // 2
     rows = pairs.select(*cols).limit(max_pairs + 1).collect()
     if len(rows) <= max_pairs:
-        labels = pairs.sparkSession.createDataFrame(
-            list(_resolve_on_driver(rows, prune_alpha, em_iters).items()),
+        labels = local_relation(
+            pairs.sparkSession,
+            _resolve_on_driver(rows, prune_alpha, em_iters).items(),
             "clip_id string, cluster_id string",
         )
         if all_nodes is None:

@@ -39,7 +39,7 @@ from kmcp_spark.functions.shingle import (
 )
 from kmcp_spark.functions.simhash import simhash64
 from kmcp_spark.operators.lsh import band_rows, bucket_pairs
-from kmcp_spark.runtime import drop_zip_subpath_finders, widen_narrow_scan
+from kmcp_spark.runtime import drop_zip_finders, widen_narrow_scan
 
 
 def exact_dup_groups(docs: DataFrame, only_dups: bool = False) -> DataFrame:
@@ -262,7 +262,7 @@ def doc_signatures(
     re-derived strings, `kmcp/cmd/util-db-search.go:939-964`)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -497,7 +497,7 @@ def multi_doc_signatures(
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue

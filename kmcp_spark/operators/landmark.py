@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from kmcp_spark.config import SketchConfig
 from kmcp_spark.functions.audio import decode_work_pcm
 from kmcp_spark.functions.landmark import landmark_hashes
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 LANDMARK_SCHEMA = "clip_id string, lhash bigint, t_idx int"
 
@@ -57,7 +57,7 @@ def clip_landmarks(clips: DataFrame, **kernel_kwargs) -> DataFrame:
     sr_work = SketchConfig().sr_work
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             ids: list[str] = []
             hs: list[np.ndarray] = []

@@ -17,7 +17,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 IMAGE_DHASH_SCHEMA = "item_id string, dhash bigint, width int, height int, decode_ok boolean"
 
@@ -31,7 +31,7 @@ def image_dhash(items: DataFrame, id_col: str = "item_id", bytes_col: str = "byt
     from kmcp_spark.functions.image import dhash64_batch
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             hashes, ws, hs, ok = dhash64_batch(pdf[bytes_col].tolist())
             yield pd.DataFrame(

@@ -40,7 +40,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 FRAME_STATS_SCHEMA = (
     "clip_id string, t_idx int, rms_q bigint, peak_q bigint, zc int"
@@ -95,7 +95,7 @@ def clip_frame_stats(clips: DataFrame) -> DataFrame:
     sr_work = sk.sr_work
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             out: list[pd.DataFrame] = []
             for cid, buf, sr, codec in zip(

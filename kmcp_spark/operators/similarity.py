@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders, local_relation
 
 
 # Quantized cosine: components scaled by 1e6 and rounded to bigint, so
@@ -133,7 +133,7 @@ def cosine_dup_pairs(
     tagged = _block_pair_tagged(emb, B)
 
     def gemm(key, pdf):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         hits = _block_pair_hits(pdf, int(key[0]), int(key[1]), threshold, round_digits)
         if hits is None:
             return pd.DataFrame({"a": [], "b": [], "cosine": []}).astype(
@@ -157,7 +157,7 @@ def _block_pair_tagged(emb: DataFrame, B: int) -> DataFrame:
     mem = [(b, b, j, 0) for b in range(B) for j in range(b, B)] + [
         (b, i, b, 1) for b in range(B) for i in range(b)
     ]
-    memdf = spark.createDataFrame(mem, "block int, gi int, gj int, side int")
+    memdf = local_relation(spark, mem, "block int, gi int, gj int, side int")
     return emb.withColumn(
         "block", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int")
     ).join(F.broadcast(memdf), "block")
@@ -223,7 +223,7 @@ def _cell_assigner(C, cell_ids, cn2):
     import numpy as np
 
     def assign(batches):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -309,7 +309,7 @@ def ivf_topk(
         for qi in range(len(query_ids))
         for ci in np.argsort(qd2[qi], kind="stable")[:n_probe]
     ]
-    probes = spark.createDataFrame(probe_rows, "query_id bigint, cell_id bigint")
+    probes = local_relation(spark, probe_rows, "query_id bigint, cell_id bigint")
 
     emb_t = emb.schema["embedding"].dataType.simpleString()
     qpos = {int(v): i for i, v in enumerate(query_ids)}
@@ -323,7 +323,7 @@ def ivf_topk(
         """quantized cosine vs the in-closure query matrix, vectorized:
         identical float64 op order to the JVM/SQL form
         (exact int64 dot -> double / sqrt(double * double))."""
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -416,7 +416,7 @@ def hyperplane_lsh_topk(
     pows = (2 ** np.arange(n_planes, dtype=np.int64))
 
     def bucketize(batches):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         flat = None
         for pdf in batches:
             if not len(pdf):
@@ -519,7 +519,7 @@ def semantic_dup_pairs(
     tagged = _block_pair_tagged(asg, n_blocks)
 
     def gemm(key, pdf):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         cell = int(key[0])
         hits = _block_pair_hits(pdf, int(key[1]), int(key[2]), threshold, round_digits)
         if hits is None:
@@ -586,7 +586,7 @@ def pq_topk(
     Qm, query_ids = head_q[:n_queries], head_ids[:n_queries]
 
     def encode(batches):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -620,7 +620,7 @@ def pq_topk(
                 (int(qid), m, c, int(dd[c])) for c in range(n_codes)
             )
     dt = F.broadcast(
-        spark.createDataFrame(rows, "query_id bigint, m int, code int, dist bigint")
+        local_relation(spark, rows, "query_id bigint, m int, code int, dist bigint")
     )
 
     stacked = enc.select(

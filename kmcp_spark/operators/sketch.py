@@ -39,7 +39,7 @@ from kmcp_spark.functions.hashing import splitmix64
 from kmcp_spark.functions.minhash import minhash_signatures, scaled_sketch
 from kmcp_spark.functions.shingle import char_kgram_hashes_batch, word_ngram_hashes_batch
 from kmcp_spark.functions.simhash import simhash64
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 _U64 = np.uint64
 _AUDIO_SALT = 0xA5D10  # domain separation between text and audio hash spaces
@@ -165,7 +165,7 @@ def sketch_clips(clips: DataFrame, cfg: PipelineConfig) -> DataFrame:
         )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if len(pdf):
                 yield sketch_batch(pdf, cfg)

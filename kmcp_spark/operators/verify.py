@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from kmcp_spark.config import PipelineConfig
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 VERIFIED_SCHEMA_EXTRA = ", lcs_len int"
 
@@ -242,7 +242,7 @@ def verify_pairs(
     )
 
     def lcs_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -43,12 +43,6 @@ class StageMetric:
     rows_out: int
     wall_ms: int
     resumed: bool
-    # sub-stage decomposition (fixed-cost attribution, r6): wall of the
-    # checkpoint write job vs everything after it (footer walk, lineage
-    # record, marker).  write_ms includes the stage's actual compute —
-    # build() is lazy, the write job executes the plan.
-    write_ms: int = 0
-    post_ms: int = 0
 
 
 @dataclass
@@ -93,9 +87,7 @@ class DedupPipeline:
             self.metrics.append(StageMetric(name, -1, int((time.time() - t0) * 1000), True))
             return df
         df = build()
-        t_w = time.time()
         write_checkpoint_data(df, path)
-        t_post = time.time()
         # the schema is the one just written: inferring it back would be
         # one more Spark job (a footer read) and ~45 ms of driver time
         out = read_checkpoint(self.spark, path, schema=df.schema)
@@ -130,17 +122,7 @@ class DedupPipeline:
         # checkpoint_valid() => this stage's files are lineage-recorded
         # (a crash in between re-runs the stage; overwrite is idempotent)
         write_checkpoint_marker(path, self.fp)
-        now = time.time()
-        self.metrics.append(
-            StageMetric(
-                name,
-                n,
-                int((now - t0) * 1000),
-                False,
-                write_ms=int((t_post - t_w) * 1000),
-                post_ms=int((now - t_post) * 1000),
-            )
-        )
+        self.metrics.append(StageMetric(name, n, int((time.time() - t0) * 1000), False))
         return out
 
     def run(self, clips: DataFrame) -> PipelineResult:
@@ -242,8 +224,6 @@ class DedupPipeline:
                 "stage": m.stage,
                 "rows_out": m.rows_out,
                 "wall_ms": m.wall_ms,
-                "write_ms": m.write_ms,
-                "post_ms": m.post_ms,
                 "resumed": m.resumed,
                 "fingerprint": self.fp,
                 "ts": time.time(),

@@ -40,7 +40,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 
 def stage_ordered_replay(df: DataFrame, path: str, ts_col: str = "ts", n_files: int = 12) -> None:
@@ -195,7 +195,7 @@ def streaming_sessionize(
     schema = spark.read.parquet(input_dir).schema
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         if state.exists:
             (starts, ends, ns, qs) = state.get
             sessions = [list(t) for t in zip(starts, ends, ns, qs)]

@@ -16,7 +16,7 @@ _STAGES = ("exact_groups", "sketches", "candidates", "verified", "clusters")
 
 
 def _leg(wall, stage_ms=None, recall=1.0, precision=1.0):
-    return {"cores": 0, "n_clips": 16000, "wall_sec": wall,
+    return {"cores": 0, "n_clips": 16000, "wall_sec": wall, "jit_ms": 2345,
             "stage_ms": stage_ms or {s: 12345 for s in _STAGES},
             "recall": recall, "precision": precision}
 
@@ -128,3 +128,4 @@ def test_scaling_summary_min_estimator():
     assert s["rounds"] == 2 and s["flagged_rounds"] == 1
     assert s["round_flags"] == [[], ["anti-scale:verified"]]
     assert s["wall_sec_n"] == [90.0, 140.0] and s["wall_sec_4n"] == [30.0, 27.0]
+    assert s["jit_ms_n"] == s["jit_ms_4n"] == [2345, 2345]

@@ -315,6 +315,25 @@ def test_cc_driver_and_loop_agree(spark):
     assert fast["x"] == "d0"  # reassigned by support, not by connectivity
 
 
+def test_cc_driver_labels_are_a_local_relation(spark):
+    """The driver path's labels reach the JVM as a LocalRelation (no
+    pickled Python RDD, so no Python-worker job to read them back), and
+    a graph with zero pairs still labels every node by itself."""
+    pairs = spark.range(3).selectExpr(
+        "CAST(id AS STRING) AS a", "CAST(id + 1 AS STRING) AS b"
+    )
+    labels = connected_components(pairs)
+    assert labels._jdf.queryExecution().logical().getClass().getSimpleName() == "LocalRelation"
+    assert {r.clip_id: r.cluster_id for r in labels.collect()} == dict.fromkeys("0123", "0")
+
+    nodes = spark.range(5).selectExpr("CAST(id AS STRING) AS clip_id")
+    alone = connected_components(pairs.limit(0), all_nodes=nodes)
+    assert "LogicalRDD" not in alone._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted((r.clip_id, r.cluster_id) for r in alone.collect()) == [
+        (str(i), str(i)) for i in range(5)
+    ]
+
+
 # --------------------------------------------------- matched_chunk_frac
 
 def test_matched_chunk_frac_counts_smaller_side(spark):

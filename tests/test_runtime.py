@@ -1,11 +1,12 @@
-"""Python-worker helper: dropping the import finders of package paths
-inside zip archives leaves imports from the archive working."""
+"""Python-worker helper: dropping the import finders of zip archives,
+roots and package paths inside them, leaves imports from the archive
+working."""
 
 import importlib
 import sys
 import zipfile
 
-from kmcp_spark.runtime import drop_zip_subpath_finders
+from kmcp_spark.runtime import drop_zip_finders
 
 
 def test_drop_zip_subpath_finders(tmp_path):
@@ -23,9 +24,9 @@ def test_drop_zip_subpath_finders(tmp_path):
         assert importlib.import_module("zpkg.one.mod").VALUE == 1
         assert any(p.startswith(inside) for p in sys.path_importer_cache)
 
-        drop_zip_subpath_finders()
+        drop_zip_finders()
         assert not [p for p in sys.path_importer_cache if p.startswith(inside)]
-        assert root in sys.path_importer_cache  # the archive's own finder stays
+        assert root not in sys.path_importer_cache  # the archive's own finder goes too
 
         importlib.invalidate_caches()
         assert importlib.import_module("zpkg.two.mod").VALUE == 2
