@@ -257,7 +257,16 @@ def get_spark(
     # The cache size is required: C1 only otherwise falls back to the
     # non-tiered 48 MB code cache, which Spark fills, so a long session
     # flushes and recompiles (the 5th pass in one JVM rose from 8-9 to
-    # 14-15 CPU-s); at 240m nine passes stayed flat at 6.3-7.0 CPU-s
+    # 14-15 CPU-s); at 240m nine passes stayed flat at 6.3-7.0 CPU-s.
+    # The cost: C1 code runs slower once warm.  bench.py's 16k corpus,
+    # seven fresh-JVM legs a side, timed 3rd pass at local[4]: compile
+    # time 8.5-15.6 -> 0.9-1.2 s, wall median 25.8 -> 27.1 s (inside the
+    # default's 24.7-29.1 s quartiles); the local[1] legs, where C2 has
+    # three idle CPUs, ran 70-73 -> 78-92 s.  Tiered with one C2 thread
+    # (-XX:CICompilerCount=2) was no better there (28.7 s median at
+    # local[4], 74-88 s at local[1]) and cut perfbench's cpu_ms_per_clip
+    # less: 13.9 / 14.6 against C1's 9.4 / 11.5 on dup_dense / crawl_batch
+    # (4 alternating pairs a workload)
     jit = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -274,7 +283,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory", mem)
         .config("spark.driver.extraJavaOptions", f"-Xms{mem} {jit}")
-        .config("spark.executor.extraJavaOptions", jit)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # one pass generates ~98 classes, and at the default 100 entries

@@ -20,9 +20,3 @@ def test_live_jvm_keeps_full_code_cache(spark):
     # long session fills, flushes and recompiles
     assert int(_vm_option(spark, "ReservedCodeCacheSize")) >= 240 * _MIB
 
-
-def test_executors_get_the_same_policy(spark):
-    driver = spark.sparkContext.getConf().get("spark.driver.extraJavaOptions")
-    executor = spark.sparkContext.getConf().get("spark.executor.extraJavaOptions")
-    for flag in ("-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=240m"):
-        assert flag in driver.split() and flag in executor.split()
