@@ -300,9 +300,10 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
                        buckets emit O(size) min/max anchor edges instead
                        (kmcp's escalation, kmcp/cmd/index.go:787-894).
 
-    ``n_oversized_buckets`` (nonzero — 64 bands x 1 giant bucket) rides
-    on every row, so the oracle hash-checks that the caps FIRED, not
-    just that the output is safe."""
+    ``n_oversized_buckets`` (nonzero — 64 bands x 1 giant bucket),
+    counted by a groupBy over the same staged relation, rides on every
+    row, so the oracle hash-checks that the caps FIRED, not just that
+    the output is safe."""
     from pyspark.sql import functions as F
 
     from kmcp_spark.corpus import skew_doc_rows
@@ -324,11 +325,14 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
     drop = bucket_pairs(rel, _SKEW_BUCKET_CAP, "doc_id").withColumn(
         "path", F.lit("drop")
     )
-    esc, oversized = candidate_pairs(
-        rel.withColumnRenamed("doc_id", "clip_id"), _SKEW_BUCKET_CAP
-    )
+    esc, _ = candidate_pairs(rel.withColumnRenamed("doc_id", "clip_id"), _SKEW_BUCKET_CAP)
     esc = esc.withColumn("path", F.lit("escalate"))
-    n_over = oversized.agg(F.count("*").alias("n_oversized_buckets"))
+    n_over = (
+        rel.groupBy("band_id", "band_hash")
+        .count()
+        .where(f"count > {_SKEW_BUCKET_CAP}")
+        .agg(F.count("*").alias("n_oversized_buckets"))
+    )
     cols = ["path", "a", "b", "shared_bands"]
     return drop.select(*cols).unionByName(esc.select(*cols)).crossJoin(n_over)
 

@@ -144,10 +144,7 @@ def _gram_tables(docs: DataFrame, n: int, max_gram_docs: int):
     # sweep the previous query's internal caches (deferred-release
     # protocol, runtime.py): without this a long-lived session running
     # many document queries accumulates every query's gram relations.
-    # Scoped to tag="doc" so the lsh-tagged oversized-bucket cache
-    # registered by candidate_pairs (operators/lsh.py) survives an
-    # interleaved document-dedup call.
-    release_deferred(tag="doc")
+    release_deferred()
     g = defer_unpersist(
         word_ngrams_df(docs, n)
         .select("doc_id", F.xxhash64("gram").alias("gram"))
@@ -188,7 +185,7 @@ def ngram_cap_audit(
 
     from kmcp_spark.runtime import defer_unpersist, release_deferred
 
-    release_deferred(tag="doc")
+    release_deferred()
     g = defer_unpersist(
         word_ngrams_df(docs, n)
         .select("doc_id", F.xxhash64("gram").alias("gram"))
@@ -343,7 +340,7 @@ def minhash_lsh_dup_pairs(
 
     from kmcp_spark.runtime import defer_unpersist, release_deferred
 
-    release_deferred(tag="doc")  # sweep prior doc-query caches only
+    release_deferred()  # sweep prior doc-query caches
     # ONE pass over the text: the signature kernel also emits the
     # distinct gram-hash set, and that single persisted relation feeds
     # both the banding (doc_id + minhash only — gram arrays never enter
@@ -549,7 +546,7 @@ def multi_k_dup_pairs(
 
     from kmcp_spark.runtime import defer_unpersist, release_deferred
 
-    release_deferred(tag="doc")  # sweep prior doc-query caches only
+    release_deferred()  # sweep prior doc-query caches
     msigs = defer_unpersist(
         multi_doc_signatures(docs, tuple(sorted(ks, reverse=True)), num_perm=num_perm)
         .filter(F.col("n_grams") > 0)
@@ -682,7 +679,7 @@ def repeated_spans(
 
     # house cache protocol (see _gram_tables): sweep the previous
     # document-family query's internal caches before registering ours
-    release_deferred(tag="doc")
+    release_deferred()
     words = F.split(F.col("text"), " ")
     base = docs.select("doc_id", words.alias("ws")).filter(F.size("ws") >= n)
     grams = base.select(

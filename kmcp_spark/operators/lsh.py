@@ -28,12 +28,13 @@ ESCALATES them instead — each member is linked to the
 bucket's deterministic min/max anchors (O(size) edges), so a giant
 *near*-dup class that floods every band still reconnects through
 verified anchor edges in connected components.  Oversized buckets are
-also counted into the metrics table (no silent caps).
+also counted, by an observation on the escalation branch that the same
+candidates write fills (no silent caps, no extra job).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from kmcp_spark.config import LSHConfig
 
@@ -183,8 +184,8 @@ def bucket_pairs(
 
 def candidate_pairs(
     buckets: DataFrame, max_bucket: int = 2000
-) -> tuple[DataFrame, DataFrame]:
-    """buckets -> (pairs(a, b, shared_bands), oversized_buckets): the
+) -> tuple[DataFrame, Observation]:
+    """buckets -> (pairs(a, b, shared_bands), oversized): the
     ``bucket_pairs`` expansion plus the escalation of oversized buckets.
 
     Oversized buckets are ESCALATED, not dropped (the analog of kmcp's
@@ -198,28 +199,30 @@ def candidate_pairs(
     false-positive collisions and are correctly not clustered.  Anchors
     come from the same window as the bucket sizes, so no per-bucket
     sort — the escalation stays linear even for a 10^7-member bucket.
+
+    ``oversized`` is an ``Observation``: ``n_oversized_buckets`` counts
+    the escalated buckets during the first action over ``pairs``, with
+    no cache and no extra job.  Read it only if that action produced
+    rows: with no candidates AQE replaces the executed stage by an empty
+    relation and ``Observation.get`` raises on the empty row.  A bucket
+    of two or more distinct ids emits anchor edges, so no rows means no
+    such bucket.
     """
     ann = _annotate(buckets, "clip_id")
     # escalation edges: member -> {min, max} anchor of its oversized
-    # bucket — a narrow select off the annotated rows, no join.  The
-    # oversized member rows are persisted (deferred-release protocol,
-    # runtime.py: the next candidate_pairs call or the pipeline's
-    # end-of-run sweep releases them) so that the caller's follow-up
-    # oversized count is a cache read instead of a second full band
-    # derivation (measured ~1.4 s/leg).  Bounded by actual skew: only
-    # members of >max_bucket buckets land here (none on a healthy
-    # corpus), and MEMORY_AND_DISK spills if a pathological one floods.
-    from pyspark import StorageLevel
-
-    from kmcp_spark.runtime import defer_unpersist, release_deferred
-
-    release_deferred(tag="lsh")
-    over_rel = defer_unpersist(
-        ann.where(f"bucket_size > {max_bucket}").persist(StorageLevel.MEMORY_AND_DISK),
-        tag="lsh",
+    # bucket — a narrow select off the annotated rows, no join.  A
+    # bucket's rows add 1/bucket_size up to exactly one even when an id
+    # repeats in it (streaming re-delivery), where counting anchor_lo
+    # rows counts it twice; rounding the double sum is exact up to
+    # ~10^8 over-cap rows.
+    oversized = Observation()
+    over = ann.where(f"bucket_size > {max_bucket}").observe(
+        oversized,
+        F.expr("coalesce(CAST(round(sum(1D / bucket_size)) AS BIGINT), 0)")
+        .alias("n_oversized_buckets"),
     )
     escalated = (
-        over_rel.selectExpr("clip_id", "explode(array(anchor_lo, anchor_hi)) AS anchor")
+        over.selectExpr("clip_id", "explode(array(anchor_lo, anchor_hi)) AS anchor")
         .where("clip_id != anchor")
         .selectExpr("least(clip_id, anchor) AS a", "greatest(clip_id, anchor) AS b")
     )
@@ -229,5 +232,4 @@ def candidate_pairs(
         .groupBy("a", "b")
         .agg(F.expr("count(*) AS shared_bands"))
     )
-    oversized = over_rel.select("band_id", "band_hash", "bucket_size").distinct()
     return pairs, oversized

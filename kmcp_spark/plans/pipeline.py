@@ -17,7 +17,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from kmcp_spark.config import PipelineConfig
 from kmcp_spark.operators.cluster import (
@@ -162,14 +162,11 @@ class DedupPipeline:
         sketches = self._stage("sketches", lambda: sketch_clips(rep_clips, cfg))
         verified, oversized = near_dup_pairs(sketches, clips, cfg, stage=self._stage)
         if oversized is not None:
-            # no silent caps: record exactly what was not expanded.  The
-            # count runs AFTER the candidates write on purpose: the write
-            # job materializes candidate_pairs' persisted over_rel as a
-            # side effect, so this reads the cache — counting BEFORE the
-            # write re-derived the full band window (sketches scan +
-            # window shuffle) just to learn the bucket count (~1.4 s/leg
-            # at 4 cores, measured r6)
-            n_over = oversized.count()
+            # no silent caps: record exactly what was not expanded, as
+            # counted by the candidates write (empty candidates leave an
+            # empty observation and prove no bucket was escalated)
+            cand = next(m for m in reversed(self.metrics) if m.stage == "candidates")
+            n_over = oversized.get["n_oversized_buckets"] if cand.rows_out else 0
             over_path = os.path.join(self.out_dir, "oversized_buckets.json")
             if n_over:
                 with open(over_path, "w") as f:
@@ -203,14 +200,7 @@ class DedupPipeline:
         clusters = self._stage("clusters", build_clusters)
 
         # sweep any blocks persisted during this run (e.g. the CC loop's
-        # final label snapshot — superseded by the clusters checkpoint).
-        # The untagged release_deferred() is the registry-side mirror:
-        # it drops the deferred-unpersist entries (candidate_pairs' lsh
-        # over_rel cache) so the registry holds no stale references and
-        # non-pipeline consumers see the documented end-of-run sweep.
-        from kmcp_spark.runtime import release_deferred
-
-        release_deferred()
+        # final label snapshot — superseded by the clusters checkpoint)
         unpersist_ids(
             self.spark.sparkContext,
             persistent_ids(self.spark.sparkContext) - ids_at_entry,
@@ -241,8 +231,8 @@ def near_dup_pairs(
     cfg: PipelineConfig,
     stage=lambda name, build: build(),
     index: tuple[DataFrame, DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """sketches -> (verified pairs, oversized buckets): THE near-dup chain
+) -> tuple[DataFrame, Observation | None]:
+    """sketches -> (verified pairs, oversized): THE near-dup chain
     ``band_buckets`` -> ``candidate_pairs`` -> ``score_pairs`` ->
     ``verify_pairs`` for every driver.
 
@@ -258,7 +248,10 @@ def near_dup_pairs(
     The band relation is never persisted: each consumer re-runs the
     narrow slice + xxhash64 map over the column-pruned sketches scan (a
     cached 32x-exploded band relation cannot fit memory at scale).
-    ``oversized`` is None when ``stage`` resumed the candidates."""
+    ``oversized`` is ``candidate_pairs``' observation of the escalated
+    bucket count, filled by the first action over the candidates (with
+    ``DedupPipeline`` the checkpoint write; read it only if that wrote
+    rows); None when ``stage`` resumed the candidates."""
     bands = band_buckets(sketches, cfg.lsh)
     sk_all = sketches
     if index is not None:

@@ -81,7 +81,7 @@ def unpersist_ids(sc, ids: set[int]) -> None:
 # every query's.  Unpersisting a .persist() cache is always safe: a
 # consumer that runs afterwards simply recomputes.
 
-_DEFERRED: list = []  # (tag, df) pairs
+_DEFERRED: list = []
 
 
 def widen_narrow_scan(df):
@@ -103,29 +103,21 @@ def widen_narrow_scan(df):
     return df
 
 
-def defer_unpersist(df, tag: str = "doc"):
+def defer_unpersist(df):
     """Register an operator-internal cached DataFrame for deferred
     release; returns ``df`` for chaining.  Only .persist() caches may be
     registered — never localCheckpoints (whose blocks are required for
-    correctness once lineage is truncated).  ``tag`` namespaces the
-    registry so unrelated operator families (document dedup vs the LSH
-    pair stage) sweep only their own caches."""
-    _DEFERRED.append((tag, df))
+    correctness once lineage is truncated)."""
+    _DEFERRED.append(df)
     return df
 
 
-def release_deferred(tag: str | None = None) -> int:
-    """Unpersist registered internal caches — all of them, or only those
-    registered under ``tag``; returns how many were released."""
+def release_deferred() -> None:
+    """Unpersist every registered internal cache."""
     global _DEFERRED
-    if tag is None:
-        pending, _DEFERRED = _DEFERRED, []
-    else:
-        pending = [e for e in _DEFERRED if e[0] == tag]
-        _DEFERRED = [e for e in _DEFERRED if e[0] != tag]
-    for _, df in pending:
+    pending, _DEFERRED = _DEFERRED, []
+    for df in pending:
         try:
             df.unpersist(False)
         except Exception:
             pass  # session already stopped
-    return len(pending)

@@ -249,11 +249,5 @@ def streaming_neardup_flags(
     if available_now:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        # drain complete: release the final batch's candidate_pairs lsh
-        # cache (each batch's call releases its predecessor's; the last
-        # one has no successor to do so)
-        from kmcp_spark.runtime import release_deferred
-
-        release_deferred(tag="lsh")
         return q
     return writer.trigger(processingTime="10 seconds").start()

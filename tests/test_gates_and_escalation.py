@@ -53,6 +53,21 @@ def test_min_dur_gate_excludes_short_clips(spark, tmp_out):
     assert "clip_0000000001" in ids2
 
 
+def test_pass_without_candidates_records_no_oversized_buckets(spark, tmp_out):
+    """A pass whose candidates are empty (AQE then drops the stage that
+    fills the oversized-bucket observation) completes and leaves no
+    oversized-bucket record."""
+    from kmcp_spark.corpus import make_rows
+    from kmcp_spark.plans.pipeline import DedupPipeline
+
+    # clip 1 is clip 0's only near-dup among these ids
+    pdf = make_rows(np.delete(np.arange(20), 1), min_dur_s=0.5, max_dur_s=1.0)
+    clips = spark.createDataFrame(pdf.drop(columns=["cluster_id", "transform"]))
+    res = DedupPipeline(spark, PipelineConfig(), tmp_out).run(clips)
+    assert {m.stage: m.rows_out for m in res.metrics}["candidates"] == 0
+    assert not os.path.exists(os.path.join(tmp_out, "oversized_buckets.json"))
+
+
 # ------------------------------------------------- oversized-bucket rescue
 
 def _connected(pairs, nodes):
@@ -72,16 +87,18 @@ def _connected(pairs, nodes):
 def test_oversized_bucket_escalation_links_members(spark):
     """A bucket over max_bucket must emit anchor edges that keep its
     members in one connected component (kmcp escalates oversized blocks
-    256->8->1 instead of dropping them, `kmcp/cmd/index.go:787-894`)."""
+    256->8->1 instead of dropping them, `kmcp/cmd/index.go:787-894`).
+    It counts as ONE oversized bucket although its min anchor arrives
+    twice (a streaming re-delivery): every bucket counts once."""
     members = [f"c{i:02d}" for i in range(12)]
     buckets = spark.createDataFrame(
-        [(m, 0, 12345) for m in members]
+        [(m, 0, 12345) for m in members + ["c00"]]
         + [("x1", 1, 777), ("x2", 1, 777)],
         "clip_id string, band_id int, band_hash bigint",
     )
     pairs, oversized = candidate_pairs(buckets, max_bucket=10)
     got = [(r.a, r.b) for r in pairs.collect()]
-    assert oversized.count() == 1
+    assert oversized.get["n_oversized_buckets"] == 1
     # the small bucket still pair-expands fully
     assert ("x1", "x2") in got
     # escalated bucket: members form one connected component via anchors
